@@ -614,8 +614,14 @@ def release_corpus(
                 w = (F.when(cond, parts) if w is None
                      else w.when(cond, parts))
             w = F.lit(1) if w is None else w.otherwise(1)
-            total = int(final.agg(
-                F.coalesce(F.sum("n_tok"), F.lit(0))).head()[0])
+            # the solver only reads each source's token SUM, so it runs
+            # on the collected strata-sized capacity table: the same
+            # plan, without the solver's triangle self-joins each
+            # re-planning the whole curated/selected/scrubbed lineage
+            caps_q = final.groupBy("source").agg(
+                F.sum(F.col("n_tok").cast("long")).alias("n_tok"))
+            cap_rows = caps_q.collect()  # strata-sized
+            total = sum(int(r["n_tok"] or 0) for r in cap_rows)
             budget = int(total * recipe_budget_frac)
             # solve ONCE: the collected strata-sized plan feeds both
             # the manifest AND the expansion as a literal frame, and
@@ -624,8 +630,8 @@ def release_corpus(
             # downstream action (shards, manifest stats, drift gate,
             # diff, bpe rollup — review catch)
             plan_df = sampling.epoch_plan(
-                final, "source", w, budget, max_epochs=recipe_epochs,
-                tokens_col="n_tok")
+                spark.createDataFrame(cap_rows, caps_q.schema), "source",
+                w, budget, max_epochs=recipe_epochs, tokens_col="n_tok")
             plan_rows = plan_df.collect()  # strata-sized
             expanded = sampling.epoch_expand(
                 final, "source", "doc_id", w, budget,
@@ -672,6 +678,14 @@ def release_corpus(
                 "rates": {str(r["source"]): int(r["rate_pct"])
                           for r in rate_rows},
             }
+        if final is not curated:
+            # every optional stage joins FINAL with a frame derived from
+            # FINAL, so its plan grows with each stage, and re-analysing
+            # that tree (and matching it against the cached stages) for
+            # each gate, shard write and manifest rollup of the body
+            # cost more than running them.  The checkpoint keeps one
+            # materialized copy behind a one-node plan.
+            final = final.localCheckpoint()
         return _release_body(spark, final, output_path, baseline_path,
                              min_quality, langs, n_shards, allow_drift,
                              mix_info, scrub_info, bpe_manifest,

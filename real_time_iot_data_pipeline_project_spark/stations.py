@@ -54,12 +54,23 @@ _WIND_SCHEMA = T.StructType(
 )
 
 
+def _literal_dim(spark: SparkSession, rows: list[tuple], schema: T.StructType) -> DataFrame:
+    """The rows as a literal table: no Python RDD, so no Python worker
+    is started to scan it. Non-null literals keep the schema's
+    nullability."""
+    structs = [
+        F.struct(*[F.lit(v).cast(f.dataType).alias(f.name) for v, f in zip(row, schema.fields)])
+        for row in rows
+    ]
+    return spark.range(0, 1, 1, 1).select(F.inline(F.array(*structs)))
+
+
 def solar_station_dim(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(SOLAR_STATIONS, _SOLAR_SCHEMA)
+    return _literal_dim(spark, SOLAR_STATIONS, _SOLAR_SCHEMA)
 
 
 def wind_station_dim(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(WIND_STATIONS, _WIND_SCHEMA)
+    return _literal_dim(spark, WIND_STATIONS, _WIND_SCHEMA)
 
 
 def solar_capacity_map_col() -> F.Column:

@@ -2,30 +2,27 @@
 S14/J4 (reference loads its DWH in batch; this feeds the same star from
 ``foreachBatch``, exactly-once).
 
+Keys are the batch build's own (``warehouse.star``): every key is
+computed from the row it describes, so an incremental build assigns the
+SAME keys as a batch rebuild over the union, whatever the batch order,
+and a fact batch is written without reading any dim back.
+
 Idempotency by construction (a micro-batch may replay after failure):
 
-- dim appends are anti-joined against what is already on disk, so a
-  replayed batch adds nothing new;
+- dim appends are anti-joined against what is already on disk by key,
+  so a replayed batch adds nothing new;
+- the weather dim's anti-join is a left join that also compares the
+  tuple: a ``weather_key`` already on disk with a different tuple (a
+  hash collision across batches) raises in that same join instead of
+  being dropped as "already present";
 - each fact batch overwrites its OWN ``batch_id=N`` directory, so a
   replay converges to the same bytes instead of duplicating rows.
-
-Key discipline (matches warehouse.star):
-
-- Dim_DateTime keys are derived from the timestamp (``unix_micros``) —
-  deterministic, so incremental and batch builds assign IDENTICAL keys;
-- weather dims keep IDENTITY-style dense keys: new tuples this batch get
-  ``max(existing) + row_number`` (the 1-row max() read is a control-flow
-  parameter, not data collection). Key VALUES therefore depend on batch
-  arrival order — equality with a batch rebuild holds on the
-  denormalized join product (see ``denormalize``), which is the
-  warehouse's semantic content;
-- facts are globally keyed by (batch_id, fact_id): ``batch_id`` is the
+  Facts are globally keyed by (batch_id, fact_id): ``batch_id`` is the
   partition directory, ``fact_id`` is partition-local.
 
-Scale: per-batch cost is bounded by the micro-batch plus one anti-join
-against each dim (datetime shuffles at dim grain; weather dims are
-tuple-distinct tiny). Facts never rewrite history — one directory per
-batch, no compaction of old batches on the write path.
+Scale: per-batch cost is bounded by the micro-batch plus one join
+against each dim on its key. Facts never rewrite history — one directory
+per batch, no compaction of old batches on the write path.
 """
 
 from __future__ import annotations
@@ -44,27 +41,38 @@ def _read_or_none(spark: SparkSession, path: str) -> DataFrame | None:
         return None
 
 
-def _domain_spec(domain: str) -> tuple[list[str], list[str], str, str, str]:
+def _domain_spec(domain: str) -> tuple[list[str], list[str], list[str], str, str, str]:
     if domain == "solar":
-        return (star.SOLAR_WEATHER_COLS, star.SOLAR_MEASURES,
+        return (star.SOLAR_WEATHER_COLS, star.SOLAR_MEASURES, star.SOLAR_STATION_IDS,
                 "Dim_SolarStation", "Dim_WeatherSolar", "Fact_Solar")
-    return (star.WIND_WEATHER_COLS, star.WIND_MEASURES,
+    return (star.WIND_WEATHER_COLS, star.WIND_MEASURES, star.WIND_STATION_IDS,
             "Dim_WindStation", "Dim_WeatherWind", "Fact_Wind")
+
+
+def _keys_not_on_disk(batch: DataFrame, on_disk: DataFrame, key: str, cols: list[str]) -> DataFrame:
+    """Rows of ``batch`` whose ``key`` is not in ``on_disk`` (an anti-join
+    on the key); raises if a key on disk carries a different tuple."""
+    disk = on_disk.select(key, F.struct(*cols).alias("_disk"))
+    new = F.when(F.col("_disk").isNull(), True).when(
+        F.struct(*cols).eqNullSafe(F.col("_disk")), False
+    ).otherwise(
+        F.raise_error(F.format_string(f"{key} %s is on disk with another tuple of {cols}", F.col(key)))
+    )
+    return batch.join(disk, key, "left").filter(new).select(*batch.columns)
 
 
 def upsert_star_batch(spark: SparkSession, processed: DataFrame,
                       station_dim: DataFrame, base_path: str,
                       domain: str, batch_id: int) -> None:
     """Apply one processed micro-batch to the star at ``base_path``."""
-    weather_cols, measures, st_name, wx_name, fact_name = _domain_spec(domain)
+    weather_cols, measures, station_ids, st_name, wx_name, fact_name = _domain_spec(domain)
 
     # station dim: static registry dimension — write once
     st_path = f"{base_path}/{st_name}"
     if _read_or_none(spark, st_path) is None:
-        star.build_station_dim(station_dim).write.mode("overwrite").parquet(st_path)
+        star.build_station_dim(station_dim, station_ids).write.mode("overwrite").parquet(st_path)
 
-    # datetime dim: append only timestamps not yet present (keys are
-    # timestamp-derived, so the anti-join key is exact)
+    # datetime dim: append only timestamps not yet present
     dt_path = f"{base_path}/Dim_DateTime"
     dt_batch = star.build_datetime_dim(processed)
     dt_existing = _read_or_none(spark, dt_path)
@@ -74,28 +82,17 @@ def upsert_star_batch(spark: SparkSession, processed: DataFrame,
         )
     dt_batch.write.mode("append").parquet(dt_path)
 
-    # weather dim: new distinct tuples continue the dense key sequence
+    # weather dim: append only tuples whose hash key is not yet present
     wx_path = f"{base_path}/{wx_name}"
-    tuples = processed.select(*weather_cols).dropDuplicates(weather_cols)
+    wx_batch = star.build_weather_dim(processed, weather_cols)
     wx_existing = _read_or_none(spark, wx_path)
-    if wx_existing is None:
-        new_tuples, base_key = tuples, 0
-    else:
-        new_tuples = tuples.join(
-            wx_existing.select(*weather_cols), weather_cols, "left_anti"
-        )
-        base_key = wx_existing.agg(F.max("weather_key")).head()[0] or 0
-    keyed = star._surrogate(new_tuples, "weather_key", weather_cols).withColumn(
-        "weather_key", (F.col("weather_key") + F.lit(base_key)).cast("int")
-    )
-    keyed.write.mode("append").parquet(wx_path)
+    if wx_existing is not None:
+        wx_batch = _keys_not_on_disk(wx_batch, wx_existing, "weather_key", weather_cols)
+    wx_batch.write.mode("append").parquet(wx_path)
 
-    # fact: resolve surrogate keys against the NOW-CURRENT dims; the
-    # batch owns its directory, so replays overwrite instead of append
-    dt = spark.read.parquet(dt_path)
-    st = spark.read.parquet(st_path)
-    wx = spark.read.parquet(wx_path)
-    fact = star.build_fact(processed, dt, st, wx, weather_cols, measures)
+    # fact: keys come from the rows themselves; the batch owns its
+    # directory, so replays overwrite instead of append
+    fact = star.build_fact(processed, station_ids, weather_cols, measures)
     fact.write.mode("overwrite").parquet(f"{base_path}/{fact_name}/batch_id={batch_id}")
 
 
@@ -114,7 +111,7 @@ def star_upsert_fn(spark: SparkSession, station_dim: DataFrame,
 def read_star(spark: SparkSession, base_path: str, domain: str) -> dict[str, DataFrame]:
     """Load the incrementally-built star (fact's batch_id partition
     column is part of its global key and stays visible)."""
-    _, _, st_name, wx_name, fact_name = _domain_spec(domain)
+    _, _, _, st_name, wx_name, fact_name = _domain_spec(domain)
     return {
         "Dim_DateTime": spark.read.parquet(f"{base_path}/Dim_DateTime"),
         st_name: spark.read.parquet(f"{base_path}/{st_name}"),
@@ -126,9 +123,8 @@ def read_star(spark: SparkSession, base_path: str, domain: str) -> dict[str, Dat
 def denormalize(tables: dict[str, DataFrame], domain: str) -> DataFrame:
     """Join the fact back through its dims to natural keys + measures —
     the surrogate-key-free content of the warehouse, used to prove an
-    incremental build equals the batch rebuild regardless of weather-key
-    arrival order."""
-    weather_cols, measures, st_name, wx_name, fact_name = _domain_spec(domain)
+    incremental build equals the batch rebuild."""
+    weather_cols, measures, _, st_name, wx_name, fact_name = _domain_spec(domain)
     fact = tables[fact_name]
     out = (
         fact.join(tables["Dim_DateTime"].select("datetime_key", "timestamp"), "datetime_key")

@@ -1,32 +1,75 @@
 """Star-schema DWH build — the T-SQL DDL in ``DWH/SQL queries.docx``
 (Dim_DateTime, Dim_SolarStation, Dim_WindStation, Dim_WeatherSolar,
-Dim_WeatherWind, Fact_Solar, Fact_Wind) re-expressed as DataFrame ETL:
+Dim_WeatherWind, Fact_Solar, Fact_Wind) re-expressed as DataFrame ETL.
 
-- dims = distinct attribute tuples + ``row_number()`` surrogate keys
-  (the DDL's IDENTITY columns);
-- facts = processed rows joined back to dims on natural keys to resolve
-  surrogate keys — FK integrity holds by construction.
+Every surrogate key is computed from the row it describes, so the fact
+is one narrow projection of the processed rows — no join, no window, no
+exchange — and a dim and its fact agree on a key without ever meeting:
 
-Scale notes: surrogate keys via ``row_number`` over a global window are
-a single-partition bottleneck, so they are reserved for the genuinely
-tiny dims (stations, distinct weather tuples). Dim_DateTime is NOT tiny
-— one row per distinct timestamp is hundreds of millions of rows at
-100 TB — so its key is derived deterministically from the timestamp
-itself (``unix_micros``: unique at timestamp grain, embarrassingly
-parallel, and stable across rebuilds, which row_number is not). Facts
-keep their natural grain and get ``monotonically_increasing_id``
-(partition-local, no coordination) for the fact_id.
+- ``datetime_key`` = ``unix_micros(timestamp)``: unique at timestamp
+  grain and stable across rebuilds;
+- ``station_key`` = dense 1..n in ``station_id`` order of the static
+  registry (``stations.py``), applied as the same literal ``create_map``
+  in the dim and the fact. A ``station_id`` outside the registry raises
+  instead of losing its fact rows;
+- ``weather_key`` = ``xxhash64`` of the weather tuple. Weather dims are
+  degenerate (about one distinct tuple per fact row), so a dense
+  ``row_number`` key would cost a global single-partition window plus a
+  fact join on 4–7 double columns. A 64-bit hash can collide, so the dim
+  build checks that each key carries one tuple inside the aggregate that
+  already collapses the tuples (``unique_key_rows``): the check costs no
+  extra pass, and a collision fails the write instead of merging two
+  tuples silently.
+
+``fact_id`` is ``monotonically_increasing_id`` (partition-local, no
+coordination).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .. import stations
 
-def _surrogate(df: DataFrame, key_name: str, order_cols: list[str]) -> DataFrame:
-    w = Window.partitionBy().orderBy(*[F.col(c).asc_nulls_last() for c in order_cols])
-    return df.withColumn(key_name, F.row_number().over(w))
+SOLAR_STATION_IDS = [s[0] for s in stations.SOLAR_STATIONS]
+WIND_STATION_IDS = [s[0] for s in stations.WIND_STATIONS]
+
+
+def datetime_key() -> Column:
+    return F.unix_micros(F.col("timestamp"))
+
+
+def station_key(station_ids: list[str]) -> Column:
+    """Dense key from 1 in ``station_id`` order, as a literal map (the
+    ``solar_capacity_map_col`` idiom); an unknown id raises."""
+    pairs: list[Column] = []
+    for key, sid in enumerate(sorted(station_ids), 1):
+        pairs.extend([F.lit(sid), F.lit(key)])
+    sid = F.col("station_id")
+    return F.coalesce(
+        F.create_map(*pairs)[sid],
+        F.raise_error(F.format_string("station_id %s is not in the station registry", sid)),
+    )
+
+
+def weather_key(weather_cols: list[str]) -> Column:
+    return F.xxhash64(*weather_cols)
+
+
+def unique_key_rows(rows: DataFrame, key: str, cols: list[str]) -> DataFrame:
+    """One row per ``key`` with its ``cols``. Raises, in the same job, if a
+    key carries two different tuples: the smallest and largest tuple of
+    each key must be equal. Tuples compare as Spark orders them: -0.0 =
+    0.0, NaN = NaN, null equals only null."""
+    tup = F.struct(*cols)
+    checked = F.when(F.col("_lo").eqNullSafe(F.col("_hi")), F.col(key)).otherwise(
+        F.raise_error(F.format_string(f"{key} %s carries more than one tuple of {cols}", F.col(key)))
+    )
+    return (
+        rows.groupBy(key).agg(F.min(tup).alias("_lo"), F.max(tup).alias("_hi"))
+        .select("_lo.*", checked.alias(key))
+    )
 
 
 def build_datetime_dim(processed: DataFrame, ts_col: str = "timestamp") -> DataFrame:
@@ -47,38 +90,29 @@ def build_datetime_dim(processed: DataFrame, ts_col: str = "timestamp") -> DataF
             F.when((F.hour("local_timestamp") >= 6) & (F.hour("local_timestamp") < 18), "Day").otherwise("Night"),
         )
     )
-    # Deterministic key from the timestamp itself — no global window, no
-    # single-partition Exchange, stable across incremental rebuilds.
-    return base.withColumn("datetime_key", F.unix_micros(F.col("timestamp")))
+    return base.withColumn("datetime_key", datetime_key())
 
 
-def build_station_dim(station_df: DataFrame) -> DataFrame:
+def build_station_dim(station_df: DataFrame, station_ids: list[str]) -> DataFrame:
     """Dim_SolarStation / Dim_WindStation from the registry dimension."""
-    return _surrogate(station_df, "station_key", ["station_id"])
+    return station_df.withColumn("station_key", station_key(station_ids))
 
 
 def build_weather_dim(processed: DataFrame, weather_cols: list[str]) -> DataFrame:
     """Dim_WeatherSolar / Dim_WeatherWind: distinct weather tuples."""
-    base = processed.select(*weather_cols).dropDuplicates(weather_cols)
-    return _surrogate(base, "weather_key", weather_cols)
+    keyed = processed.select(*weather_cols, weather_key(weather_cols).alias("weather_key"))
+    return unique_key_rows(keyed, "weather_key", weather_cols)
 
 
-def build_fact(processed: DataFrame, datetime_dim: DataFrame,
-               station_dim: DataFrame, weather_dim: DataFrame,
+def build_fact(processed: DataFrame, station_ids: list[str],
                weather_cols: list[str], measure_cols: list[str]) -> DataFrame:
-    """Fact_Solar / Fact_Wind: resolve natural keys → surrogate keys via
-    joins (station broadcast; weather/datetime shuffle on their grain),
-    keep measures."""
-    f = processed.join(
-        datetime_dim.select("timestamp", "datetime_key"), "timestamp"
-    )
-    f = f.join(
-        F.broadcast(station_dim.select("station_id", "station_key")), "station_id"
-    )
-    f = f.join(weather_dim.select(*weather_cols, "weather_key"), weather_cols)
-    return f.select(
+    """Fact_Solar / Fact_Wind: the processed rows' keys and measures."""
+    return processed.select(
         F.monotonically_increasing_id().alias("fact_id"),
-        "station_key", "datetime_key", "weather_key", *measure_cols,
+        station_key(station_ids).alias("station_key"),
+        datetime_key().alias("datetime_key"),
+        weather_key(weather_cols).alias("weather_key"),
+        *measure_cols,
     )
 
 
@@ -95,19 +129,21 @@ WIND_MEASURES = ["turbine_power_kW", "farm_power_kW", "farm_energy_MWh_10min", "
 
 
 def build_solar_star(processed: DataFrame, station_dim: DataFrame) -> dict[str, DataFrame]:
-    dt = build_datetime_dim(processed)
-    st = build_station_dim(station_dim)
-    wx = build_weather_dim(processed, SOLAR_WEATHER_COLS)
-    fact = build_fact(processed, dt, st, wx, SOLAR_WEATHER_COLS, SOLAR_MEASURES)
-    return {"Dim_DateTime": dt, "Dim_SolarStation": st, "Dim_WeatherSolar": wx, "Fact_Solar": fact}
+    return {
+        "Dim_DateTime": build_datetime_dim(processed),
+        "Dim_SolarStation": build_station_dim(station_dim, SOLAR_STATION_IDS),
+        "Dim_WeatherSolar": build_weather_dim(processed, SOLAR_WEATHER_COLS),
+        "Fact_Solar": build_fact(processed, SOLAR_STATION_IDS, SOLAR_WEATHER_COLS, SOLAR_MEASURES),
+    }
 
 
 def build_wind_star(processed: DataFrame, station_dim: DataFrame) -> dict[str, DataFrame]:
-    dt = build_datetime_dim(processed)
-    st = build_station_dim(station_dim)
-    wx = build_weather_dim(processed, WIND_WEATHER_COLS)
-    fact = build_fact(processed, dt, st, wx, WIND_WEATHER_COLS, WIND_MEASURES)
-    return {"Dim_DateTime": dt, "Dim_WindStation": st, "Dim_WeatherWind": wx, "Fact_Wind": fact}
+    return {
+        "Dim_DateTime": build_datetime_dim(processed),
+        "Dim_WindStation": build_station_dim(station_dim, WIND_STATION_IDS),
+        "Dim_WeatherWind": build_weather_dim(processed, WIND_WEATHER_COLS),
+        "Fact_Wind": build_fact(processed, WIND_STATION_IDS, WIND_WEATHER_COLS, WIND_MEASURES),
+    }
 
 
 def save_star(tables: dict[str, DataFrame], base_path: str) -> None:

@@ -115,7 +115,7 @@ def test_star_schema_build(spark):
     assert dt.select("timestamp", "datetime_key").exceptAll(
         dt2.select("timestamp", "datetime_key")
     ).count() == 0
-    # station dims stay row_number'd: dense from 1
+    # station keys come from the registry: dense from 1
     st = tables["Dim_WindStation"]
     assert st.agg(F.min("station_key")).head()[0] == 1
     assert st.agg(F.max("station_key")).head()[0] == st.count()

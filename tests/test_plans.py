@@ -113,6 +113,25 @@ def test_datetime_dim_no_single_partition_exchange(spark):
     assert "Window" not in plan
 
 
+def test_star_fact_is_narrow_and_weather_dim_has_no_global_window(spark):
+    """Row-derived keys: the fact is one projection of the processed rows
+    (no join back to its dims, no shuffle), and the weather dim's hash key
+    needs no global window."""
+    from real_time_iot_data_pipeline_project_spark.operators import features
+    from real_time_iot_data_pipeline_project_spark.sources.generator import generate_wind_raw
+    from real_time_iot_data_pipeline_project_spark.stations import wind_station_dim
+    from real_time_iot_data_pipeline_project_spark.warehouse import star
+
+    processed = features.process_wind(generate_wind_raw(spark, n_rows=200)).localCheckpoint()
+    tables = star.build_wind_star(processed, wind_station_dim(spark))
+    fact = tables["Fact_Wind"]._jdf.queryExecution().executedPlan().toString()
+    for node in ("Join", "Exchange", "Window"):
+        assert node not in fact, node
+    wx = tables["Dim_WeatherWind"]._jdf.queryExecution().executedPlan().toString()
+    assert "SinglePartition" not in wx
+    assert "Window" not in wx
+
+
 def test_daytime_dim_join_is_broadcast(spark):
     plan = plan_of(spark, "q44_daytime_flag")
     assert "BroadcastHashJoin" in plan

@@ -5,6 +5,7 @@ and a replayed batch (exactly-once) must change nothing."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from real_time_iot_data_pipeline_project_spark.operators import features
@@ -74,6 +75,9 @@ def test_incremental_star_equals_batch_rebuild(spark, tmp_path):
     assert _rows(incremental.denormalize(inc, "wind")) == _rows(
         incremental.denormalize(batch_tables, "wind")
     )
+    # keys are taken from the rows, so they match the batch build key for key
+    keys = ["station_key", "datetime_key", "weather_key"]
+    assert _rows(fact.select(*keys)) == _rows(batch_tables["Fact_Wind"].select(*keys))
 
     # exactly-once: replaying an already-applied batch is a no-op on the
     # dims and overwrites (not duplicates) its own fact directory
@@ -87,3 +91,26 @@ def test_incremental_star_equals_batch_rebuild(spark, tmp_path):
     assert _rows(incremental.denormalize(inc2, "wind")) == _rows(
         incremental.denormalize(batch_tables, "wind")
     )
+
+
+def test_incremental_weather_key_on_disk_with_other_tuple_raises(spark, tmp_path):
+    processed = features.process_wind(
+        generate_wind_raw(spark, n_rows=60), deterministic_dedup=True
+    ).localCheckpoint()
+    stations = wind_station_dim(spark)
+    base = str(tmp_path / "star")
+    incremental.upsert_star_batch(spark, processed, stations, base, "wind", batch_id=0)
+
+    # tamper one tuple on disk under its key: a replay must raise, not skip it
+    wx_path = f"{base}/Dim_WeatherWind"
+    wx = spark.read.parquet(wx_path).localCheckpoint()
+    victim = wx.select("weather_key").head()[0]
+    tampered = wx.withColumn(
+        "wind_speed_mps",
+        F.when(F.col("weather_key") == victim, F.col("wind_speed_mps") + 1.0)
+        .otherwise(F.col("wind_speed_mps")),
+    )
+    tampered.write.mode("overwrite").parquet(str(tmp_path / "wx_tampered"))
+    spark.read.parquet(str(tmp_path / "wx_tampered")).write.mode("overwrite").parquet(wx_path)
+    with pytest.raises(Exception, match="is on disk with another tuple"):
+        incremental.upsert_star_batch(spark, processed, stations, base, "wind", batch_id=1)
