@@ -31,12 +31,9 @@ def normalize_timestamp(ts: ColumnOrName) -> Column:
     """
     cleaned = F.trim(F.regexp_replace(_c(ts).cast("string"), "UTC", ""))
     # try_to_timestamp: ANSI-safe coerce-to-null (Spark 4 default ANSI
-    # mode makes plain to_timestamp THROW on malformed input). 'T'
-    # separator parses via the fallback replace.
-    return F.coalesce(
-        F.try_to_timestamp(cleaned),
-        F.try_to_timestamp(F.regexp_replace(cleaned, "T", " ")),
-    )
+    # mode makes plain to_timestamp THROW on malformed input). It parses
+    # the 'T' separator itself (every known shape: tests/test_cleaning.py).
+    return F.try_to_timestamp(cleaned)
 
 
 def to_local(ts: ColumnOrName, tz: str = LOCAL_TZ) -> Column:

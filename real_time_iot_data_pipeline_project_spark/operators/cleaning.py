@@ -1,7 +1,9 @@
 """Validate → clean → dedup pipeline (SURVEY.md §2.2/§2.3; entry point A
 ``Solar_Processing.py:15-43`` / ``Wind_Processing.py:15-43`` and the
 reference's own Spark notebook, docx §solar:validation_spark /
-§wind:clean_df).
+§wind:clean_df). One chain for every domain: the rules it applies
+(required columns, bounds, fill defaults) are read from the domain
+record, ``schemas.DOMAINS``.
 
 Stage order is preserved from the reference (filter → fillna → dedup):
 the range filter only touches columns that are never null-filled, so the
@@ -19,6 +21,8 @@ Scale notes:
 """
 
 from __future__ import annotations
+
+from functools import partial
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -96,29 +100,28 @@ def drop_null_timestamps(df: DataFrame, ts_col: str = "timestamp") -> DataFrame:
     return df.filter(F.col(ts_col).isNotNull())
 
 
-def clean_solar(df: DataFrame, *, deterministic_dedup: bool = False) -> DataFrame:
-    """Full solar validate→clean→dedup (Solar_Processing.py:15-43 with the
-    Spark-notebook canonical bounds)."""
-    df = require_columns(df, schemas.SOLAR_REQUIRED_COLUMNS)
-    if deterministic_dedup:
-        df = df.withColumn("__ingest_order", F.monotonically_increasing_id())
-    df = parse_timestamps(df)
+def validate(df: DataFrame, domain: str) -> DataFrame:
+    """The domain's validate chain, shared by batch and stream:
+    require columns → parse timestamps → drop unparseable ones → range
+    filter → null-fill. Dedup is left to the caller: batch and stream
+    dedup differently."""
+    d = schemas.DOMAINS[domain]
+    df = parse_timestamps(require_columns(df, d.required_columns))
     df = drop_null_timestamps(df)
-    df = apply_range_filter(df, schemas.SOLAR_RANGE_BOUNDS)
-    df = fill_defaults(df, schemas.SOLAR_FILL_DEFAULTS)
-    df = deduplicate(df, order_col="__ingest_order" if deterministic_dedup else None)
-    return df.drop("__ingest_order") if deterministic_dedup else df
+    df = apply_range_filter(df, d.range_bounds)
+    return fill_defaults(df, d.fill_defaults)
 
 
-def clean_wind(df: DataFrame, *, deterministic_dedup: bool = False) -> DataFrame:
-    """Full wind validate→clean→dedup (Wind_Processing.py:15-43 /
-    docx §wind:clean_df)."""
-    df = require_columns(df, schemas.WIND_REQUIRED_COLUMNS)
-    if deterministic_dedup:
-        df = df.withColumn("__ingest_order", F.monotonically_increasing_id())
-    df = parse_timestamps(df)
-    df = drop_null_timestamps(df)
-    df = apply_range_filter(df, schemas.WIND_RANGE_BOUNDS)
-    df = fill_defaults(df, schemas.WIND_FILL_DEFAULTS)
-    df = deduplicate(df, order_col="__ingest_order" if deterministic_dedup else None)
-    return df.drop("__ingest_order") if deterministic_dedup else df
+def clean(df: DataFrame, domain: str, *, deterministic_dedup: bool = False) -> DataFrame:
+    """Full batch validate→clean→dedup (Solar_Processing.py:15-43,
+    Wind_Processing.py:15-43 with the Spark-notebook canonical bounds).
+    ``deterministic_dedup`` keeps the first row of each key in input
+    order, as pandas ``drop_duplicates`` does."""
+    if not deterministic_dedup:
+        return deduplicate(validate(df, domain))
+    tagged = df.withColumn("__ingest_order", F.monotonically_increasing_id())
+    return deduplicate(validate(tagged, domain), order_col="__ingest_order").drop("__ingest_order")
+
+
+clean_solar = partial(clean, domain="solar")
+clean_wind = partial(clean, domain="wind")

@@ -1,6 +1,7 @@
 """Feature engineering (entry point A stage 4: ``Solar_Processing.py:42-57``,
 ``Wind_Processing.py:46-65``, docx §solar:create_col_spark /
-§wind derived columns).
+§wind derived columns). One path for every domain; the derived column
+and the validity columns are read from ``schemas.DOMAINS``.
 
 All derivations are narrow ``withColumn`` projections — zero shuffles,
 fully codegen'd.
@@ -8,11 +9,14 @@ fully codegen'd.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions import physics, timeutils
-from ..stations import solar_capacity_map_col
+from .. import schemas
+from ..functions import timeutils
+from . import cleaning
 
 
 def add_time_features(df: DataFrame, ts_col: str = "timestamp") -> DataFrame:
@@ -34,38 +38,22 @@ def add_validity_flag(df: DataFrame, check_cols: list[str]) -> DataFrame:
     return df.withColumn("is_valid", pred)
 
 
-def featurize_solar(df: DataFrame) -> DataFrame:
-    """Solar derived columns: time features, capacity_utilization_%
-    (docx §solar:create_col_spark via create_map — F22/J1), is_valid."""
-    df = add_time_features(df)
-    df = df.withColumn(
-        "capacity_utilization_pct",
-        physics.capacity_utilization_pct(
-            "power_kW", solar_capacity_map_col()[F.col("station_id")]
-        ),
-    )
-    return add_validity_flag(df, ["solar_irradiance_Wm2", "power_kW", "temperature_C"])
+def featurize(df: DataFrame, domain: str) -> DataFrame:
+    """The domain's derived columns: time features, its physics column
+    (solar ``capacity_utilization_pct`` via create_map, docx
+    §solar:create_col_spark — F22/J1; wind ``wind_power_density``, F19,
+    Wind_Processing.py:46-65) and ``is_valid``."""
+    d = schemas.DOMAINS[domain]
+    df = add_time_features(df).withColumn(d.derived_column, d.derive())
+    return add_validity_flag(df, d.validity_columns)
 
 
-def featurize_wind(df: DataFrame) -> DataFrame:
-    """Wind derived columns: time features, wind_power_density (F19),
-    is_valid (Wind_Processing.py:46-65)."""
-    df = add_time_features(df)
-    df = df.withColumn(
-        "wind_power_density",
-        physics.wind_power_density("air_density_kgm3", "wind_speed_mps"),
-    )
-    return add_validity_flag(df, ["wind_speed_mps", "farm_power_kW", "air_temperature_C"])
-
-
-def process_solar(df: DataFrame, *, deterministic_dedup: bool = False) -> DataFrame:
+def process(df: DataFrame, domain: str, *, deterministic_dedup: bool = False) -> DataFrame:
     """Raw → processed, the complete entry-point-A pipeline."""
-    from . import cleaning
-
-    return featurize_solar(cleaning.clean_solar(df, deterministic_dedup=deterministic_dedup))
+    return featurize(cleaning.clean(df, domain, deterministic_dedup=deterministic_dedup), domain)
 
 
-def process_wind(df: DataFrame, *, deterministic_dedup: bool = False) -> DataFrame:
-    from . import cleaning
-
-    return featurize_wind(cleaning.clean_wind(df, deterministic_dedup=deterministic_dedup))
+featurize_solar = partial(featurize, domain="solar")
+featurize_wind = partial(featurize, domain="wind")
+process_solar = partial(process, domain="solar")
+process_wind = partial(process, domain="wind")

@@ -18,6 +18,8 @@ import argparse
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import schemas
+from .functions import physics
 from .operators import analytics, features
 from .sources import io as sio
 
@@ -33,17 +35,12 @@ def consume_and_process(
 ) -> DataFrame:
     """Entry point A. ``max_messages`` bounds the read (the reference's
     bounded Kafka poll, L3); sinks CSV or parquet."""
-    if domain == "solar":
-        raw = sio.read_solar_log(spark, input_path)
-        process = features.process_solar
-    elif domain == "wind":
-        raw = sio.read_wind_log(spark, input_path)
-        process = features.process_wind
-    else:
+    if domain not in schemas.DOMAINS:
         raise ValueError(f"unknown domain {domain!r}")
+    raw = sio.read_log(spark, input_path, domain)
     if max_messages:
         raw = raw.limit(max_messages)
-    processed = process(raw, deterministic_dedup=True)
+    processed = features.process(raw, domain, deterministic_dedup=True)
     if show_details:
         processed.show(5, truncate=False)
     if output_path:
@@ -58,9 +55,9 @@ def dashboard_panels(processed: DataFrame, domain: str) -> dict[str, DataFrame]:
     """Entry point C: every dashboard panel as an independent aggregate
     over ONE cached DataFrame (the Spark translation of @st.cache_data +
     per-panel pandas queries)."""
+    d = schemas.DOMAINS[domain]
     df = processed.cache()
-    power = "farm_power_kW" if domain == "wind" else "power_kW"
-    energy = "farm_energy_kWh_10min" if domain == "wind" else "energy_kWh_10min"
+    power, energy = d.power_column, d.energy_column
     panels: dict[str, DataFrame] = {
         "global_metrics": analytics.global_metrics(df, [power, energy]),
         "station_energy": analytics.station_energy(df, "station_id", energy),
@@ -73,19 +70,14 @@ def dashboard_panels(processed: DataFrame, domain: str) -> dict[str, DataFrame]:
         "value_dist": analytics.describe_stats(df, [power]),
         "pivot": analytics.pivot_align(df, "timestamp", "station_id", power),
     }
-    if domain == "wind":
-        panels["speed_power_corr"] = analytics.correlation(df, "wind_speed_mps", power)
-        panels["regression"] = analytics.linear_regression(df, "wind_speed_mps", power)
+    if d.speed_column:
+        speed = d.speed_column
+        panels["speed_power_corr"] = analytics.correlation(df, speed, power)
+        panels["regression"] = analytics.linear_regression(df, speed, power)
         panels["wind_class_counts"] = analytics.value_counts(
-            df.withColumn("wind_class", _wind_class_col()), "wind_class"
+            df.withColumn("wind_class", physics.wind_class(speed)), "wind_class"
         )
     return panels
-
-
-def _wind_class_col():
-    from .functions import physics
-
-    return physics.wind_class("wind_speed_mps")
 
 
 def curate_corpus(

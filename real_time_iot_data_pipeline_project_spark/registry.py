@@ -9250,11 +9250,20 @@ def attach_views(spark: SparkSession, sf_dir: str) -> None:
     query as a temp view, so users can ``spark.sql`` against the whole
     engine — ``SELECT * FROM q48_training_data_pipeline`` or join query
     views with base tables — with the exact operator plans (broadcasts,
-    plan shapes, determinism rules) baked in."""
+    plan shapes, determinism rules) baked in.
+
+    Some builders run jobs eagerly (index builds, stream folds, fitted
+    parameters) and each waits mostly on job latency, so they are built
+    on a small thread pool; every builder writes only its own scratch
+    dir. Views are registered afterwards, in registry order."""
+    from concurrent.futures import ThreadPoolExecutor
+
     for t in TABLES:
         _t(spark, sf_dir, t).createOrReplaceTempView(t)
-    for name, fn in QUERIES.items():
-        fn(spark, sf_dir).createOrReplaceTempView(name)
+    with ThreadPoolExecutor(max_workers=4) as pool:
+        built = list(pool.map(lambda fn: fn(spark, sf_dir), QUERIES.values()))
+    for name, df in zip(QUERIES, built):
+        df.createOrReplaceTempView(name)
 
 
 def export_order() -> list[str]:

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import physics
-from ..stations import SOLAR_STATIONS, WIND_STATIONS
+from ..schemas import SOLAR_STATIONS, WIND_STATIONS
 
 
 def _station_pick(idx_col: F.Column, ids: list[str]) -> F.Column:

@@ -7,6 +7,8 @@ with partition columns for pruning at scale.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
@@ -26,14 +28,14 @@ def read_raw_csv(spark: SparkSession, path: str,
     return reader.csv(path)
 
 
-def read_solar_log(spark: SparkSession, path: str) -> DataFrame:
-    """Solar append-log CSV (Solar_Generation.py:155-169 field order)."""
-    return read_raw_csv(spark, path, schemas.SOLAR_RAW_SCHEMA)
+def read_log(spark: SparkSession, path: str, domain: str) -> DataFrame:
+    """A domain's append-log CSV in its raw schema's field order
+    (Solar_Generation.py:155-169, Wind_Genration.py:57-79)."""
+    return read_raw_csv(spark, path, schemas.DOMAINS[domain].raw_schema)
 
 
-def read_wind_log(spark: SparkSession, path: str) -> DataFrame:
-    """Wind append-log CSV (Wind_Genration.py:57-79 field order)."""
-    return read_raw_csv(spark, path, schemas.WIND_RAW_SCHEMA)
+read_solar_log = partial(read_log, domain="solar")
+read_wind_log = partial(read_log, domain="wind")
 
 
 def write_processed_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:

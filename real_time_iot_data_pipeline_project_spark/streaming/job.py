@@ -26,6 +26,8 @@ pruning for every per-station or per-day downstream query.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -47,39 +49,23 @@ def parse_json_stream(raw: DataFrame, schema: T.StructType,
     )
 
 
-def _transform(parsed: DataFrame, domain: str, watermark: str | None) -> DataFrame:
-    """Shared streaming clean+derive. Order per docx §wind:
-    filter → fillna → dedup → derive."""
-    if domain == "solar":
-        bounds, fills, featurize = (
-            schemas.SOLAR_RANGE_BOUNDS, schemas.SOLAR_FILL_DEFAULTS, features.featurize_solar,
-        )
-    else:
-        bounds, fills, featurize = (
-            schemas.WIND_RANGE_BOUNDS, schemas.WIND_FILL_DEFAULTS, features.featurize_wind,
-        )
-    df = cleaning.parse_timestamps(parsed)
-    df = cleaning.drop_null_timestamps(df)
-    df = cleaning.apply_range_filter(df, bounds)
-    df = cleaning.fill_defaults(df, fills)
+def stream_transform(parsed: DataFrame, domain: str,
+                     watermark: str | None = DEFAULT_WATERMARK) -> DataFrame:
+    """The domain's clean+derive on a stream (docx §solar:
+    validation_spark + create_col_spark, §wind:clean_df + derived
+    columns). Order per docx §wind: filter → fillna → dedup → derive."""
+    df = cleaning.validate(parsed, domain)
     if watermark:
         df = df.withWatermark("timestamp", watermark)
         df = df.dropDuplicatesWithinWatermark(schemas.DEDUP_KEYS)
     else:
         df = df.dropDuplicates(schemas.DEDUP_KEYS)
-    return featurize(df)
+    return features.featurize(df, domain)
 
 
-def solar_stream_transform(parsed: DataFrame,
-                           watermark: str | None = DEFAULT_WATERMARK) -> DataFrame:
-    """docx §solar: validation_spark + create_col_spark on a stream."""
-    return _transform(parsed, "solar", watermark)
-
-
-def wind_stream_transform(parsed: DataFrame,
-                          watermark: str | None = DEFAULT_WATERMARK) -> DataFrame:
-    """docx §wind:clean_df + derived columns on a stream."""
-    return _transform(parsed, "wind", watermark)
+_transform = stream_transform
+solar_stream_transform = partial(stream_transform, domain="solar")
+wind_stream_transform = partial(stream_transform, domain="wind")
 
 
 def _trigger(writer, processing_time: str | None, available_now: bool):
@@ -112,9 +98,7 @@ def start_parquet_sink(df: DataFrame, path: str, checkpoint: str,
         .outputMode("append")
         .partitionBy(*(partition_by or ["station_id"]))
     )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _trigger(w, None, available_now).start()
 
 
 def start_alert_stream(df: DataFrame, power_col: str, threshold: float,

@@ -2,10 +2,11 @@
 S14/J4 (reference loads its DWH in batch; this feeds the same star from
 ``foreachBatch``, exactly-once).
 
-Keys are the batch build's own (``warehouse.star``): every key is
-computed from the row it describes, so an incremental build assigns the
-SAME keys as a batch rebuild over the union, whatever the batch order,
-and a fact batch is written without reading any dim back.
+Keys and table names are the batch build's own (``warehouse.star``,
+``schemas.DOMAINS``): every key is computed from the row it describes,
+so an incremental build assigns the SAME keys as a batch rebuild over
+the union, whatever the batch order, and a fact batch is written
+without reading any dim back.
 
 Idempotency by construction (a micro-batch may replay after failure):
 
@@ -31,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
 
+from ..schemas import DOMAINS
 from . import star
 
 
@@ -39,14 +41,6 @@ def _read_or_none(spark: SparkSession, path: str) -> DataFrame | None:
         return spark.read.parquet(path)
     except AnalysisException:
         return None
-
-
-def _domain_spec(domain: str) -> tuple[list[str], list[str], list[str], str, str, str]:
-    if domain == "solar":
-        return (star.SOLAR_WEATHER_COLS, star.SOLAR_MEASURES, star.SOLAR_STATION_IDS,
-                "Dim_SolarStation", "Dim_WeatherSolar", "Fact_Solar")
-    return (star.WIND_WEATHER_COLS, star.WIND_MEASURES, star.WIND_STATION_IDS,
-            "Dim_WindStation", "Dim_WeatherWind", "Fact_Wind")
 
 
 def _keys_not_on_disk(batch: DataFrame, on_disk: DataFrame, key: str, cols: list[str]) -> DataFrame:
@@ -65,12 +59,12 @@ def upsert_star_batch(spark: SparkSession, processed: DataFrame,
                       station_dim: DataFrame, base_path: str,
                       domain: str, batch_id: int) -> None:
     """Apply one processed micro-batch to the star at ``base_path``."""
-    weather_cols, measures, station_ids, st_name, wx_name, fact_name = _domain_spec(domain)
+    d = DOMAINS[domain]
 
     # station dim: static registry dimension — write once
-    st_path = f"{base_path}/{st_name}"
+    st_path = f"{base_path}/{d.station_table}"
     if _read_or_none(spark, st_path) is None:
-        star.build_station_dim(station_dim, station_ids).write.mode("overwrite").parquet(st_path)
+        star.build_station_dim(station_dim, d.station_ids).write.mode("overwrite").parquet(st_path)
 
     # datetime dim: append only timestamps not yet present
     dt_path = f"{base_path}/Dim_DateTime"
@@ -83,17 +77,17 @@ def upsert_star_batch(spark: SparkSession, processed: DataFrame,
     dt_batch.write.mode("append").parquet(dt_path)
 
     # weather dim: append only tuples whose hash key is not yet present
-    wx_path = f"{base_path}/{wx_name}"
-    wx_batch = star.build_weather_dim(processed, weather_cols)
+    wx_path = f"{base_path}/{d.weather_table}"
+    wx_batch = star.build_weather_dim(processed, d.weather_columns)
     wx_existing = _read_or_none(spark, wx_path)
     if wx_existing is not None:
-        wx_batch = _keys_not_on_disk(wx_batch, wx_existing, "weather_key", weather_cols)
+        wx_batch = _keys_not_on_disk(wx_batch, wx_existing, "weather_key", d.weather_columns)
     wx_batch.write.mode("append").parquet(wx_path)
 
     # fact: keys come from the rows themselves; the batch owns its
     # directory, so replays overwrite instead of append
-    fact = star.build_fact(processed, station_ids, weather_cols, measures)
-    fact.write.mode("overwrite").parquet(f"{base_path}/{fact_name}/batch_id={batch_id}")
+    fact = star.build_fact(processed, d.station_ids, d.weather_columns, d.measure_columns)
+    fact.write.mode("overwrite").parquet(f"{base_path}/{d.fact_table}/batch_id={batch_id}")
 
 
 def star_upsert_fn(spark: SparkSession, station_dim: DataFrame,
@@ -111,27 +105,23 @@ def star_upsert_fn(spark: SparkSession, station_dim: DataFrame,
 def read_star(spark: SparkSession, base_path: str, domain: str) -> dict[str, DataFrame]:
     """Load the incrementally-built star (fact's batch_id partition
     column is part of its global key and stays visible)."""
-    _, _, _, st_name, wx_name, fact_name = _domain_spec(domain)
-    return {
-        "Dim_DateTime": spark.read.parquet(f"{base_path}/Dim_DateTime"),
-        st_name: spark.read.parquet(f"{base_path}/{st_name}"),
-        wx_name: spark.read.parquet(f"{base_path}/{wx_name}"),
-        fact_name: spark.read.parquet(f"{base_path}/{fact_name}"),
-    }
+    d = DOMAINS[domain]
+    names = ["Dim_DateTime", d.station_table, d.weather_table, d.fact_table]
+    return {name: spark.read.parquet(f"{base_path}/{name}") for name in names}
 
 
 def denormalize(tables: dict[str, DataFrame], domain: str) -> DataFrame:
     """Join the fact back through its dims to natural keys + measures —
     the surrogate-key-free content of the warehouse, used to prove an
     incremental build equals the batch rebuild."""
-    weather_cols, measures, _, st_name, wx_name, fact_name = _domain_spec(domain)
-    fact = tables[fact_name]
+    d = DOMAINS[domain]
     out = (
-        fact.join(tables["Dim_DateTime"].select("datetime_key", "timestamp"), "datetime_key")
-        .join(F.broadcast(tables[st_name].select("station_key", "station_id")), "station_key")
-        .join(tables[wx_name].select("weather_key", *weather_cols), "weather_key")
+        tables[d.fact_table]
+        .join(tables["Dim_DateTime"].select("datetime_key", "timestamp"), "datetime_key")
+        .join(F.broadcast(tables[d.station_table].select("station_key", "station_id")), "station_key")
+        .join(tables[d.weather_table].select("weather_key", *d.weather_columns), "weather_key")
     )
-    return out.select("timestamp", "station_id", *weather_cols, *measures)
+    return out.select("timestamp", "station_id", *d.weather_columns, *d.measure_columns)
 
 
 # ---------------------------------------------------------------------

@@ -1,6 +1,8 @@
 """Star-schema DWH build — the T-SQL DDL in ``DWH/SQL queries.docx``
 (Dim_DateTime, Dim_SolarStation, Dim_WindStation, Dim_WeatherSolar,
 Dim_WeatherWind, Fact_Solar, Fact_Wind) re-expressed as DataFrame ETL.
+One ``build_star`` serves both domains; table names, weather columns,
+measures and station ids come from the domain record.
 
 Every surrogate key is computed from the row it describes, so the fact
 is one narrow projection of the processed rows — no join, no window, no
@@ -9,7 +11,7 @@ exchange — and a dim and its fact agree on a key without ever meeting:
 - ``datetime_key`` = ``unix_micros(timestamp)``: unique at timestamp
   grain and stable across rebuilds;
 - ``station_key`` = dense 1..n in ``station_id`` order of the static
-  registry (``stations.py``), applied as the same literal ``create_map``
+  registry (``schemas.DOMAINS``), applied as the same literal ``create_map``
   in the dim and the fact. A ``station_id`` outside the registry raises
   instead of losing its fact rows;
 - ``weather_key`` = ``xxhash64`` of the weather tuple. Weather dims are
@@ -27,13 +29,12 @@ coordination).
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .. import stations
-
-SOLAR_STATION_IDS = [s[0] for s in stations.SOLAR_STATIONS]
-WIND_STATION_IDS = [s[0] for s in stations.WIND_STATIONS]
+from ..schemas import DOMAINS
 
 
 def datetime_key() -> Column:
@@ -42,7 +43,7 @@ def datetime_key() -> Column:
 
 def station_key(station_ids: list[str]) -> Column:
     """Dense key from 1 in ``station_id`` order, as a literal map (the
-    ``solar_capacity_map_col`` idiom); an unknown id raises."""
+    capacity lookup idiom); an unknown id raises."""
     pairs: list[Column] = []
     for key, sid in enumerate(sorted(station_ids), 1):
         pairs.extend([F.lit(sid), F.lit(key)])
@@ -116,34 +117,19 @@ def build_fact(processed: DataFrame, station_ids: list[str],
     )
 
 
-SOLAR_WEATHER_COLS = [
-    "temperature_C", "panel_temperature_C", "solar_irradiance_Wm2", "effective_efficiency",
-]
-SOLAR_MEASURES = ["power_kW", "energy_kWh_10min"]
-
-WIND_WEATHER_COLS = [
-    "wind_speed_mps", "wind_dir_deg", "air_temperature_C", "air_pressure_hPa",
-    "humidity_percent", "air_density_kgm3", "wind_speed_hub_mps",
-]
-WIND_MEASURES = ["turbine_power_kW", "farm_power_kW", "farm_energy_MWh_10min", "wind_power_density"]
-
-
-def build_solar_star(processed: DataFrame, station_dim: DataFrame) -> dict[str, DataFrame]:
+def build_star(processed: DataFrame, station_dim: DataFrame, domain: str) -> dict[str, DataFrame]:
+    """The domain's four star tables, named as in the DDL."""
+    d = DOMAINS[domain]
     return {
         "Dim_DateTime": build_datetime_dim(processed),
-        "Dim_SolarStation": build_station_dim(station_dim, SOLAR_STATION_IDS),
-        "Dim_WeatherSolar": build_weather_dim(processed, SOLAR_WEATHER_COLS),
-        "Fact_Solar": build_fact(processed, SOLAR_STATION_IDS, SOLAR_WEATHER_COLS, SOLAR_MEASURES),
+        d.station_table: build_station_dim(station_dim, d.station_ids),
+        d.weather_table: build_weather_dim(processed, d.weather_columns),
+        d.fact_table: build_fact(processed, d.station_ids, d.weather_columns, d.measure_columns),
     }
 
 
-def build_wind_star(processed: DataFrame, station_dim: DataFrame) -> dict[str, DataFrame]:
-    return {
-        "Dim_DateTime": build_datetime_dim(processed),
-        "Dim_WindStation": build_station_dim(station_dim, WIND_STATION_IDS),
-        "Dim_WeatherWind": build_weather_dim(processed, WIND_WEATHER_COLS),
-        "Fact_Wind": build_fact(processed, WIND_STATION_IDS, WIND_WEATHER_COLS, WIND_MEASURES),
-    }
+build_solar_star = partial(build_star, domain="solar")
+build_wind_star = partial(build_star, domain="wind")
 
 
 def save_star(tables: dict[str, DataFrame], base_path: str) -> None:

@@ -27,6 +27,61 @@ def test_normalize_timestamp_four_shapes(spark):
     assert got[3] is None
 
 
+# Timestamp shapes: ISO with 'T' and with a space, offsets, 'Z', a 'UTC'
+# suffix with and without a space, padding, date only, truncated times,
+# garbage and an invalid date, then the FIXTURES.md and perfbench/gen.py
+# forms. ``parses`` says whether the shape must give a timestamp.
+TIMESTAMP_SHAPES = [
+    ("2025-11-04T20:13:36.536371", True),
+    ("2025-11-04 20:13:36.536371", True),
+    ("2025-11-04T20:13:36+02:00", True),
+    ("2025-11-04 20:13:36-05:30", True),
+    ("2025-11-04T20:13:36+0200", True),
+    ("2025-11-04T20:13:36Z", True),
+    ("2025-11-04T20:13:36 UTC", True),
+    ("2025-11-04T20:13:36UTC", True),
+    ("  2025-11-04T20:13:36  ", True),
+    ("2025-11-04", True),
+    ("2025-11-04T20", True),
+    ("2025-11-04T20:13", True),
+    ("garbage", False),
+    ("2025-02-30", False),
+    ("2025-02-30T10:00:00", False),
+    ("T", False),
+    ("", False),
+    ("2025-11-04 20:13:36.536371+00:00", True),
+    ("2025-11-04 20:13:36.536371 UTC", True),
+    ("2025-11-04T20:13:36.536371UTC", True),
+    ("2025-03-01T12:34:56", True),
+    ("2025-03-01T12:34:56 UTC", True),
+    ("not-a-timestamp", False),
+    ("N/A", False),
+    (None, False),
+]
+
+
+@pytest.fixture(scope="module")
+def parsed_shapes(spark):
+    """Each shape through ``normalize_timestamp`` and through the former
+    two-branch expression, whose second branch retried with 'T' replaced
+    by a space: shape → (got, want), in one job."""
+    df = spark.createDataFrame([(s,) for s, _ in TIMESTAMP_SHAPES], "ts string")
+    cleaned = F.trim(F.regexp_replace(F.col("ts").cast("string"), "UTC", ""))
+    two_branch = F.coalesce(
+        F.try_to_timestamp(cleaned),
+        F.try_to_timestamp(F.regexp_replace(cleaned, "T", " ")),
+    )
+    rows = df.select("ts", timeutils.normalize_timestamp("ts").alias("got"), two_branch.alias("want"))
+    return {r.ts: (r.got, r.want) for r in rows.collect()}
+
+
+@pytest.mark.parametrize("shape, parses", TIMESTAMP_SHAPES)
+def test_normalize_timestamp_needs_no_t_fallback(parsed_shapes, shape, parses):
+    got, want = parsed_shapes[shape]
+    assert got == want
+    assert (got is not None) == parses
+
+
 def test_range_filter_drops_nulls_in_bounded_columns(spark):
     df = spark.createDataFrame(
         [(1.0,), (None,), (100.0,)], "v double"

@@ -8,10 +8,11 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from real_time_iot_data_pipeline_project_spark import stations
+from real_time_iot_data_pipeline_project_spark import schemas, stations
 from real_time_iot_data_pipeline_project_spark.warehouse import star
 
 WX = ["a", "b"]
+WIND_IDS = schemas.DOMAINS["wind"].station_ids
 
 
 def _processed(spark, rows):
@@ -52,7 +53,7 @@ def test_signed_zero_and_nan_tuples_get_one_dim_row(spark):
     dim = star.build_weather_dim(processed, WX).localCheckpoint()
     assert dim.count() == 2
     assert dim.select("weather_key").distinct().count() == 2
-    fact = star.build_fact(processed, star.WIND_STATION_IDS, WX, ["m"])
+    fact = star.build_fact(processed, WIND_IDS, WX, ["m"])
     assert fact.count() == 4
     assert fact.join(dim, "weather_key", "left_anti").count() == 0
 
@@ -62,15 +63,15 @@ def test_unknown_station_id_raises(spark):
 
     processed = _processed(spark, [(dt.datetime(2024, 1, 1), "NOPE", 1.0, 2.0, 3.0)])
     with pytest.raises(Exception, match="NOPE is not in the station registry"):
-        star.build_fact(processed, star.WIND_STATION_IDS, WX, ["m"]).collect()
+        star.build_fact(processed, WIND_IDS, WX, ["m"]).collect()
     unknown_dim = spark.createDataFrame([("NOPE",)], "station_id string")
     with pytest.raises(Exception, match="NOPE is not in the station registry"):
-        star.build_station_dim(unknown_dim, star.WIND_STATION_IDS).collect()
+        star.build_station_dim(unknown_dim, WIND_IDS).collect()
 
 
 @pytest.mark.parametrize("build, rows, schema", [
-    (stations.solar_station_dim, stations.SOLAR_STATIONS, stations._SOLAR_SCHEMA),
-    (stations.wind_station_dim, stations.WIND_STATIONS, stations._WIND_SCHEMA),
+    (stations.solar_station_dim, schemas.SOLAR_STATIONS, schemas.DOMAINS["solar"].station_schema),
+    (stations.wind_station_dim, schemas.WIND_STATIONS, schemas.DOMAINS["wind"].station_schema),
 ])
 def test_station_dims_are_literal_tables(spark, build, rows, schema):
     dim = build(spark)
