@@ -19,7 +19,11 @@ relies on:
   of environment-dependent drift between dev and cluster.
 - Shuffle partitions default sized for local[32] testing; on a real
   cluster pass ``shuffle_partitions`` ≈ 2-3× total cores (AQE coalesces
-  the excess).
+  the excess). Streams of entry point B do not take their state-store
+  count from it: ``streaming.job`` starts them with its
+  ``STATE_PARTITIONS`` constant, which a new checkpoint records at first
+  start and keeps on every restart (a checkpoint written with this
+  session setting keeps that count).
 """
 
 from __future__ import annotations

@@ -22,6 +22,21 @@ with two deliberate upgrades over the reference (SURVEY.md §4.2):
 Scale notes: the whole transform is narrow except the dedup shuffle on
 (station_id, timestamp). Sink partitioned by station_id/date → partition
 pruning for every per-station or per-day downstream query.
+
+The dedup state lives in ``STATE_PARTITIONS`` = 1 state store per stream,
+not in ``spark.sql.shuffle.partitions`` of them. A micro-batch commits
+every state store whatever its row count, so at the paper's rate (three
+stations per domain, one reading every 5 s) that commit, not the rows,
+sets ingest latency: with 4 stores it took about 450 ms of a 1.1 s
+micro-batch, with 1 store about 60 ms (perfbench ``live_ingest``, 4 vCPU,
+Spark 4.1.2). The cost at scale: the dedup shuffle hashes into that one
+store, so the state work and everything after it (derive, parquet write)
+of one stream run in one task per micro-batch; parse and clean before the
+shuffle still run one task per input split. A stream that outgrows one
+core needs a larger count (or more streams). The count is fixed when a
+checkpoint is first written: Spark stores it in the offset log and reads
+it back on every restart, so a checkpoint written with another count
+(every one written before this constant) keeps that count.
 """
 
 from __future__ import annotations
@@ -36,6 +51,8 @@ from .. import schemas
 from ..operators import cleaning, features
 
 DEFAULT_WATERMARK = "10 minutes"
+# State stores per stream of the watermarked-dedup transform (see Scale notes).
+STATE_PARTITIONS = 1
 
 
 def parse_json_stream(raw: DataFrame, schema: T.StructType,
@@ -84,6 +101,27 @@ def _trigger(writer, processing_time: str | None, available_now: bool):
     return writer
 
 
+def _start_with_state_partitions(df: DataFrame, writer):
+    """``writer.start()`` with ``STATE_PARTITIONS`` state stores.
+
+    Spark has no per-query setting for this: ``start()`` clones the
+    session, and a new query takes its state-partition count from the
+    clone's ``spark.sql.shuffle.partitions`` and records it in its
+    checkpoint (an existing checkpoint keeps its recorded count). So the
+    conf is set on ``df.sparkSession`` for the ``start()`` call and
+    restored in ``finally``. It is session-wide while ``start()`` runs:
+    start such streams from one thread (perfbench and the tests do), or
+    another thread's job may plan with ``STATE_PARTITIONS`` shuffle
+    partitions."""
+    conf = df.sparkSession.conf
+    old = conf.get("spark.sql.shuffle.partitions")
+    conf.set("spark.sql.shuffle.partitions", str(STATE_PARTITIONS))
+    try:
+        return writer.start()
+    finally:
+        conf.set("spark.sql.shuffle.partitions", old)
+
+
 def start_parquet_sink(df: DataFrame, path: str, checkpoint: str,
                        available_now: bool = False,
                        partition_by: list[str] | None = None):
@@ -98,7 +136,7 @@ def start_parquet_sink(df: DataFrame, path: str, checkpoint: str,
         .outputMode("append")
         .partitionBy(*(partition_by or ["station_id"]))
     )
-    return _trigger(w, None, available_now).start()
+    return _start_with_state_partitions(df, _trigger(w, None, available_now))
 
 
 def start_alert_stream(df: DataFrame, power_col: str, threshold: float,
@@ -135,10 +173,15 @@ def start_console_sink(df: DataFrame, num_rows: int = 20, truncate: bool = True,
 def active_stream_status(spark: SparkSession) -> list[dict]:
     """S13 — stream monitoring (docx §wind last cell:
     ``for q in spark.streams.active: print(q.name, q.status)``): one dict
-    per active query with name/id/status/recent progress."""
+    per active query with name/id/status/recent progress, and its state
+    as of the last micro-batch: state stores (``state_partitions``), rows
+    in state, state commit time summed over its state operators, and the
+    event-time watermark. The state fields are None before the first
+    progress and for a query without state."""
     out = []
     for q in spark.streams.active:
         prog = q.lastProgress
+        ops = prog["stateOperators"] if prog else []
         out.append(
             {
                 "name": q.name,
@@ -147,6 +190,10 @@ def active_stream_status(spark: SparkSession) -> list[dict]:
                 "status": dict(q.status) if q.status else None,
                 "batch_id": prog.get("batchId") if prog else None,
                 "num_input_rows": prog.get("numInputRows") if prog else None,
+                "state_partitions": max(o["numShufflePartitions"] for o in ops) if ops else None,
+                "state_rows": sum(o["numRowsTotal"] for o in ops) if ops else None,
+                "state_commit_ms": sum(o["commitTimeMs"] for o in ops) if ops else None,
+                "watermark": prog["eventTime"].get("watermark") if prog else None,
             }
         )
     return out
@@ -229,14 +276,14 @@ def write_kafka_sink(df: DataFrame, brokers: str, topic: str, checkpoint: str,
     producer's partitioning strategy, Wind_Genration.py:85-89), value =
     JSON of all columns. Structured Streaming checkpointing supplies the
     at-least-once the reference configured by hand (acks=all)."""
-    return (
+    w = (
         kafka_payload(df, key_col)
         .writeStream.format("kafka")
         .option("kafka.bootstrap.servers", brokers)
         .option("topic", topic)
         .option("checkpointLocation", checkpoint)
-        .start()
     )
+    return _start_with_state_partitions(df, w)
 
 
 def join_streams_interval(left: DataFrame, right: DataFrame, key: str,

@@ -11,6 +11,7 @@ import time
 
 import pytest
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -60,6 +61,90 @@ def test_stream_transform_end_to_end(spark, wind_json_dir, tmp_path):
     q2 = job.start_parquet_sink(out, sink, ckpt, available_now=True)
     q2.awaitTermination(120)
     assert spark.read.parquet(sink).count() == n1
+
+
+VALUE_SCHEMA = T.StructType([T.StructField("value", T.StringType())])
+
+
+def _offset_log_partitions(ckpt) -> int:
+    """``spark.sql.shuffle.partitions`` recorded in the checkpoint's
+    latest offset-log entry (line 2 is the batch metadata JSON)."""
+    latest = max((ckpt / "offsets").iterdir(), key=lambda f: int(f.name)
+                 if f.name.isdigit() else -1)
+    meta = json.loads(latest.read_text().splitlines()[1])
+    return int(meta["conf"]["spark.sql.shuffle.partitions"])
+
+
+@pytest.mark.parametrize("checkpoint", ["old", "fresh"])
+def test_parquet_sink_restart_keeps_checkpoint_state_partitions(spark, tmp_path, checkpoint):
+    """Stop after the first file, add a second that replays readings of
+    the first inside the watermark, restart through start_parquet_sink.
+    An old checkpoint (written with the session's own count, as before
+    STATE_PARTITIONS) keeps its count; a fresh one gets the constant.
+    Either way the sink equals the batch transform of all input."""
+    from real_time_iot_data_pipeline_project_spark.sources.generator import generate_wind_raw
+
+    raw = generate_wind_raw(spark, n_rows=300)   # 100 readings per station, 495 s
+    lines = [r.value for r in raw.select(F.to_json(F.struct(*raw.columns)).alias("value"))
+             .orderBy("value").collect()]
+    src, sink, ckpt = tmp_path / "src", str(tmp_path / "sink"), tmp_path / "ckpt"
+    src.mkdir()
+    (src / "part-0.json").write_text("\n".join(lines[:200]) + "\n")
+    out = job.wind_stream_transform(
+        job.parse_json_stream(spark.readStream.schema(VALUE_SCHEMA).text(str(src)),
+                              schemas.WIND_RAW_SCHEMA))
+    session_count = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert session_count != job.STATE_PARTITIONS
+    want = session_count if checkpoint == "old" else job.STATE_PARTITIONS
+
+    if checkpoint == "old":
+        q = (out.writeStream.format("parquet").option("path", sink)
+             .option("checkpointLocation", str(ckpt)).outputMode("append")
+             .partitionBy("station_id").start())
+    else:
+        q = job.start_parquet_sink(out, sink, str(ckpt))
+        assert int(spark.conf.get("spark.sql.shuffle.partitions")) == session_count
+    try:
+        q.processAllAvailable()
+        mine = next(s for s in job.active_stream_status(spark) if s["id"] == str(q.id))
+        assert mine["state_partitions"] == want
+        assert mine["state_rows"] > 0 and mine["watermark"]
+    finally:
+        q.stop()
+
+    (src / "part-1.json").write_text("\n".join(lines[150:]) + "\n")
+    q2 = job.start_parquet_sink(out, sink, str(ckpt), available_now=True)
+    q2.awaitTermination(120)
+    assert q2.exception() is None
+
+    assert _offset_log_partitions(ckpt) == want
+    assert sorted(int(d.name) for d in (ckpt / "state" / "0").iterdir()
+                  if d.name.isdigit()) == list(range(want))
+    expected = job.stream_transform(
+        job.parse_json_stream(spark.read.schema(VALUE_SCHEMA).text(str(src)),
+                              schemas.WIND_RAW_SCHEMA), "wind", watermark=None)
+    got = spark.read.parquet(sink).select(*expected.columns).collect()
+    keys = [(r["station_id"], r["timestamp"]) for r in got]
+    assert len(keys) == len(set(keys))
+    by_key = lambda r: (r["station_id"], r["timestamp"])  # noqa: E731
+    assert sorted(got, key=by_key) == sorted(expected.collect(), key=by_key)
+
+
+def test_parquet_sink_restores_session_conf_when_start_raises(spark, wind_json_dir, tmp_path):
+    """The state-partition count is set on the shared session only while
+    start() runs, also when start() raises (the restart test above checks
+    a start that returns)."""
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    assert before != str(job.STATE_PARTITIONS)
+    out = job.wind_stream_transform(
+        job.parse_json_stream(spark.readStream.schema(VALUE_SCHEMA).text(wind_json_dir),
+                              schemas.WIND_RAW_SCHEMA))
+    blocker = tmp_path / "a_file"
+    blocker.write_text("")
+    with pytest.raises(Py4JJavaError, match=r"\.start"):
+        job.start_parquet_sink(out, str(tmp_path / "sink"), str(blocker / "ckpt"),
+                               available_now=True)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
 
 
 def _has_protobuf() -> bool:
