@@ -24,6 +24,19 @@ relies on:
   ``STATE_PARTITIONS`` constant, which a new checkpoint records at first
   start and keeps on every restart (a checkpoint written with this
   session setting keeps that count).
+- Stream checkpoints are written through Spark's FileSystem-based
+  checkpoint manager, not its FileContext-based default. pip PySpark
+  ships no native Hadoop library, so Hadoop's local file system forks a
+  ``chmod`` for every file it creates, and ``FileContext.rename`` forks a
+  ``readlink``; each atomic checkpoint write of the default manager forks
+  several such processes, and every micro-batch makes five (source log,
+  offset log, sink metadata log, state delta, commit log). On 4 vCPU with
+  Spark 4.1.2 a write took 27-42 ms with the default and 6-9 ms with this
+  one (``tools/fs_probe.py``, 40 writes of 300 bytes), and on perfbench
+  ``live_ingest`` the fixed cost of a micro-batch fell from about 234 to
+  114 ms and latency p50 from 0.97 to 0.72 s. Local and HDFS renames are
+  atomic, so exactly-once holds; the files keep their names and format,
+  so existing checkpoints restart unchanged.
 """
 
 from __future__ import annotations
@@ -33,6 +46,11 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# Spark 4.1 moved this class into the ``checkpointing`` package; a test
+# loads it by name so an upgrade that moves it again fails there.
+CHECKPOINT_FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager")
 
 # Python workers (mapInPandas / applyInPandas) import this package by name;
 # driver-side sys.path edits don't propagate to them, so export the package
@@ -63,6 +81,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.streaming.checkpointFileManagerClass", CHECKPOINT_FILE_MANAGER)
         # Small dims (station registry, nation/region) must broadcast.
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))

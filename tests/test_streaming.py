@@ -15,7 +15,7 @@ from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from real_time_iot_data_pipeline_project_spark import schemas
+from real_time_iot_data_pipeline_project_spark import schemas, session
 from real_time_iot_data_pipeline_project_spark.streaming import job, stateful
 
 
@@ -75,19 +75,40 @@ def _offset_log_partitions(ckpt) -> int:
     return int(meta["conf"]["spark.sql.shuffle.partitions"])
 
 
-@pytest.mark.parametrize("checkpoint", ["old", "fresh"])
+CHECKPOINT_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
+
+
+def test_checkpoint_file_manager_class_loads(spark):
+    """The checkpoint manager the session names is a loadable
+    CheckpointFileManager. Spark moved these classes between packages
+    once; an upgrade that moves them again fails here, not at every
+    stream start."""
+    name = spark.conf.get(CHECKPOINT_MANAGER_CONF)
+    assert name == session.CHECKPOINT_FILE_MANAGER
+    load = spark._jvm.java.lang.Class.forName
+    assert load(name).getName() == name
+    base = name.rsplit(".", 1)[0] + ".CheckpointFileManager"
+    assert load(base).isAssignableFrom(load(name))
+
+
+@pytest.mark.parametrize("checkpoint", ["old", "fresh", "filecontext"])
 def test_parquet_sink_restart_keeps_checkpoint_state_partitions(spark, tmp_path, checkpoint):
     """Stop after the first file, add a second that replays readings of
     the first inside the watermark, restart through start_parquet_sink.
     An old checkpoint (written with the session's own count, as before
-    STATE_PARTITIONS) keeps its count; a fresh one gets the constant.
-    Either way the sink equals the batch transform of all input."""
+    STATE_PARTITIONS) keeps its count; a fresh one gets the constant; a
+    "filecontext" one is fresh but written through Spark's FileContext-based
+    checkpoint manager (the default before the session named the
+    FileSystem-based one) and restarted under the session's. In every case
+    batch ids continue, no temporary file is left in the checkpoint or the
+    sink's metadata log, and the sink equals the batch transform of all
+    input with no key twice."""
     from real_time_iot_data_pipeline_project_spark.sources.generator import generate_wind_raw
 
     raw = generate_wind_raw(spark, n_rows=300)   # 100 readings per station, 495 s
     lines = [r.value for r in raw.select(F.to_json(F.struct(*raw.columns)).alias("value"))
              .orderBy("value").collect()]
-    src, sink, ckpt = tmp_path / "src", str(tmp_path / "sink"), tmp_path / "ckpt"
+    src, sink, ckpt = tmp_path / "src", tmp_path / "sink", tmp_path / "ckpt"
     src.mkdir()
     (src / "part-0.json").write_text("\n".join(lines[:200]) + "\n")
     out = job.wind_stream_transform(
@@ -98,11 +119,18 @@ def test_parquet_sink_restart_keeps_checkpoint_state_partitions(spark, tmp_path,
     want = session_count if checkpoint == "old" else job.STATE_PARTITIONS
 
     if checkpoint == "old":
-        q = (out.writeStream.format("parquet").option("path", sink)
+        q = (out.writeStream.format("parquet").option("path", str(sink))
              .option("checkpointLocation", str(ckpt)).outputMode("append")
              .partitionBy("station_id").start())
     else:
-        q = job.start_parquet_sink(out, sink, str(ckpt))
+        manager = spark.conf.get(CHECKPOINT_MANAGER_CONF)
+        if checkpoint == "filecontext":
+            spark.conf.set(CHECKPOINT_MANAGER_CONF, manager.replace(
+                "FileSystemBased", "FileContextBased"))
+        try:
+            q = job.start_parquet_sink(out, str(sink), str(ckpt))
+        finally:
+            spark.conf.set(CHECKPOINT_MANAGER_CONF, manager)
         assert int(spark.conf.get("spark.sql.shuffle.partitions")) == session_count
     try:
         q.processAllAvailable()
@@ -111,19 +139,30 @@ def test_parquet_sink_restart_keeps_checkpoint_state_partitions(spark, tmp_path,
         assert mine["state_rows"] > 0 and mine["watermark"]
     finally:
         q.stop()
+    committed = lambda: sorted(int(f.name) for f in (ckpt / "commits").iterdir()  # noqa: E731
+                               if f.name.isdigit())
+    first = committed()
+    assert first == list(range(len(first))) and first
 
     (src / "part-1.json").write_text("\n".join(lines[150:]) + "\n")
-    q2 = job.start_parquet_sink(out, sink, str(ckpt), available_now=True)
+    q2 = job.start_parquet_sink(out, str(sink), str(ckpt), available_now=True)
     q2.awaitTermination(120)
     assert q2.exception() is None
 
+    restarted = [p["batchId"] for p in q2.recentProgress if p["numInputRows"]]
+    assert restarted and min(restarted) >= len(first)
+    after = committed()   # may end in a no-data batch that moved the watermark
+    assert after == list(range(len(after))) and max(restarted) in after
+    for d in (ckpt / "offsets", ckpt / "commits", ckpt / "sources", ckpt / "state",
+              sink / "_spark_metadata"):
+        assert d.is_dir() and not list(d.rglob("*.tmp")), d
     assert _offset_log_partitions(ckpt) == want
     assert sorted(int(d.name) for d in (ckpt / "state" / "0").iterdir()
                   if d.name.isdigit()) == list(range(want))
     expected = job.stream_transform(
         job.parse_json_stream(spark.read.schema(VALUE_SCHEMA).text(str(src)),
                               schemas.WIND_RAW_SCHEMA), "wind", watermark=None)
-    got = spark.read.parquet(sink).select(*expected.columns).collect()
+    got = spark.read.parquet(str(sink)).select(*expected.columns).collect()
     keys = [(r["station_id"], r["timestamp"]) for r in got]
     assert len(keys) == len(set(keys))
     by_key = lambda r: (r["station_id"], r["timestamp"])  # noqa: E731
@@ -257,6 +296,10 @@ def test_console_sink_and_stream_monitoring(spark, tmp_path):
         mine = next(s for s in statuses if s["id"] == str(q.id))
         assert mine["is_active"] and "message" in (mine["status"] or {})
         q.processAllAvailable()  # console batch printed without error
+        mine = next(s for s in job.active_stream_status(spark) if s["id"] == str(q.id))
+        assert set(mine["phase_ms"]) == {"latestOffset", "walCommit", "queryPlanning",
+                                         "addBatch", "commitOffsets", "triggerExecution"}
+        assert all(v >= 0 for v in mine["phase_ms"].values()), mine["phase_ms"]
     finally:
         q.stop()
     assert all(s["id"] != str(q.id) for s in job.active_stream_status(spark))
