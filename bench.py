@@ -154,7 +154,6 @@ HEADLINE = [
     # and the hash-gated streaming heavy-hitters fold
     "q119_embed_ann",
     "q120_stream_heavy_fold",
-    "q121_index_batch_search",
     "q122_drift_report",
     # round-9 late additions: leakage-safe splits, temperature mixture,
     # SemDeDup semantic dedup
@@ -180,9 +179,7 @@ HEADLINE = [
     # and the capacity-capped mixture waterfill (X44)
     "q136_zorder_pruned_read",
     "q137_mixture_waterfill",
-    # round 11: the IVF recall@k evaluation curve (X45) and the
-    # waterfill allocations applied (X44's consumer tier)
-    "q138_ann_recall",
+    # round 11: the waterfill allocations applied (X44's consumer tier)
     "q139_waterfill_sample",
     # round 11: release-to-release corpus diff (X46) and the
     # diff-driven incremental annotation refresh (X47)
@@ -201,40 +198,23 @@ HEADLINE = [
     # cross-entropy selection (X51)
     "q146_embedding_drift",
     "q147_moore_lewis",
-    # round 12: filtered vector search (X52) and the Naive Bayes
-    # classifier (X53)
-    "q148_filtered_ann",
+    # round 12: the Naive Bayes classifier (X53)
     "q149_naive_bayes_langid",
     # round 12: the streaming NB training fold (X54) and the
     # decontamination-by-excision tier (X5 scrub)
     "q150_stream_nb_train",
     "q151_decontam_scrub",
-    "q152_filtered_ann_recall",
     "q153_dsir_scores",
     "q154_pq_adc_topk",
     "q155_ivfpq_topk",
     "q156_stream_dsir_pool",
     "q157_pq_recall",
     "q158_ivfpq_residual",
-    "q159_pq_index_search",
     "q160_pq_refined_recall",
     "q161_dsir_resample",
-    "q162_pq_filtered_search",
-    "q163_stream_index_append",
-    "q164_index_delete_search",
-    "q165_pq_rerank_search",
-    "q166_index_stats",
     "q167_cluster_balanced_sample",
     "q168_tokenizer_fertility",
     "q169_semantic_decontam",
-    # round 15: the ANN-nominated semantic screen (X72 — build once +
-    # nominate from codes + verify nominated pairs), measured next to
-    # q169's linear pass so the tier trade is visible per record
-    "q170_semantic_decontam_ann",
-    # round 15: the store lifecycle gate (X73 — build → stream-append
-    # → delete → compact → serve; deliberately the most build-heavy
-    # row in the bench, it carries every one-time cost at once)
-    "q171_index_lifecycle",
     # round 15: the cluster-mix audit report (X74 — q167's stages +
     # one centroid-keyed count)
     "q172_cluster_sample_report",
@@ -249,9 +229,6 @@ HEADLINE = [
     # repetition report (X79)
     "q176_ivfsq_topk",
     "q177_topgram_report",
-    # round 15: the persisted SQ8 store tier (X80 — build + serve
-    # from d-int codes under DPP pruning)
-    "q178_sq_index_search",
     # round 15: the streaming LM reference fold (X81 — two batch_id
     # count appends + one folded-model score pass)
     "q179_stream_lm_fold",

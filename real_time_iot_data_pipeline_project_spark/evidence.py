@@ -237,8 +237,6 @@ EVIDENCE: dict[str, dict] = {
         "test_curation_ops.py::test_mixture_waterfill_infeasible_and_degenerate",
         "test_curation_ops.py::test_mixture_waterfill_conservation_property",
         "test_curation_ops.py::test_waterfill_sample_greedy_maximal_and_monotone"]},
-    "X45": {"queries": ["q138_ann_recall"], "tests": [
-        "test_ann_index.py::test_ann_recall_curve_monotone_and_anchored"]},
     "X46": {"queries": ["q140_corpus_diff"], "tests": [
         "test_audit_aggstate.py::test_corpus_diff_statuses_and_normalization",
         "test_audit_aggstate.py::test_corpus_diff_absorbs_duplicate_listings",
@@ -278,11 +276,6 @@ EVIDENCE: dict[str, dict] = {
         "test_curation_ops.py::test_nb_classify_shuffle_join_identical",
         "test_release.py::test_release_nb_filter_keeps_operator_membership",
         "test_release.py::test_release_cli_nb_filter_wiring"]},
-    "X52": {"queries": ["q148_filtered_ann"], "tests": [
-        "test_ann_index.py::test_filtered_search_prefilter_beats_postfilter",
-        "test_ann_index.py::test_filtered_search_pushes_predicate_and_prunes"]},
-    "X55": {"queries": ["q152_filtered_ann_recall"], "tests": [
-        "test_ann_index.py::test_filtered_recall_curve_filtered_ground_truth"]},
     "X56": {"queries": ["q153_dsir_scores"], "tests": [
         "test_curation_ops.py::test_dsir_scores_match_python_replay",
         "test_release.py::test_release_dsir_selection_keeps_operator_membership",
@@ -298,23 +291,6 @@ EVIDENCE: dict[str, dict] = {
     "X59": {"queries": ["q156_stream_dsir_pool"], "tests": [
         "test_streaming.py::test_streaming_dsir_fold_equals_batch",
         "test_streaming.py::test_streaming_dsir_sink_engine_equals_direct"]},
-    "X62": {"queries": ["q159_pq_index_search",
-                        "q162_pq_filtered_search"], "tests": [
-        "test_ann_index.py::test_pq_index_search_equals_inline_ivfpq",
-        "test_ann_index.py::test_pq_append_encodes_against_pinned_codebooks",
-        "test_ann_index.py::test_pq_search_prunes_partitions_and_pushes_metadata",
-        "test_ann_index.py::test_pq_build_with_refine_iters_pins_refined_codebooks",
-        "test_ann_index.py::test_index_cli_build_append_search_pq"]},
-    "X65": {"queries": ["q163_stream_index_append"], "tests": [
-        "test_streaming.py::test_streaming_index_append_fold_and_replay",
-        "test_streaming.py::test_streaming_index_sink_engine_equals_direct"]},
-    "X66": {"queries": ["q164_index_delete_search"], "tests": [
-        "test_ann_index.py::test_index_delete_tombstones_and_compaction"]},
-    "X67": {"queries": ["q165_pq_rerank_search"], "tests": [
-        "test_ann_index.py::test_pq_rerank_exact_refine",
-        "test_ann_index.py::test_index_search_cli_rerank_wiring"]},
-    "X68": {"queries": ["q166_index_stats"], "tests": [
-        "test_ann_index.py::test_index_report_counts_share_and_skew"]},
     "X69": {"queries": ["q167_cluster_balanced_sample"], "tests": [
         "test_curation_ops.py::test_cluster_balanced_sample_rates_and_membership"]},
     "X70": {"queries": ["q168_tokenizer_fertility"], "tests": [
@@ -323,11 +299,6 @@ EVIDENCE: dict[str, dict] = {
         "test_curation_ops.py::test_semantic_decontam_catches_paraphrase_exact_screen_misses",
         "test_release.py::test_release_semantic_screen_drops_paraphrase",
         "test_release.py::test_release_cli_semantic_screen_wiring"]},
-    "X72": {"queries": ["q170_semantic_decontam_ann"], "tests": [
-        "test_curation_ops.py::test_semantic_decontam_ann_planted_subset_and_values",
-        "test_curation_ops.py::test_semantic_decontam_ann_recall_report"]},
-    "X73": {"queries": ["q171_index_lifecycle"], "tests": [
-        "test_ann_index.py::test_index_lifecycle_compacted_equals_tombstoned"]},
     "X74": {"queries": ["q172_cluster_sample_report"], "tests": [
         "test_curation_ops.py::test_cluster_balanced_report_matches_operator_membership"]},
     "X76": {"queries": ["q174_sq_topk"], "tests": [
@@ -337,12 +308,6 @@ EVIDENCE: dict[str, dict] = {
     "X81": {"queries": ["q179_stream_lm_fold"], "tests": [
         "test_streaming.py::test_streaming_lm_fold_equals_batch",
         "test_streaming.py::test_streaming_lm_sink_engine_equals_direct"]},
-    "X80": {"queries": ["q178_sq_index_search"], "tests": [
-        "test_ann_index.py::test_persisted_sq_equals_inline_ivfsq",
-        "test_ann_index.py::test_sq_search_requires_tier_and_prunes",
-        "test_ann_index.py::test_sq_append_pins_grid_and_serves_increment",
-        "test_ann_index.py::test_sq_delete_and_compact_preserve_results",
-        "test_ann_index.py::test_sq_cli_build_and_search_wiring"]},
     "X78": {"queries": ["q176_ivfsq_topk"], "tests": [
         "test_curation_ops.py::test_ivfsq_in_bucket_ranking_near_exact"]},
     "X79": {"queries": ["q177_topgram_report"], "tests": [
@@ -389,8 +354,6 @@ EVIDENCE: dict[str, dict] = {
         "test_dedup_similarity.py::test_dup_span_differential_vs_python_mirror"]},
     "X35": {"queries": [], "tests": [
         "test_release.py::test_release_writes_shards_manifest_and_passes_stable_gate",
-        "test_release.py::test_release_publish_index_searchable",
-        "test_release.py::test_release_cli_publish_index_wiring",
         "test_release.py::test_release_gate_blocks_major_shift_unless_allowed",
         "test_release.py::test_release_cli_end_to_end",
         "test_release.py::test_release_with_span_scrub",
@@ -405,12 +368,6 @@ EVIDENCE: dict[str, dict] = {
         "test_drift.py::test_identical_snapshots_read_stable",
         "test_drift.py::test_planted_shift_reads_major",
         "test_drift.py::test_psi_partitioning_invariant"]},
-    "X32": {"queries": ["q121_index_batch_search"], "tests": [
-        "test_ann_index.py::test_index_search_equals_ivf_topk",
-        "test_ann_index.py::test_append_equals_rebuild",
-        "test_ann_index.py::test_search_scan_is_partition_pruned",
-        "test_ann_index.py::test_appended_vectors_are_searchable",
-        "test_ann_index.py::test_batch_search_equals_per_query_and_uses_dpp"]},
     # --- §2.7 sorts / limits; §2.8 set ops ---
     "L1": {"queries": ["q07_topk"], "tests": []},
     "L2": {"queries": ["q07_topk", "q94_shipping_priority"], "tests": [

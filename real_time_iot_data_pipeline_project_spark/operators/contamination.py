@@ -172,7 +172,7 @@ def semantic_decontam_hits(docs, probes, threshold: float = 0.8,
     embeddings on BOTH sides (no model artifact to ship or pin; the
     q118 determinism argument — integer sums, exact sqrt, one
     division — makes every vector bit-identical cross-engine) and the
-    q37/q39 cosine arithmetic, thresholded on the raw double
+    cosine arithmetic of similarity.cosine, thresholded on the raw double
     (identical expression trees both engines), reported at 6 dp.
     Returns (doc_id, probe_id, cosine_sim) — one row per flagged
     (doc, probe) pair; feed ``.select(id).distinct()`` to a left_anti
@@ -181,10 +181,7 @@ def semantic_decontam_hits(docs, probes, threshold: float = 0.8,
     Scale shape: eval probe sets are BOUNDED (10²–10⁴ rows), so the
     probe embeddings broadcast and the screen is ONE scan-stage
     n·|probes| cosine pass over the corpus embeddings — no shuffle,
-    no index required.  At probe counts where that pass is too wide,
-    nominate candidates with the X62 store (search_index_pq per
-    probe) and use this operator as the exact verification tier on
-    the nominated pairs (the q32→q128 candidate/verify precedent)."""
+    no index required."""
     from pyspark.sql import functions as F
 
     from .embedding import hashing_embed_dense
@@ -200,132 +197,3 @@ def semantic_decontam_hits(docs, probes, threshold: float = 0.8,
             .where(cos >= F.lit(float(threshold)))
             .select(id_col, probe_id_col,
                     F.round(cos, 6).alias("cosine_sim")))
-
-
-def build_semantic_index(docs, index_dir: str, dim: int = 64,
-                         n_centroids: int = 16, pq_m: int = 4,
-                         pq_kc: int = 8, text_col: str = "text",
-                         id_col: str = "doc_id") -> None:
-    """Materialize the X62 store over the corpus' X31 hashing
-    embeddings, keyed by doc id — the nomination structure
-    :func:`semantic_decontam_ann` searches.  Built ONCE per corpus
-    release and amortized across every probe list screened against it
-    (the same build-once/serve-many economics as the PQ code tier
-    itself); appends ride ``ann_index.append_index`` so a grown
-    corpus extends the screen without a rebuild."""
-    from .ann_index import build_index
-    from .embedding import hashing_embed_dense
-
-    # localCheckpoint: build_index reads its input TWICE (the
-    # md5-ordered centroid sample and the assignment write), and the
-    # embed pipeline is the dominant corpus-sized stage of this build —
-    # without materialization it would tokenize+aggregate the corpus
-    # twice (optimization round 16, the q119 embed-once posture)
-    demb = hashing_embed_dense(docs, text_col, id_col,
-                               dim).localCheckpoint(eager=True)
-    build_index(demb, index_dir, n_centroids=n_centroids,
-                vec_col="embedding", id_col=id_col,
-                pq_m=pq_m, pq_kc=pq_kc)
-
-
-def semantic_decontam_ann(spark, probes, index_dir: str,
-                          threshold: float = 0.8, k: int = 16,
-                          nprobe: int = 4, text_col: str = "text",
-                          id_col: str = "doc_id",
-                          probe_id_col: str = "probe_id",
-                          dim: int = 64):
-    """ANN-NOMINATED semantic contamination screen (round 15, X72 —
-    VERDICT r14 item 2): the two-tier candidate/verify composition the
-    X71 docstring prescribes for probe sets too wide for the linear
-    n·|probes| pass.  Per probe, :func:`ann_index.search_index_pq`
-    over the X62 store (:func:`build_semantic_index`) NOMINATES the
-    top-``k`` ADC candidates from codes only; the exact X71 cosine
-    rule then VERIFIES exactly those nominated pairs against the
-    stored float embeddings — the q32→q128 candidate/verify precedent
-    applied to the semantic tier.
-
-    Same output contract as :func:`semantic_decontam_hits`
-    (doc_id, probe_id, cosine_sim ≥ threshold, 6 dp), and provably a
-    SUBSET of it (verification is the identical cosine threshold on
-    identical embeddings — pinned by test); what nomination misses is
-    the ADC recall price, measured by
-    :func:`semantic_decontam_ann_recall` before picking (nprobe, k).
-
-    Scale shape: probes embed once (bounded); nomination reads m ints
-    per vector under the store's DPP pruning (never the float corpus,
-    never a re-encode); verification is the X67 refine pattern — the
-    k·|probes| nominated pairs broadcast onto one column-pruned read
-    of the stored float vectors.  Nothing in the pipeline scans
-    docs × probes.
-
-    Determinism: every stage is a gated rule — X31 bit-identical
-    embeddings, the X62 probe ranking and ADC arithmetic
-    (decimal-exact terms, (adc ASC, id ASC) top-k), the q37 cosine
-    thresholded on the raw double — so the hit set is hash-exact
-    cross-engine (q170's gate)."""
-    from .ann_index import search_index_pq
-    from .embedding import hashing_embed_dense
-    from .similarity import cosine
-
-    if not 0.0 < threshold <= 1.0:
-        raise ValueError(f"threshold must be in (0, 1], got {threshold}")
-    # localCheckpoint: the bounded probe embedding is read by the
-    # centroid ranking, the ADC LUT AND the final verify join — three
-    # consumers that would each re-run the probe tokenize+aggregate
-    # pipeline (a handful of stages per read at bench scale)
-    pemb = (hashing_embed_dense(probes, text_col, probe_id_col, dim)
-            .withColumnRenamed("embedding", "__pvec")
-            .localCheckpoint(eager=True))
-    cand = (search_index_pq(spark, index_dir, pemb, k=k, nprobe=nprobe,
-                            query_id_col=probe_id_col,
-                            query_vec_col="__pvec", id_col=id_col)
-            .select(probe_id_col, id_col))
-    data = (spark.read.parquet(f"{index_dir}/data")
-            .select(F.col(id_col), F.col("embedding")))
-    cos = cosine(F.col("embedding"), F.col("__pvec"))
-    return (data.join(F.broadcast(cand), id_col)
-            .join(pemb, probe_id_col)
-            .where(cos >= F.lit(float(threshold)))
-            .select(id_col, probe_id_col,
-                    F.round(cos, 6).alias("cosine_sim")))
-
-
-def semantic_decontam_ann_recall(spark, docs, probes, index_dir: str,
-                                 threshold: float = 0.8,
-                                 nprobe_values: tuple[int, ...] = (1, 4, 16),
-                                 k_values: tuple[int, ...] = (4, 16, 64),
-                                 text_col: str = "text",
-                                 id_col: str = "doc_id",
-                                 probe_id_col: str = "probe_id",
-                                 dim: int = 64):
-    """The sizing curve for X72 (the q138/q152/q157 curve convention
-    on the decontamination axis): per (nprobe, k), how many of the
-    EXACT screen's hits (:func:`semantic_decontam_hits` — the
-    brute-force X71 pass) the nominated screen keeps.  A missed hit
-    here is leaked eval contamination, so an operator reads this
-    table before trading the linear pass for the index — the recall
-    target for decontamination is ~100, not the ~90s ANN search
-    tolerates.  All-integer counts; recall_pct is one round-6
-    division."""
-    exact = (semantic_decontam_hits(docs, probes, threshold=threshold,
-                                    text_col=text_col, id_col=id_col,
-                                    probe_id_col=probe_id_col, dim=dim)
-             .select(id_col, probe_id_col))
-    n_exact = exact.count()
-    rows = []
-    for np_ in nprobe_values:
-        for k in k_values:
-            got = semantic_decontam_ann(
-                spark, probes, index_dir, threshold=threshold, k=int(k),
-                nprobe=int(np_), text_col=text_col, id_col=id_col,
-                probe_id_col=probe_id_col, dim=dim)
-            n_got = got.join(exact, [id_col, probe_id_col],
-                             "left_semi").count()
-            rows.append((int(np_), int(k), int(n_got), int(n_exact)))
-    out = spark.createDataFrame(
-        rows, "nprobe int, nominate int, n_hits bigint, n_exact bigint")
-    return out.select(
-        "nprobe", "nominate", "n_hits", "n_exact",
-        F.round(F.col("n_hits") * 100.0
-                / F.greatest(F.col("n_exact"), F.lit(1)), 6)
-        .alias("recall_pct"))

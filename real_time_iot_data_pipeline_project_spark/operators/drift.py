@@ -147,10 +147,9 @@ def embedding_drift(old: DataFrame, new: DataFrame,
     of the text-profile PSI monitor — did the new release's embedding
     DISTRIBUTION move, measured as the per-centroid occupancy
     histogram of both releases under one SHARED pinned centroid set
-    (the persistent-index append contract: centroids come from the
-    baseline, so a bucket means the same region of embedding space in
-    both snapshots; re-deriving centroids per release would make the
-    histograms incomparable).  Text-feature PSI can read "stable"
+    (centroids come from the baseline, so a bucket means the same
+    region of embedding space in both snapshots; re-deriving centroids
+    per release would make the histograms incomparable).  Text-feature PSI can read "stable"
     while the corpus pivots semantically — new topics at the same
     length/punctuation profile are exactly the shift only an
     embedding-space monitor sees.

@@ -106,8 +106,7 @@ def quantize_error(
 # code_id ASC) via min(struct); the one per-(query, vec) reduction of
 # m lookup terms is DECIMAL-cast pre-sum (order-free, rule 1).
 # Codebooks are the md5-ordered hash sample of k corpus vectors (the
-# IVF centroid convention — kmeans_refine composes upstream the same
-# way build_index accepts refined centroids).
+# IVF centroid convention — kmeans_refine composes upstream).
 
 
 def _dot_d(a, b):
@@ -213,112 +212,6 @@ def _lit_doubles(vals) -> F.Column:
     comment above."""
     return F.expr(
         "array(" + ",".join(repr(float(v)) + "D" for v in vals) + ")")
-
-
-def _sql_elem(vec_sql: str, idx: int) -> str:
-    """One double-cast element access — the unrolled twin of
-    ``transform(v, x -> CAST(x AS DOUBLE))[idx]`` (0-based)."""
-    return f"CAST({vec_sql}[{idx}] AS DOUBLE)"
-
-
-def _sql_dot_lit(vec_sql: str, offset: int, lits) -> str:
-    """Unrolled ``_dot(slice(vec, offset+1, d), literal_vec)`` — the
-    identical left-fold value as a left-associative sum chain."""
-    return "(" + " + ".join(
-        f"{_sql_elem(vec_sql, offset + j)} * {repr(float(c))}D"
-        for j, c in enumerate(lits)) + ")"
-
-
-def _sql_self_dot(vec_sql: str, offset: int, d: int) -> str:
-    """Unrolled ``_dot(s, s)`` over the slice [offset, offset+d)."""
-    return "(" + " + ".join(
-        f"{_sql_elem(vec_sql, offset + j)} * {_sql_elem(vec_sql, offset + j)}"
-        for j in range(d)) + ")"
-
-
-def _collected_codebooks(codebooks: DataFrame):
-    """Collect a codebook frame to ``(m, d, {sub_id: [(code_id, cvec),
-    ...]})`` — m·k rows by construction (the bounded-collect posture:
-    codebooks are sampled/refined parameter tables, never corpus-
-    sized), sorted (sub_id, code_id) for deterministic expression
-    construction.  A pre-collected (m, d, by_sub) tuple passes
-    through, so one collect can feed both the encode and the LUT."""
-    if isinstance(codebooks, tuple):
-        return codebooks
-    rows = codebooks.select("sub_id", "code_id", "cvec").collect()
-    if not rows:
-        raise ValueError("empty codebooks")
-    by_sub: dict = {}
-    for r in rows:
-        by_sub.setdefault(int(r["sub_id"]), []).append(
-            (int(r["code_id"]), [float(v) for v in r["cvec"]]))
-    for sub in by_sub:
-        by_sub[sub].sort()
-    m = len(by_sub)
-    d = len(rows[0]["cvec"])
-    return m, d, by_sub
-
-
-def _py_self_dot(vec: list[float]) -> float:
-    """Driver-side replica of ``_dot(v, v)`` for a LITERAL codeword —
-    the same sequential left fold in IEEE doubles (the `_py_norm`
-    precedent, minus the sqrt), so inlining dot(b,b) as a literal
-    changes no value."""
-    s = 0.0
-    for v in vec:
-        fv = float(v)
-        s += fv * fv
-    return s
-
-
-def pq_encode_wide(df: DataFrame, codebooks: DataFrame,
-                   vec_col: str = "embedding",
-                   id_col: str = "vec_id",
-                   carry_cols: tuple[str, ...] = ()) -> DataFrame:
-    """PQ codes, WIDE form, computed MAP-SIDE (optimization round 15,
-    guide §2.3/§2.4): the m·k codebook collects to literals (bounded
-    by design) and every vector's m-int ``pq_codes`` array is computed
-    in one scan — array_min over unrolled (l2², code_id) structs per
-    subspace, the identical argmin comparator ``pq_encode``'s
-    min(struct) uses, with dot(b,b) pre-folded in Python (`_py_norm`
-    precedent) and all arithmetic generated as unrolled SQL (see the
-    unrolled-SQL block comment above).
-
-    Value-identical to ``pq_encode`` pivoted wide (pinned by test),
-    but the corpus is never posexploded ×m, never joined, and never
-    re-aggregated — the tall path's three corpus-sized exchanges
-    (groupBy(id, sub) argmin, groupBy(id) collect_list, join-back on
-    id) all disappear; at 100 TB the encode becomes a pure scan
-    stage.  ``carry_cols`` ride along so callers need no join-back.
-    Used by the PERSISTED store's code writers (the encode feeds a
-    write, its own stage); the inline topk operators keep the tall
-    plan, where the encode fuses with downstream joins and the
-    unrolled form measured slower (codegen size limits — see the
-    similarity.assign_centroids round-15 note)."""
-    m, d, by_sub = _collected_codebooks(codebooks)
-    vec_d = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    # the double-cast array and each subspace's self-dot are FACTORED
-    # into sub-projections (multi-referenced non-cheap aliases, so
-    # CollapseProject keeps them): per-codeword entries then reference
-    # attributes, keeping generated methods under Janino's 64 KB limit
-    code_exprs = []
-    for sub in sorted(by_sub):
-        off = sub * d
-        entries = ",".join(
-            f"named_struct('dist', ((`__sd{sub}` - 2.0D * "
-            f"{_sql_dot_lit('`__vd`', off, cv)}) + "
-            f"{repr(_py_self_dot(cv))}D), "
-            f"'c', {int(cid)})"
-            for cid, cv in by_sub[sub])
-        code_exprs.append(F.expr(f"array_min(array({entries})).c"))
-    step = df.select(F.col(id_col), *[F.col(c) for c in carry_cols],
-                     vec_d.alias("__vd"))
-    step = step.select(F.col(id_col), *[F.col(c) for c in carry_cols],
-                       F.col("__vd"),
-                       *[F.expr(_sql_self_dot("`__vd`", sub * d, d))
-                         .alias(f"__sd{sub}") for sub in sorted(by_sub)])
-    return step.select(F.col(id_col), *[F.col(c) for c in carry_cols],
-                       F.array(*code_exprs).alias("pq_codes"))
 
 
 def _lut_side(lut: DataFrame, broadcast_lut: bool) -> DataFrame:
@@ -639,8 +532,7 @@ def pq_refine(df: DataFrame, codebooks: DataFrame, iters: int = 1,
     cluster — pinned by test), which is exactly what ADC accuracy
     buys from.  At 100 TB: refine on a sample, encode the full
     corpus; each iteration is one broadcast join + one d× posexplode
-    shuffle of the training frame.  Composes with the persistent
-    store via build_index(pq_codebooks=refined)."""
+    shuffle of the training frame."""
     for _ in range(iters):
         m = int(codebooks.agg(F.countDistinct("sub_id")).head()[0])
         d = int(codebooks.select(F.size("cvec").alias("d")).head()["d"])
@@ -679,7 +571,7 @@ def pq_refined_recall_report(df: DataFrame, queries: DataFrame,
                              query_vec_col: str = "qvec") -> DataFrame:
     """Recall@k of RAW (md5-sampled) vs REFINED (pq_refine) codebooks
     at equal (m, kc) — the report that justifies paying for the Lloyd
-    step before building the persistent code store (X63, VERDICT r13
+    step before encoding a corpus (X63, VERDICT r13
     item 3): same memory, better codebooks, measured against the same
     brute-force full-precision l2 top-k.  Returns (variant ∈
     {'raw', 'refined'}, query_id, n_hits, k, recall_pct) on the
@@ -754,8 +646,8 @@ def sq_encode(df: DataFrame, vec_col: str = "embedding",
     quantize_error, so codes agree with q66's checksums).  One pure
     scan-stage ``transform`` over the array — no explode, no shuffle;
     the (mn, scale) grid rides along as d-sized literals.
-    ``carry_cols`` ride through so callers (the persisted SQ tier's
-    writer) need no join-back."""
+    ``carry_cols`` ride through so callers (ivfsq_topk's bucket id)
+    need no join-back."""
     mns, scales = dims if dims is not None else _sq_dim_arrays(df, vec_col)
     codes = F.transform(
         F.col(vec_col),

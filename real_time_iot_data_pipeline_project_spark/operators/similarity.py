@@ -5,7 +5,7 @@
   JVM-side, no Python. Top-k executes as TakeOrderedAndProject (per-
   partition heap, no global sort), so brute force is a clean linear scan
   even at 100 TB — it's the *baseline*, not the scale path.
-- ``hyperplane_lsh_buckets`` / ``cosine_near_dup_lsh``: random-hyperplane
+- ``cosine_near_dup_lsh``: random-hyperplane
   (sign) LSH. Hyperplanes are deterministic ±1 vectors derived from a
   seeded RNG, embedded as literals — so the same planes are expressible
   in the DuckDB oracle. Bucket join bounds the pair fan-out; exact cosine
@@ -97,19 +97,6 @@ def recommended_planes(n: int, bands: int = 4, target_bucket_rows: int = 64) -> 
     return bands * r
 
 
-def hyperplane_lsh_buckets(df: DataFrame, planes: list[list[float]],
-                           vec_col: str = "embedding",
-                           id_col: str = "vec_id") -> DataFrame:
-    """Sign-LSH bucket id per vector: bit_i = 1 iff plane_i · v > 0."""
-    vec_d = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    bucket = sum(
-        F.when(_dot(vec_d, F.array(*[F.lit(p) for p in plane])) > 0,
-               F.lit(2 ** i).cast("long")).otherwise(F.lit(0).cast("long"))
-        for i, plane in enumerate(planes)
-    )
-    return df.select(F.col(id_col), F.col(vec_col), bucket.alias("bucket"))
-
-
 def banded_lsh_buckets(df: DataFrame, planes: list[list[float]], bands: int,
                        vec_col: str = "embedding",
                        id_col: str = "vec_id") -> DataFrame:
@@ -170,21 +157,20 @@ def cosine_near_dup_lsh(df: DataFrame, planes: list[list[float]],
 
 def assign_centroids(df: DataFrame, centroids: DataFrame,
                      vec_col: str = "embedding",
-                     id_col: str = "vec_id",
-                     carry_cols: tuple[str, ...] = ()) -> DataFrame:
+                     id_col: str = "vec_id") -> DataFrame:
     """THE deterministic argmax-cosine assignment rule, written once:
     broadcast crossJoin + ``max_by(centroid_id, struct(csim,
     -centroid_id))`` (map-side combinable; -id = deterministic
     min-centroid tie-break). Returns (id_col, vec_col, centroid_id).
-    Shared by ivf_topk, kmeans_refine and the persistent index
-    (ann_index) so the build/append/search equivalence contracts can
-    never drift apart on the assignment expression.
+    Shared by ivf_topk, kmeans_refine, semantic_dedup and the
+    quantizers so their equivalence contracts can never drift apart on
+    the assignment expression.
 
     Norms are precomputed per OPERAND before the crossJoin — ‖v‖ once
     per row (not once per centroid) and ‖c‖ once per centroid (not
     once per corpus row): csim = dot/(‖v‖·‖c‖) is the identical
     expression tree per operand, so every value is bit-for-bit the one
-    the fused form produced (hash-gated q38/q119/q121/q125 re-verified
+    the fused form produced (hash-gated q38/q119/q125 re-verified
     on the change), at ~3× less array work on the n·C stage.
 
     Optimization-round-15 note (guide §1.1's empirical loop, recorded
@@ -202,20 +188,16 @@ def assign_centroids(df: DataFrame, centroids: DataFrame,
     vec_d = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     cvec_d = F.transform(F.col("cvec"), lambda x: x.cast("double"))
     lhs = df.select(F.col(id_col), F.col(vec_col),
-                    *[F.col(c) for c in carry_cols],
                     _norm(vec_d).alias("__vnorm"))
     rhs = centroids.select("centroid_id", "cvec",
                            _norm(cvec_d).alias("__cnorm"))
     return (
         lhs.crossJoin(F.broadcast(rhs))
-        .select(id_col, vec_col, *carry_cols, "centroid_id",
+        .select(id_col, vec_col, "centroid_id",
                 (_dot(vec_d, cvec_d)
                  / (F.col("__vnorm") * F.col("__cnorm"))).alias("csim"))
-        # id is unique; vec (and any carry_cols metadata — the
-        # filtered-search payload) rides along as a functionally-
-        # dependent key; carry_cols=() is the historical signature,
-        # bit-identical output
-        .groupBy(id_col, vec_col, *carry_cols)
+        # id is unique; vec rides along as a functionally-dependent key
+        .groupBy(id_col, vec_col)
         .agg(F.expr(
             "max_by(centroid_id, struct(csim, -centroid_id))"
         ).alias("centroid_id"))
@@ -305,10 +287,9 @@ def sampled_centroids(df: DataFrame, n_centroids: int,
                       vec_col: str = "embedding",
                       id_col: str = "vec_id") -> DataFrame:
     """THE deterministic centroid init, written once (shared by
-    ivf_topk and semantic_dedup; ann_index builds take any centroid
-    frame): a hash-sample of ``n_centroids`` vectors — order by md5 of
-    the id, decorrelated from insertion order, reproducible on any
-    engine/partitioning. Returns (centroid_id, cvec)."""
+    ivf_topk and semantic_dedup): a hash-sample of ``n_centroids``
+    vectors — order by md5 of the id, decorrelated from insertion
+    order, reproducible on any engine/partitioning. Returns (centroid_id, cvec)."""
     return (
         df.orderBy(F.md5(F.col(id_col).cast("string")), F.asc(id_col))
         .limit(n_centroids)

@@ -5,8 +5,9 @@ reference's executables (SURVEY.md §3):
   ``Wind_Processing.py:68-111``): bounded read → validate → clean →
   dedup → features → sink, with the same CLI surface
   (``Wind_Processing.py:113-128``).
-- ``run_streaming_job`` — entry point B: the docx notebook transform on a
-  live source (file/kafka), parquet+checkpoint sink.
+- entry point B lives in ``streaming/job.py`` (``start_parquet_sink``):
+  the docx notebook transform on a live source (file/kafka),
+  parquet+checkpoint sink.
 - ``dashboard_panels`` — entry point C (``Solar_Dashboard.py``): the
   dashboard's fan-out of aggregate queries over one cached DataFrame.
 """
@@ -148,9 +149,6 @@ def release_corpus(
     dsir_seed_path: str | None = None,
     dsir_threshold: float = 0.0,
     dsir_resample_n: int | None = None,
-    publish_index_dir: str | None = None,
-    publish_index_pq: str = "4,8",
-    publish_index_centroids: int | None = None,
 ) -> dict:
     """Entry point E — the full training-data RELEASE job: curate
     (q48's chain) → optional duplicate-span scrub (X39) → optional
@@ -682,9 +680,7 @@ def release_corpus(
                              min_quality, langs, n_shards, allow_drift,
                              mix_info, scrub_info, bpe_manifest,
                              embedding_drift, ml_info, recipe_info,
-                             decontam_info, nb_info, dsir_info,
-                             publish_index_dir, publish_index_pq,
-                             publish_index_centroids, lm_info,
+                             decontam_info, nb_info, dsir_info, lm_info,
                              topgram_info)
     finally:
         curated.unpersist()
@@ -699,9 +695,7 @@ def _release_body(spark, final, output_path, baseline_path, min_quality,
                   scrub_info=None, bpe_manifest=False,
                   embedding_drift=False, ml_info=None,
                   recipe_info=None, decontam_info=None,
-                  nb_info=None, dsir_info=None,
-                  publish_index_dir=None, publish_index_pq="4,8",
-                  publish_index_centroids=None, lm_info=None,
+                  nb_info=None, dsir_info=None, lm_info=None,
                   topgram_info=None) -> dict:
     import json as _json
 
@@ -743,10 +737,9 @@ def _release_body(spark, final, output_path, baseline_path, min_quality,
                       for r in report.collect()]  # ≤ n_features rows
         if embedding_drift:
             # the SEMANTIC gate next to the text-profile one (X50,
-            # q146's rule): both corpora embedded with the X31 hashing
-            # embedder, centroids pinned on the BASELINE (the
-            # persistent-index contract — buckets mean the same region
-            # of embedding space in both releases), occupancy folded
+            # q146's rule): both corpora embedded with the X31 hashing embedder,
+            # centroids pinned on the BASELINE (buckets mean the same
+            # region of embedding space in both releases), occupancy folded
             # through the one psi_from_cells tail so the verdict scale
             # matches the text rows and the same major_shift gate
             # applies.  New topics at an unchanged length/punct
@@ -842,57 +835,6 @@ def _release_body(spark, final, output_path, baseline_path, min_quality,
             "n_tokens": int(sum(r["n_bpe_tokens"] for r in bstats)),
             "by_lang": {r["detected_lang"]: int(r["n_bpe_tokens"])
                         for r in bstats},
-        }
-    if publish_index_dir:
-        # publish a SEARCHABLE vector index next to the shards (round
-        # 14, X35 + X62 composed): the released docs hashing-embedded
-        # (X31 — vocabulary-free, so no tokenizer artifact ships with
-        # the index) and built into the persistent IVF-PQ store keyed
-        # by doc_id, lang riding as filterable metadata.  Retrieval
-        # over the training corpus is how released data is actually
-        # audited (decontamination spot-checks, attribution queries,
-        # memorization probes) — publishing the index WITH the release
-        # makes those queries one search call instead of a corpus
-        # scan.  Unique docs only: a recipe release repeats (doc,
-        # epoch) rows and an id-unique store wants each doc once.
-        from .operators.ann_index import build_index
-        from .operators.embedding import hashing_embed_dense
-
-        uniq_docs = (final.select("doc_id", "text", "detected_lang")
-                     .dropDuplicates(["doc_id"]))
-        emb = (hashing_embed_dense(uniq_docs, dim=64)
-               .join(uniq_docs.select(
-                   "doc_id", F.col("detected_lang").alias("lang")),
-                   "doc_id")
-               .select(F.col("doc_id").alias("vec_id"), "embedding",
-                       "lang"))
-        pq_m, pq_kc = (int(x) for x in publish_index_pq.split(","))
-        # centroid count must GROW with the release (VERDICT r14 item
-        # 1: at a fixed C=16, a 100x release reads ~n/16 of the code
-        # rows per probe and DPP pruning buys almost nothing) — the
-        # default derives C ~ sqrt(n) from the embedded-doc count (the
-        # standard IVF sizing: probe cost and bucket size balance at
-        # the root), floored at 16; --publish-index-centroids pins it
-        # explicitly, and the manifest records whichever applied
-        if publish_index_centroids is None:
-            import math as _math
-
-            publish_index_centroids = max(
-                16, int(round(_math.sqrt(emb.count()))))
-        elif publish_index_centroids < 1:
-            raise ValueError(
-                f"publish_index_centroids must be >= 1, got "
-                f"{publish_index_centroids}")
-        build_index(emb, publish_index_dir,
-                    n_centroids=int(publish_index_centroids),
-                    meta_cols=("lang",), pq_m=pq_m, pq_kc=pq_kc)
-        manifest["published_index"] = {
-            "dir": publish_index_dir,
-            "n_vectors": int(spark.read.parquet(
-                f"{publish_index_dir}/data").count()),
-            "embedder": "hashing-64",
-            "pq": publish_index_pq,
-            "n_centroids": int(publish_index_centroids),
         }
     manifest["diff"] = diff_info
     with open(f"{output_path}/MANIFEST.json", "w") as fh:
@@ -1007,17 +949,15 @@ def refresh_annotations(
             "n_fresh": int(n_docs - n_reused)}
 
 
-def _parse_label_list(raw: str, flag: str = "--nb-keep-labels") -> tuple[str, ...]:
+def _parse_label_list(raw: str) -> tuple[str, ...]:
     """Comma-separated list: strip whitespace, drop empty tokens,
     refuse an all-empty result.  '--nb-keep-labels "a, b"' previously
     yielded (' b',) which matches no classifier label and silently
     filtered those docs out — the exact 'keeps nothing' failure the
-    nb_keep_labels guard exists to prevent (ADVICE r13).  ``flag``
-    names the CLI option in the error so a bad --meta-cols value
-    doesn't blame the wrong flag (ADVICE r14)."""
+    nb_keep_labels guard exists to prevent (ADVICE r13)."""
     labels = tuple(s.strip() for s in raw.split(",") if s.strip())
     if not labels:
-        raise ValueError(f"{flag} {raw!r} parses to an empty list")
+        raise ValueError(f"--nb-keep-labels {raw!r} parses to an empty list")
     return labels
 
 
@@ -1032,10 +972,7 @@ def main(argv: list[str] | None = None) -> None:
                             "compact-semantic-store",
                             "dq-audit", "cdc-apply",
                             "scd2-apply", "plan-audit",
-                            "refresh-annotations",
-                            "index-build", "index-append",
-                            "index-search", "index-delete",
-                            "index-compact", "index-report"])
+                            "refresh-annotations"])
     p.add_argument("input_path",
                    help="input directory to consume — EXCEPT for the "
                         "plan-audit domain, where it is a registry "
@@ -1131,20 +1068,6 @@ def main(argv: list[str] | None = None) -> None:
                    help="DSIR keep cutoff in log-weight units "
                         "(dsir_logw >= threshold; 0.0 = the seed "
                         "model likes the doc at least as much)")
-    p.add_argument("--publish-index", default=None,
-                   help="also build a searchable PQ vector index of "
-                        "the released docs at this dir (release "
-                        "domain; X31 hashing embeddings + the X62 "
-                        "store, lang as filterable metadata)")
-    p.add_argument("--publish-index-pq", default="4,8",
-                   help="M,K for the published index's PQ tier "
-                        "(used with --publish-index)")
-    p.add_argument("--publish-index-centroids", type=int, default=None,
-                   help="IVF centroid count for the published index "
-                        "(used with --publish-index; default derives "
-                        "~sqrt(n) from the released doc count, floored "
-                        "at 16 — centroid count must grow with the "
-                        "release or probe pruning stops paying)")
     p.add_argument("--dsir-resample", type=int, default=None,
                    help="keep N docs by importance RESAMPLING instead "
                         "of the threshold (release domain; X64, "
@@ -1200,166 +1123,8 @@ def main(argv: list[str] | None = None) -> None:
                    help="unique tiebreak column (scd2-apply)")
     p.add_argument("--buckets", type=int, default=16,
                    help="snapshot/dimension bucket count (fixed at creation)")
-    p.add_argument("--index", default=None,
-                   help="index directory (index-append/index-search "
-                        "domains; index-build writes to --output)")
-    p.add_argument("--ingest-id", type=int, default=None,
-                   help="pin the append's exactly-once generation id "
-                        "(index-append; required to RETRY a torn "
-                        "append — auto-allocation detects the torn "
-                        "state and names the id to pass here)")
-    p.add_argument("--n-centroids", type=int, default=16,
-                   help="IVF coarse centroid count (index-build)")
-    p.add_argument("--pq", default=None,
-                   help="materialize the PQ tier at build: 'M,K' = "
-                        "subspace count, codebook size (index-build; "
-                        "X62 — codes written once, appends encode "
-                        "against the pinned codebooks)")
-    p.add_argument("--pq-residual", action="store_true",
-                   help="PQ over residuals v - c(v) (index-build; "
-                        "X61's quality-correct formulation)")
-    p.add_argument("--pq-refine-iters", type=int, default=0,
-                   help="Lloyd iterations on the sampled PQ codebooks "
-                        "before pinning them (index-build; X63's "
-                        "production-quality path)")
-    p.add_argument("--meta-cols", default=None,
-                   help="comma-separated metadata columns stored "
-                        "alongside vectors for filtered search "
-                        "(index-build)")
-    p.add_argument("--k", type=int, default=10,
-                   help="neighbors per query (index-search)")
-    p.add_argument("--nprobe", type=int, default=4,
-                   help="probed coarse buckets per query (index-search)")
-    p.add_argument("--sq", action="store_true",
-                   help="additionally materialize the SQ8 tier: the "
-                        "pinned affine grid + d-int codes per vector "
-                        "(index-build; X80)")
-    p.add_argument("--use-sq", action="store_true",
-                   help="serve from the persisted SQ8 code tier "
-                        "(index-search; X80)")
-    p.add_argument("--use-pq", action="store_true",
-                   help="serve from the persisted PQ code tier instead "
-                        "of the float vectors (index-search)")
-    p.add_argument("--rerank", type=int, default=None,
-                   help="refine the top-R ADC candidates per query by "
-                        "exact full-precision l2 (index-search with "
-                        "--use-pq; X67 — output column exact_l2)")
     args = p.parse_args(argv)
     spark = get_spark(app_name=f"{args.domain}-processing")
-    if args.domain == "index-build":
-        # the ANN store as a CLI (VERDICT r13 item 6): build the IVF
-        # index — optionally with the X62 persisted PQ tier — from a
-        # (vec_id, embedding[, meta...]) parquet
-        from .operators.ann_index import build_index
-
-        if not args.output:
-            raise ValueError("index-build requires --output <index_dir>")
-        pq_m = pq_kc = None
-        if args.pq:
-            parts = [s.strip() for s in args.pq.split(",") if s.strip()]
-            if len(parts) != 2:
-                raise ValueError(f"--pq expects 'M,K', got {args.pq!r}")
-            pq_m, pq_kc = int(parts[0]), int(parts[1])
-        meta = (tuple(_parse_label_list(args.meta_cols,
-                                        flag="--meta-cols"))
-                if args.meta_cols else ())
-        build_index(spark.read.parquet(args.input_path), args.output,
-                    n_centroids=args.n_centroids, meta_cols=meta,
-                    pq_m=pq_m, pq_kc=(pq_kc if pq_kc else 8),
-                    pq_residual=args.pq_residual,
-                    pq_refine_iters=args.pq_refine_iters,
-                    sq=args.sq)
-        n = spark.read.parquet(f"{args.output}/data").count()
-        tier = (f", pq m={pq_m} kc={pq_kc}"
-                f"{' residual' if args.pq_residual else ''}"
-                if pq_m else "")
-        tier += ", sq8" if args.sq else ""
-        print(f"indexed {n} vectors into {args.output} "
-              f"({args.n_centroids} centroids{tier})")
-        return
-    if args.domain == "index-append":
-        from .operators.ann_index import append_index
-
-        if not args.index:
-            raise ValueError("index-append requires --index <index_dir>")
-        inc = spark.read.parquet(args.input_path)
-        append_index(inc, args.index, ingest_id=args.ingest_id)
-        print(f"appended {inc.count()} vectors to {args.index}")
-        return
-    if args.domain == "index-delete":
-        # input_path is an id parquet (vec_id column); tombstones only
-        # — searches exclude the ids immediately, compaction later
-        # drops the rows physically (X66)
-        from .operators.ann_index import delete_from_index
-
-        if not args.index:
-            raise ValueError("index-delete requires --index <index_dir>")
-        ids = spark.read.parquet(args.input_path)
-        delete_from_index(ids, args.index)
-        print(f"tombstoned {ids.select('vec_id').distinct().count()} "
-              f"ids in {args.index}")
-        return
-    if args.domain == "index-report":
-        # input_path is the index; prints the X68 health table (live /
-        # tombstoned / share / skew per stored centroid + PQ params) —
-        # the re-train and compact cues, as a CLI (--output writes it
-        # as parquet for dashboards)
-        from .operators.ann_index import index_report
-
-        rep = index_report(spark, args.input_path)
-        if args.output:
-            rep.write.mode("overwrite").parquet(args.output)
-            print(f"wrote {spark.read.parquet(args.output).count()} "
-                  f"centroid rows to {args.output}")
-        else:
-            rep.orderBy(F.desc("skew_factor")).show(100, truncate=False)
-        return
-    if args.domain == "index-compact":
-        # input_path is the index; --output the compacted copy
-        # (out-of-place — validate, then swap pointers)
-        from .operators.ann_index import compact_index
-
-        if not args.output:
-            raise ValueError("index-compact requires --output <new_dir>")
-        stats = compact_index(spark, args.input_path, args.output)
-        print(f"compacted {args.input_path} -> {args.output}: "
-              f"{stats['n_before']} -> {stats['n_after']} rows "
-              f"({stats['n_dropped']} dropped)")
-        return
-    if args.domain == "index-search":
-        # input_path is a (query_id, qvec) parquet; --use-pq serves
-        # from the persisted code tier (X62), else the float path
-        from .operators.ann_index import search_index_batch, search_index_pq
-
-        if not args.index:
-            raise ValueError("index-search requires --index <index_dir>")
-        queries = spark.read.parquet(args.input_path)
-        if args.rerank is not None and not args.use_pq:
-            raise ValueError(
-                "--rerank refines ADC candidates — it requires --use-pq")
-        if args.use_sq and args.use_pq:
-            raise ValueError(
-                "--use-sq and --use-pq pick different code tiers — "
-                "pass one")
-        if args.use_sq:
-            from .operators.ann_index import search_index_sq
-
-            out = search_index_sq(spark, args.index, queries, k=args.k,
-                                  nprobe=args.nprobe)
-        elif args.use_pq:
-            out = search_index_pq(spark, args.index, queries, k=args.k,
-                                  nprobe=args.nprobe,
-                                  rerank=args.rerank)
-        else:
-            out = search_index_batch(spark, args.index, queries,
-                                     k=args.k, nprobe=args.nprobe)
-        if args.output:
-            out.write.mode("overwrite").parquet(args.output)
-            print(f"wrote {spark.read.parquet(args.output).count()} "
-                  f"result rows to {args.output}")
-        else:
-            out.show(50, truncate=False)
-        return
     if args.domain == "plan-audit":
         # the engine's own physical-plan anti-pattern report, as a CLI
         # (plans/inspect.py): input_path is a registry query name (see
@@ -1539,9 +1304,6 @@ def main(argv: list[str] | None = None) -> None:
             dsir_seed_path=args.dsir_seed,
             dsir_threshold=args.dsir_threshold,
             dsir_resample_n=args.dsir_resample,
-            publish_index_dir=args.publish_index,
-            publish_index_pq=args.publish_index_pq,
-            publish_index_centroids=args.publish_index_centroids,
         )
         print(f"released {manifest['n_docs']} docs / "
               f"{manifest['n_tokens']} tokens to {args.output}")

@@ -1153,7 +1153,7 @@ def q37_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _list_cos_sql(a: str, b: str, cast: bool = True) -> str:
     """THE DuckDB cosine template, written once (round-9 review): every
-    ANN-tier oracle (q37/q38/q39/q119/q121) formats this same
+    ANN-tier oracle (q37/q38/q39/q119) formats this same
     expression, so a fix to the formulation can never apply to one
     oracle and silently break the identical-arithmetic contract the
     cross-engine hash checks rely on. ``cast=False`` for inputs that
@@ -2772,9 +2772,6 @@ DEFERRED: list[str] = [
     "q45_quality_score",
     # lang-ID runs verbatim inside q48 (detected_lang gate)
     "q29_lang_id",
-    # brute-force cosine top-k — the verification-tier twin of the
-    # in-window IVF production shape (q56/q79 precedent)
-    "q37_cosine_topk",
     # --- round-7 consolidation (VERDICT r6 item 1): nine subsumable
     # twins deferred so the monitoring tier (q86-q93) and the
     # stream-stream-join batch twin (q109) carry official gate rows.
@@ -2840,9 +2837,6 @@ DEFERRED: list[str] = [
     # multimodal feature surface: the real-decode tiers go FURTHER in
     # both in-window codecs (q80 PNG pixel stats, q91 WAV signal stats)
     "q36_multimodal_features",
-    # embedding near-dup: cosine-LSH twin of the in-window IVF ANN row
-    # (q38) — one ANN family row stays official
-    "q39_embedding_near_dup",
     # J5 forward as-of: direction mirror of in-window q81 (backward);
     # q85 (nearest) composes both directions in one query
     "q84_asof_forward",
@@ -2933,9 +2927,6 @@ DEFERRED: list[str] = [
     # multi-metric agg over the same columns, one groupBy deeper (ONE
     # corpus-stat row stays official, per the rotation sketch)
     "q65_corpus_stats",
-    # int8 quantization: broadcast-dim grid twin of the ANN family row
-    # (q38 IVF); round-trip + grid math pinned by tests/test_quantize
-    "q68_embedding_quantization",
     # source-leakage matrix: the verbatim 8-token chunk-hash overlap
     # core is q64's chunk dedup (same grid, same md5 key); the
     # contamination guarantee stays pinned by tests/test_contamination
@@ -3021,8 +3012,8 @@ DEFERRED: list[str] = [
     "q107_chi2_independence",
     # --- round-12 consolidation (VERDICT r11 item 1, rotation #8): six
     # subsumable twins deferred so the round-11 operators (z-ordered
-    # pruned read q136, mixture waterfill q137/q139, ANN recall curve
-    # q138, corpus diff q140, incremental annotation refresh q141)
+    # pruned read q136, mixture waterfill q137/q139, the ANN recall
+    # curve, corpus diff q140, incremental annotation refresh q141)
     # carry first-time official gate rows.  All six deferred twins
     # carried green rows in CORRECTNESS_r11 (the full r11 window was
     # 50/50 green); tests/test_export_order.py SUBSUMPTION maps each to
@@ -3048,15 +3039,15 @@ DEFERRED: list[str] = [
     # in-window q80 (RFC-2083 PNG); WAV signal stats stay value-pinned
     # by tests/test_multimodal.py and the local oracle gate
     "q91_audio_decode_stats",
-    # embed→ANN handoff: composition of two in-window parts — q118
-    # builds the same hashing embedding, q121 runs the same
-    # persistent-index batch search
+    # embed→ANN handoff: composition of two in-window parts — q169
+    # builds the same hashing embedding on both of its sides, q38 runs
+    # the same ivf_topk search
     "q119_embed_ann",
     # --- round-13 consolidation (VERDICT r12 item 1, rotation #9): ten
     # subsumable twins deferred so the round-12 operators (the hash-rank
     # BPE lookup q142, the multi-epoch mixture plan/expansion q143/q144,
     # source novelty q145, embedding release drift q146, Moore-Lewis
-    # selection q147, filtered vector search q148, the Naive Bayes
+    # selection q147, filtered vector search, the Naive Bayes
     # train/classify pair q149/q150, decontamination-by-excision q151)
     # carry first-time official gate rows.  All ten deferred twins
     # carried green rows in CORRECTNESS_r12 (the full r12 window was
@@ -3071,12 +3062,6 @@ DEFERRED: list[str] = [
     # the same broadcast-model scoring join at classifier tier (richer:
     # decimal-exact log-sum argmax over L labels, not one score column)
     "q117_model_scores",
-    # persistent-index batch search: promoted q148 runs the SAME
-    # search_index_batch callable (richer: with the metadata predicate
-    # composing PushedFilters with the DPP probe pruning); the
-    # unfiltered path stays pinned by q138's recall curve, which calls
-    # it once per nprobe value
-    "q121_index_batch_search",
     # text-profile PSI drift: promoted q146 folds the SAME
     # psi_from_cells tail (richer: baseline-pinned embedding-space
     # occupancy, the curation-invisible-shift gate); the batch text
@@ -3113,23 +3098,13 @@ DEFERRED: list[str] = [
     "q137_mixture_waterfill",
     # --- round-14 consolidation (VERDICT r13 item 1, rotation #10):
     # seven subsumable twins deferred so the round-13 operators (the
-    # filtered recall curve q152, DSIR importance weights q153 + the
+    # filtered recall curve, DSIR importance weights q153 + the
     # streaming pool fold q156, the PQ/ADC tier q154, IVF-PQ raw q155
     # and residual q158, the PQ recall curve q157) carry first-time
     # official gate rows.  All seven deferred twins carried green rows
     # through CORRECTNESS_r13 (the full r13 window was 50/50 green);
     # tests/test_export_order.py SUBSUMPTION maps each to in-window
     # survivors; every deferred oracle still runs in the local gate.
-    # inline IVF two-stage search: promoted q155 composes the SAME
-    # md5-sampled centroid ranking + argmax assignment + nprobe
-    # pruning (at the richer PQ-coded tier); promoted q148 gates the
-    # persistent-index filtered search of the same family
-    "q38_ivf_topk",
-    # unfiltered recall@k curve: promoted q152 runs the SAME
-    # ann_recall_report callable with the richer filtered reference
-    # (where=None is its degenerate case); promoted q157 gates the
-    # same spine/hits/recall assembly on the codebook axis
-    "q138_ann_recall",
     # Moore-Lewis cross-entropy selection: promoted q153's DSIR log
     # likelihood ratio is the importance-weighting GENERALIZATION of
     # the same seed-vs-pool contrast (Xie et al. 2023 frame
@@ -3156,10 +3131,10 @@ DEFERRED: list[str] = [
     "q150_stream_nb_train",
     # --- round-15 consolidation (VERDICT r14 item 1, rotation #11):
     # eleven subsumable twins deferred so the round-14 operators (the
-    # persisted PQ store search q159 + filtered q162, refined recall
-    # q160, DSIR resampling q161, streaming index ingestion q163,
-    # deletes q164, exact re-ranking q165, the store health report
-    # q166, cluster-balanced sampling q167, tokenizer fertility q168,
+    # persisted PQ store search + filtered search, refined recall
+    # q160, DSIR resampling q161, streaming index ingestion, deletes,
+    # exact re-ranking, the store health report, cluster-balanced
+    # sampling q167, tokenizer fertility q168,
     # semantic decontamination q169) carry first-time official gate
     # rows.  All eleven deferred twins carried green rows through
     # CORRECTNESS_r14 (the full r14 window was 50/50 green);
@@ -3183,37 +3158,18 @@ DEFERRED: list[str] = [
     # tier (the probe-store construction stays pinned by
     # tests/test_contamination.py and the release e2e)
     "q151_decontam_scrub",
-    # filtered recall@k curve: promoted q160 gates the same
-    # spine/hits/recall assembly (on the codebook axis) and promoted
-    # q162 gates the filtered production search at the persisted tier
-    # (PushedFilters composed with DPP — the richer X52 consumer)
-    "q152_filtered_ann_recall",
     # DSIR importance weights: promoted q161's resample IS q153's
     # score rule composed with the ticket lottery (its oracle wraps
     # q153's SQL as a CTE — the richer selection-step consumer)
     "q153_dsir_scores",
-    # PQ/ADC search: promoted q159 serves the SAME codebook/encode/
-    # LUT/ADC arithmetic from the persisted code tier (persisted ==
-    # inline pinned by test; q159's oracle is the same ADC SQL family)
-    "q154_pq_adc_topk",
-    # inline IVF-PQ raw: promoted q159's oracle IS q155's SQL — the
-    # persisted store is the production serving shape of the same
-    # two-stage probe + ADC rule (the q56/q79 production-twin rule)
-    "q155_ivfpq_topk",
     # streaming DSIR pool fold: its gated claim is fold == batch
     # (official r14); promoted q161 keeps the batch DSIR rule
-    # in-window and promoted q163 gates the identical exactly-once
-    # batch_id-keyed streaming fold contract on the index store
+    # in-window
     "q156_stream_dsir_pool",
     # PQ recall@k curve: promoted q160 runs the SAME pq recall spine
     # (raw anchor + refined variant at equal (m, kc) — the raw rung
     # rides inside the gated report)
     "q157_pq_recall",
-    # inline IVF-PQ residual: the persisted store serves raw AND
-    # residual from the same entry point (manifest-dispatched;
-    # persisted == inline residual pinned by test) — promoted q159
-    # carries the IVF-PQ family's official serving row
-    "q158_ivfpq_residual",
 ]
 
 
@@ -5304,62 +5260,6 @@ def q120_stream_heavy_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.unlink(state)
 
 
-def _index_batch_sql(n_centroids: int = 16, nprobe: int = 4,
-                     k: int = 10, pred: str | None = None) -> str:
-    """q121 oracle: the persistent-index BATCH search replayed in SQL —
-    md5-sampled centroids, argmax assignment, per-QUERY centroid
-    ranking (row_number ≤ nprobe), candidate scoring over the probed
-    (query, centroid) pairs, per-query top-k. Identical arithmetic to
-    q38's proven formulation, generalized over a query SET.  ``pred``
-    (q148) restricts the CANDIDATE rows before ranking — the filtered
-    vector-search pre-filter, so the top-k is taken over matching
-    candidates only."""
-    v_c = _list_cos_sql("e.embedding", "c.cvec")
-    c_q = _list_cos_sql("c.cvec", "q.qv")
-    v_q = _list_cos_sql("e.embedding", "q.qv")
-    return f"""
-    WITH q AS (
-      SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
-      FROM embeddings WHERE vec_id IN (0, 1, 2, 3, 4)
-    ),
-    c AS (
-      SELECT vec_id AS centroid_id, CAST(embedding AS DOUBLE[]) AS cvec
-      FROM embeddings
-      ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT {n_centroids}
-    ),
-    assigned AS (
-      SELECT vec_id, centroid_id FROM (
-        SELECT e.vec_id, c.centroid_id,
-               row_number() OVER (PARTITION BY e.vec_id
-                                  ORDER BY {v_c} DESC,
-                                           c.centroid_id ASC) AS rn
-        FROM embeddings e, c
-      ) WHERE rn = 1
-    ),
-    probes AS (
-      SELECT query_id, centroid_id FROM (
-        SELECT q.query_id, c.centroid_id,
-               row_number() OVER (PARTITION BY q.query_id
-                                  ORDER BY {c_q} DESC,
-                                           c.centroid_id ASC) AS rn
-        FROM q, c
-      ) WHERE rn <= {nprobe}
-    )
-    SELECT query_id, vec_id, cosine_sim FROM (
-      SELECT q.query_id, e.vec_id,
-             round({v_q}, 6) AS cosine_sim,
-             row_number() OVER (PARTITION BY q.query_id
-                                ORDER BY {v_q} DESC,
-                                         e.vec_id ASC) AS rn
-      FROM embeddings e
-      JOIN assigned a ON a.vec_id = e.vec_id
-      JOIN probes p ON p.centroid_id = a.centroid_id
-      JOIN q ON q.query_id = p.query_id
-      {'WHERE ' + pred if pred else ''}
-    ) WHERE rn <= {k}
-    """
-
-
 _PUNCT_RATIO_SQL = (
     "CASE WHEN length(text) = 0 THEN NULL ELSE "
     "CAST(length(regexp_replace(text, '[^!-/:-@\\[-`{-~]', '', 'g')) "
@@ -5443,11 +5343,11 @@ def q122_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _scratch_dir(name: str, sf_dir: str) -> str:
     """Per-process /tmp scratch dir for registry queries whose operator
-    includes a persist-to-disk stage (q121's index, q130's stream
-    sink+store): tagged by sf_dir so different scales never collide,
-    and by pid so two concurrent runners against the same sf_dir can't
-    race each other's rebuild (one sweep read a half-written q121 index
-    exactly once before this rule). Any stale copy from an earlier call
+    includes a persist-to-disk stage (q130's stream sink+store): tagged
+    by sf_dir so different scales never collide, and by pid so two
+    concurrent runners against the same sf_dir can't race each other's
+    rebuild (one sweep read a half-written store exactly once before
+    this rule). Any stale copy from an earlier call
     in this process is removed up front; the dir is removed at
     interpreter exit so repeated runs don't accumulate corpus-sized
     /tmp copies — within the process the returned (lazy) DataFrames
@@ -5463,35 +5363,6 @@ def _scratch_dir(name: str, sf_dir: str) -> str:
     atexit.register(shutil.rmtree, path, ignore_errors=True)
     return path
 
-
-
-@query("q121_index_batch_search", _index_batch_sql())
-def q121_index_batch_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X32 end-to-end, hash-gated (round 9): the PERSISTENT IVF index
-    built to parquet (data partitioned by centroid_id) and then served
-    a 5-query batch via search_index_batch — per-query nprobe centroid
-    ranking, dynamic-partition-pruned candidate join, per-query top-k.
-    The oracle replays the identical pipeline in SQL straight from the
-    base table, so a hash match proves BOTH the search arithmetic AND
-    the parquet round-trip fidelity of the on-disk index (floats
-    written and re-read bit-exactly).
-
-    The index is (re)built under /tmp per call — the registry contract
-    gives only (spark, sf_dir), and the build IS part of the operator
-    under test; the returned DataFrame lazily reads those files, so
-    they persist for the consumer (same lifecycle as the probe
-    tools' replica dirs; ~corpus-sized, /tmp-resident)."""
-    from .operators.ann_index import build_index, search_index_batch
-
-    emb = _t(spark, sf_dir, "embeddings")
-    idx = _scratch_dir("q121_index", sf_dir)
-    build_index(emb, idx, n_centroids=16)
-    queries = (emb.where(F.col("vec_id").isin(0, 1, 2, 3, 4))
-               .select(F.col("vec_id").alias("query_id"),
-                       F.col("embedding").alias("qvec")))
-    out = search_index_batch(spark, idx, queries, k=10, nprobe=4)
-    return out.select("query_id", "vec_id",
-                      F.round("cosine_sim", 6).alias("cosine_sim"))
 
 
 @query(
@@ -5834,8 +5705,8 @@ def q130_stream_span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     its own hashes — which makes the whole fold equal q127's rule under
     (batch, doc, pos) first-occurrence order, which is EXACTLY what the
     oracle replays (the same _dup_span_sql, order_sql overridden). The
-    /tmp sink+store are per-process and removed at exit (q121's
-    concurrent-sweep lifecycle, shared via _scratch_dir)."""
+    /tmp sink+store are per-process and removed at exit (the
+    concurrent-sweep lifecycle of _scratch_dir)."""
     from .streaming import curation
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
@@ -6191,9 +6062,8 @@ def q136_zorder_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan-asserted in tests/test_misc_ops.py) is exact. The files-read
     economics — the z layout needs ~2/16 files for this band where the
     x-sorted twin reads all 16 — are asserted by
-    test_zorder_pruned_read_skips_files via file_extents, mirroring how
-    q121 gates its persistent index: the on-disk artifact is the
-    operator under test (same _scratch_dir lifecycle). The events table
+    test_zorder_pruned_read_skips_files via file_extents: the on-disk
+    artifact is the operator under test (_scratch_dir lifecycle). The events table
     spans 30 days at every SF, so hour%256 covers the full domain and
     the band is never empty."""
     ev = _t(spark, sf_dir, "events")
@@ -6491,113 +6361,6 @@ def q141_incremental_annotate(spark: SparkSession, sf_dir: str) -> DataFrame:
     old, new = _release_pair(_t(spark, sf_dir, "documents"))
     return audit_ops.incremental_annotate(
         ann(old, keep_text=True), new.select("doc_id", "text"), ann)
-
-
-def _ann_recall_sql(n_centroids: int = 16, k: int = 10,
-                    nprobes: tuple[int, ...] = (1, 2, 4, 16),
-                    pred: str | None = None) -> str:
-    """q138 oracle: the recall@k curve replayed in SQL — q121's proven
-    index-search formulation generalized over an nprobe spine, joined
-    against the brute-force exact top-k (q37's formulation), with a
-    (nprobe × query) spine keeping zero-recall rows.  ``pred`` (q152,
-    the FILTERED recall curve) restricts the candidates of BOTH the
-    probed runs and the exact reference before their windows — the
-    X52 pre-filter on each side, so recall measures the filtered
-    search against the filtered ground truth."""
-    v_c = _list_cos_sql("e.embedding", "c.cvec")
-    c_q = _list_cos_sql("c.cvec", "q.qv")
-    v_q = _list_cos_sql("e.embedding", "q.qv")
-    np_list = ", ".join(str(int(n)) for n in nprobes)
-    return f"""
-    WITH q AS (
-      SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
-      FROM embeddings WHERE vec_id IN (0, 1, 2, 3, 4)
-    ),
-    c AS (
-      SELECT vec_id AS centroid_id, CAST(embedding AS DOUBLE[]) AS cvec
-      FROM embeddings
-      ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT {n_centroids}
-    ),
-    assigned AS (
-      SELECT vec_id, centroid_id FROM (
-        SELECT e.vec_id, c.centroid_id,
-               row_number() OVER (PARTITION BY e.vec_id
-                                  ORDER BY {v_c} DESC,
-                                           c.centroid_id ASC) AS rn
-        FROM embeddings e, c
-      ) WHERE rn = 1
-    ),
-    probes AS (
-      SELECT q.query_id, c.centroid_id,
-             row_number() OVER (PARTITION BY q.query_id
-                                ORDER BY {c_q} DESC,
-                                         c.centroid_id ASC) AS rn
-      FROM q, c
-    ),
-    nps AS (SELECT unnest([{np_list}]) AS nprobe),
-    ivf AS (
-      SELECT nprobe, query_id, vec_id FROM (
-        SELECT n.nprobe, q.query_id, e.vec_id,
-               row_number() OVER (PARTITION BY n.nprobe, q.query_id
-                                  ORDER BY {v_q} DESC,
-                                           e.vec_id ASC) AS rn
-        FROM nps n
-        JOIN probes p ON p.rn <= n.nprobe
-        JOIN assigned a ON a.centroid_id = p.centroid_id
-        JOIN embeddings e ON e.vec_id = a.vec_id
-        JOIN q ON q.query_id = p.query_id
-        {'WHERE ' + pred if pred else ''}
-      ) WHERE rn <= {k}
-    ),
-    exact AS (
-      SELECT query_id, vec_id FROM (
-        SELECT q.query_id, e.vec_id,
-               row_number() OVER (PARTITION BY q.query_id
-                                  ORDER BY {v_q} DESC,
-                                           e.vec_id ASC) AS rn
-        FROM embeddings e, q
-        {'WHERE ' + pred if pred else ''}
-      ) WHERE rn <= {k}
-    ),
-    hits AS (
-      SELECT i.nprobe, i.query_id, count(*) AS n_hits
-      FROM ivf i JOIN exact x
-        ON x.query_id = i.query_id AND x.vec_id = i.vec_id
-      GROUP BY 1, 2
-    )
-    SELECT n.nprobe, q.query_id,
-           CAST(COALESCE(h.n_hits, 0) AS BIGINT) AS n_hits,
-           {k} AS k,
-           CAST((COALESCE(h.n_hits, 0) * 100) // {k} AS BIGINT)
-             AS recall_pct
-    FROM nps n CROSS JOIN q
-    LEFT JOIN hits h ON h.nprobe = n.nprobe AND h.query_id = q.query_id
-    """
-
-
-@query("q138_ann_recall", _ann_recall_sql())
-def q138_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X45 — recall@k evaluation of the persistent IVF index
-    (ann_index.ann_recall_report): the nprobe sizing curve — per
-    (nprobe ∈ {1, 2, 4, 16}, query), how many of the brute-force exact
-    top-10 the probed search returns.  This is the measurement a user
-    runs before choosing nprobe; nprobe = n_centroids = 16 probes
-    every bucket and provably reaches recall 100 (same ranking rule
-    as the exact pass), anchoring the curve's top end inside the
-    gated rows themselves.  All-integer recall (n_hits, recall_pct =
-    n_hits·100 DIV k) so the hash gate is exact; the index build +
-    four DPP-pruned searches reuse q121's proven components verbatim
-    (same _scratch_dir lifecycle)."""
-    from .operators.ann_index import ann_recall_report, build_index
-
-    emb = _t(spark, sf_dir, "embeddings")
-    idx = _scratch_dir("q138_index", sf_dir)
-    build_index(emb, idx, n_centroids=16)
-    queries = (emb.where(F.col("vec_id").isin(0, 1, 2, 3, 4))
-               .select(F.col("vec_id").alias("query_id"),
-                       F.col("embedding").alias("qvec")))
-    return ann_recall_report(spark, emb, idx, queries, k=10,
-                             nprobe_values=(1, 2, 4, 16))
 
 
 @query("q142_bpe_hash_ranks", _bpe_freq_sql())
@@ -6929,40 +6692,6 @@ def q147_moore_lewis(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs, docs.where(F.col("source") == "src0"), ln2=LN2)
 
 
-@query("q148_filtered_ann", _index_batch_sql(pred="e.label < 3"))
-def q148_filtered_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X52 — filtered vector search (ann_index.search_index_batch
-    ``where=``): the metadata-constrained ANN query every production
-    vector store serves ("nearest neighbors WITH label < 3 / lang =
-    en / license = permissive").  The index stores metadata ALONGSIDE
-    each vector (build_index ``meta_cols`` — no side table), and the
-    predicate applies to the pruned candidate scan BEFORE scoring and
-    ranking: PRE-filter semantics, the exact top-k over matching
-    candidates in the probed partitions.  Post-filtering a plain
-    top-k instead under-fills k and misses every matching neighbor
-    ranked below the unfiltered cut — the classic filtered-ANN
-    failure mode, pinned by test alongside the nprobe=C exact-anchor
-    equivalence.  The oracle is q121's proven replica with the same
-    predicate inside the scoring subquery (SQL WHERE runs before
-    window functions, i.e. exactly the pre-filter), so the hash pins
-    build + metadata round-trip + filtered search end-to-end.  Scale:
-    the predicate lands in PushedFilters of the DPP-pruned scan —
-    filters compose with partition pruning instead of reading the
-    corpus."""
-    from .operators.ann_index import build_index, search_index_batch
-
-    emb = _t(spark, sf_dir, "embeddings")
-    idx = _scratch_dir("q148_index", sf_dir)
-    build_index(emb, idx, n_centroids=16, meta_cols=("label",))
-    queries = (emb.where(F.col("vec_id").isin(0, 1, 2, 3, 4))
-               .select(F.col("vec_id").alias("query_id"),
-                       F.col("embedding").alias("qvec")))
-    out = search_index_batch(spark, idx, queries, k=10, nprobe=4,
-                             where=F.col("label") < 3)
-    return out.select("query_id", "vec_id",
-                      F.round("cosine_sim", 6).alias("cosine_sim"))
-
-
 _NB_LANGID_SQL = f"""
     WITH train AS (
       SELECT lang AS label, {_NORM_SQL} AS norm FROM documents
@@ -7212,7 +6941,7 @@ def _pq_sql(m: int = 4, kc: int = 8, k: int = 10, dim: int = 64) -> str:
     (l2² ASC, code_id ASC), and the ADC top-k with the decimal
     pre-sum policy.  Every distance is the dot identity
     l2²(a,b) = dot(a,a) − 2·dot(a,b) + dot(b,b) over list_dot_product
-    — the q38/q121 proven pairing of similarity._dot."""
+    — the q38 proven pairing of similarity._dot."""
     d = dim // m
 
     def l2(a: str, b: str) -> str:
@@ -7270,66 +6999,15 @@ def _pq_sql(m: int = 4, kc: int = 8, k: int = 10, dim: int = 64) -> str:
     """
 
 
-def _rerank_tail_sql(k: int, rerank: int | None) -> str:
-    """The final ranking stage of the IVF-PQ oracle: plain ADC top-k,
-    or (q165, X67) ADC top-``rerank`` refined by exact full-precision
-    l2² against the stored vectors — the FAISS IndexRefineFlat
-    pattern, same dot-identity arithmetic as the exact recall passes."""
-    if rerank is None:
-        return f"""SELECT query_id, vec_id, adc_dist FROM (
-      SELECT query_id, vec_id, adc_dist,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY adc_dist ASC, vec_id ASC) AS rn
-      FROM adc
-    ) WHERE rn <= {k}"""
-    l2 = ("(list_dot_product(e.v, e.v)"
-          " - 2.0 * list_dot_product(e.v, q.qv)"
-          " + list_dot_product(q.qv, q.qv))")
-    return f""", cand AS (
-      SELECT query_id, vec_id FROM (
-        SELECT query_id, vec_id,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY adc_dist ASC, vec_id ASC) AS rn
-        FROM adc
-      ) WHERE rn <= {rerank}
-    )
-    SELECT query_id, vec_id, exact_l2 FROM (
-      SELECT cd.query_id, cd.vec_id,
-             round({l2}, 6) AS exact_l2,
-             row_number() OVER (PARTITION BY cd.query_id
-                                ORDER BY round({l2}, 6) ASC,
-                                         cd.vec_id ASC) AS rn
-      FROM cand cd
-      JOIN ev e ON e.vec_id = cd.vec_id
-      JOIN q ON q.query_id = cd.query_id
-    ) WHERE rn <= {k}"""
-
-
 def _ivfpq_sql(n_centroids: int = 16, nprobe: int = 4, m: int = 4,
-               kc: int = 8, k: int = 10, dim: int = 64,
-               pred: str | None = None,
-               sample_pred: str | None = None,
-               rerank: int | None = None) -> str:
+               kc: int = 8, k: int = 10, dim: int = 64) -> str:
     """q155 oracle: IVF-PQ replayed in DuckDB by composing the two
-    proven halves — q121's centroid sample / argmax assignment /
+    proven halves — q38's centroid sample / argmax assignment /
     per-query probe ranking, and q154's codebooks / encode / ADC LUT —
-    with the ADC restricted to vectors whose bucket the query probes.
-
-    ``pred`` (q162): a metadata predicate over alias ``e`` applied to
-    the CANDIDATES before scoring — X52's pre-filter semantics on the
-    persisted code tier (centroids, codebooks and assignment still
-    derive from the FULL corpus: the index is built unfiltered, the
-    filter rides the search).
-
-    ``sample_pred`` (q163): restricts the CENTROID and CODEBOOK
-    samples to a slice of the corpus (assignment, encode and search
-    still run over everything) — the pinned-parameter contract of a
-    grown store: an index built from the base slice and appended to
-    afterwards answers with the BASE's centroids and codebooks."""
+    with the ADC restricted to vectors whose bucket the query probes."""
     d = dim // m
     v_c = _list_cos_sql("e.embedding", "c.cvec")
     c_q = _list_cos_sql("c.cvec", "q.qv")
-    sw = f"WHERE {sample_pred}" if sample_pred else ""
 
     def l2(a: str, b: str) -> str:
         return (f"(list_dot_product({a}, {a})"
@@ -7344,7 +7022,7 @@ def _ivfpq_sql(n_centroids: int = 16, nprobe: int = 4, m: int = 4,
     WITH subs AS (SELECT unnest(range(0, {m})) AS sub_id),
     c AS (
       SELECT vec_id AS centroid_id, CAST(embedding AS DOUBLE[]) AS cvec
-      FROM embeddings {sw}
+      FROM embeddings
       ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT {n_centroids}
     ),
     assigned AS (
@@ -7371,7 +7049,7 @@ def _ivfpq_sql(n_centroids: int = 16, nprobe: int = 4, m: int = 4,
       SELECT CAST(embedding AS DOUBLE[]) AS v,
              row_number() OVER (
                ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS code_id
-      FROM embeddings {sw}
+      FROM embeddings
       ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT {kc}
     ),
     cb AS (SELECT code_id, sub_id, {sl('v')} AS cvec FROM cb0, subs),
@@ -7393,20 +7071,22 @@ def _ivfpq_sql(n_centroids: int = 16, nprobe: int = 4, m: int = 4,
              CAST({l2('qs.qsvec', 'cc.cvec')} AS DECIMAL(28,12)) AS term
       FROM qsub qs JOIN cb cc ON cc.sub_id = qs.sub_id
     ),
-    allowed AS (SELECT vec_id FROM embeddings e
-                {f"WHERE {pred}" if pred else ""}),
     adc AS (
       SELECT p.query_id, dd.vec_id,
              round(CAST(SUM(l.term) AS DOUBLE), 6) AS adc_dist
       FROM codes dd
-      JOIN allowed al ON al.vec_id = dd.vec_id
       JOIN assigned a ON a.vec_id = dd.vec_id
       JOIN probes p ON p.centroid_id = a.centroid_id
       JOIN lut l ON l.query_id = p.query_id
                AND l.sub_id = dd.sub_id AND l.code = dd.code
       GROUP BY p.query_id, dd.vec_id
     )
-    {_rerank_tail_sql(k, rerank)}
+    SELECT query_id, vec_id, adc_dist FROM (
+      SELECT query_id, vec_id, adc_dist,
+             row_number() OVER (PARTITION BY query_id
+                                ORDER BY adc_dist ASC, vec_id ASC) AS rn
+      FROM adc
+    ) WHERE rn <= {k}
     """
 
 
@@ -7765,7 +7445,7 @@ def q157_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     full-precision l2 top-10 the ADC search keeps.  PQ's 64× memory
     win has a recall price that grows as codebooks shrink; this is
     the measurement an operator reads before picking (m, k_codes),
-    the q138/q152 curve convention with codebook size as the axis.
+    the recall-curve convention with codebook size as the axis.
     The md5-ordered sample's PREFIX property means every rung derives
     from one codebook table (code_id ≤ k_codes), cross-engine by
     construction.  All-integer recall.  Scale: one full-precision
@@ -7787,7 +7467,7 @@ def q155_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared md5-sampled centroids restricts candidates to
     ~nprobe/n_centroids of the corpus, asymmetric distance over the
     m=4 PQ codes scores them without touching a float vector.  The
-    composition of the two gated halves (q121's probe/assignment,
+    composition of the two gated halves (q38's probe/assignment,
     q154's codebooks/ADC) as ONE hash-pinned row — how a 100 TB
     vector store both fits (PQ 64×) and answers in bounded work
     (IVF pruning).  Scale: the corpus-sized joins are int-keyed
@@ -7879,69 +7559,6 @@ def q153_dsir_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     return textops.dsir_scores(docs, seed, n_buckets=10_000)
 
 
-@query("q152_filtered_ann_recall",
-       _ann_recall_sql(pred="e.label < 3"))
-def q152_filtered_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X55 — FILTERED recall@k curve (ann_recall_report ``where=``,
-    VERDICT r12 item 4): a metadata predicate changes recall
-    semantics, not just the result set — candidates thin per probed
-    partition, so the same nprobe recalls less than q138's unfiltered
-    curve suggests, and an operator sizing nprobe for X52's filtered
-    searches had no curve to read.  Here the exact reference is the
-    brute-force top-10 over the FILTERED corpus (label < 3 — q148's
-    predicate) and each probed run is the X52 filtered search with
-    the same predicate, composing two already-gated operators into
-    the apples-to-apples filtered sizing report.  nprobe = 16 = C
-    still probes every partition and provably anchors recall 100.
-    All-integer recall; the oracle is q138's SQL with the predicate
-    inside both windows' subqueries (SQL WHERE runs before window
-    functions — the pre-filter on each side).  Scale: the four probed
-    runs ride DPP-pruned, predicate-pushed index scans; the exact
-    pass is one filtered corpus scan against the broadcast bounded
-    query sample."""
-    from .operators.ann_index import ann_recall_report, build_index
-
-    emb = _t(spark, sf_dir, "embeddings")
-    idx = _scratch_dir("q152_index", sf_dir)
-    build_index(emb, idx, n_centroids=16, meta_cols=("label",))
-    queries = (emb.where(F.col("vec_id").isin(0, 1, 2, 3, 4))
-               .select(F.col("vec_id").alias("query_id"),
-                       F.col("embedding").alias("qvec")))
-    return ann_recall_report(spark, emb, idx, queries, k=10,
-                             nprobe_values=(1, 2, 4, 16),
-                             where=F.col("label") < 3)
-
-
-@query("q159_pq_index_search", _ivfpq_sql())
-def q159_pq_index_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X62 — the PERSISTED PQ tier (ann_index build_index(pq_m=) /
-    search_index_pq, VERDICT r13 item 2): q155's IVF-PQ search served
-    from a store instead of recomputed per call — build_index
-    materializes per-subspace codebooks and the m-int PQ code of
-    every vector (codes partitioned by centroid_id next to the float
-    data), and the search reads CODES ONLY under the same dynamic
-    partition pruning and metadata pushdown as the float path.  The
-    oracle is LITERALLY q155's SQL: a green hash proves the parquet
-    round-trip of codebooks + codes changes nothing (the q156
-    fold==batch precedent applied to storage).  What the store buys
-    at 100 TB: the inline form re-samples codebooks and re-encodes
-    the whole corpus per query batch — here encode ran ONCE at build,
-    appends encode only the increment against the PINNED codebooks
-    (the X32 contract), and a probe scans ~nprobe/C of a table 64×
-    smaller than the vectors, with no assignment join at all
-    (centroid_id is the partition column).  /tmp store is
-    per-process, removed at exit."""
-    from .operators.ann_index import build_index, search_index_pq
-
-    emb = _t(spark, sf_dir, "embeddings")
-    idx = _scratch_dir("q159_pqidx", sf_dir)
-    build_index(emb, idx, n_centroids=16, pq_m=4, pq_kc=8)
-    queries = (emb.where(F.col("vec_id").isin(0, 1, 2, 3, 4))
-               .select(F.col("vec_id").alias("query_id"),
-                       F.col("embedding").alias("qvec")))
-    return search_index_pq(spark, idx, queries, k=10, nprobe=4)
-
-
 def _dsir_resample_sql(n: int = 200, max_weight: int = 64) -> str:
     """q161 oracle: q153's DSIR score SQL wrapped as a CTE, the pinned
     logw → ticket mapping (clamp(1, 64, 33 + floor(dsir_logw))), and
@@ -7995,10 +7612,8 @@ def q161_dsir_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _hashing_dense_ctes() -> str:
     """The X31 hashing-embedding replay (q118's rule) as a reusable
-    CTE chain ending in ``dense`` = (doc_id, embedding DOUBLE[64]) —
-    shared verbatim by the q169 (brute-force screen) and q170
-    (ANN-nominated screen) oracles so the two tiers can never drift
-    on the embedding arithmetic."""
+    CTE chain ending in ``dense`` = (doc_id, embedding DOUBLE[64]) for
+    the q169 screen's oracle."""
     return f"""tok AS (
       SELECT doc_id, unnest(string_split(lower(text), ' ')) AS t
       FROM documents
@@ -8207,212 +7822,6 @@ def q167_cluster_balanced_sample(spark: SparkSession,
                                             budget_frac=0.5)
 
 
-def _index_report_sql(n_centroids: int = 16, pq_m: int = 4,
-                      pq_kc: int = 8, pq_residual: int = 0) -> str:
-    """q166 oracle: the store health report replayed in DuckDB — the
-    q155 centroid sample + argmax assignment, the q164 tombstone set
-    (vec_id % 7 = 0) as a dead flag, per-centroid live/tombstoned
-    counts, q105's share/skew arithmetic on the live totals, and the
-    PQ tier's manifest parameters as constant columns (round 15,
-    VERDICT r14 item 4 — here the index is built WITH a (4, 8)
-    non-residual PQ tier, and every sampled centroid contains at
-    least itself, so the empty-centroid spine adds no rows)."""
-    v_c = _list_cos_sql("e.embedding", "c.cvec")
-    return f"""
-    WITH c AS (
-      SELECT vec_id AS centroid_id, CAST(embedding AS DOUBLE[]) AS cvec
-      FROM embeddings
-      ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT {n_centroids}
-    ),
-    assigned AS (
-      SELECT vec_id, centroid_id FROM (
-        SELECT e.vec_id, c.centroid_id,
-               row_number() OVER (PARTITION BY e.vec_id
-                                  ORDER BY {v_c} DESC,
-                                           c.centroid_id ASC) AS rn
-        FROM embeddings e, c
-      ) WHERE rn = 1
-    ),
-    per AS (
-      SELECT centroid_id,
-             CAST(SUM(CASE WHEN vec_id % 7 = 0 THEN 0 ELSE 1 END)
-                  AS BIGINT) AS n_vectors,
-             CAST(SUM(CASE WHEN vec_id % 7 = 0 THEN 1 ELSE 0 END)
-                  AS BIGINT) AS n_tombstoned
-      FROM assigned GROUP BY centroid_id
-    ),
-    tot AS (
-      SELECT CAST(SUM(n_vectors) AS BIGINT) AS total,
-             CAST(COUNT(*) AS BIGINT) AS n_cent
-      FROM per
-    )
-    SELECT p.centroid_id, p.n_vectors, p.n_tombstoned,
-           round(CAST(p.n_vectors AS DOUBLE) / t.total, 6) AS share,
-           round(CAST(p.n_vectors AS DOUBLE) * t.n_cent / t.total, 6)
-             AS skew_factor,
-           CAST({pq_m} AS INTEGER) AS pq_m,
-           CAST({pq_kc} AS INTEGER) AS pq_kc,
-           CAST({pq_residual} AS INTEGER) AS pq_residual
-    FROM per p CROSS JOIN tot t
-    """
-
-
-@query("q166_index_stats", _index_report_sql())
-def q166_index_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X68 — store health report (ann_index.index_report): per
-    occupied centroid, live vector count, tombstone backlog, corpus
-    share and skew factor (q105's diagnosis arithmetic applied to the
-    vector store) — the two signals a 100 TB index is operated by: a
-    hot centroid (skew ≫ 1) makes every probe of that bucket a
-    straggler (re-train or split), a fat tombstone backlog is the cue
-    to compact (X66).  Here: a PQ index over the full corpus with
-    vec_id % 7 == 0 tombstoned (q164's delete), reported.  One
-    narrow (id, centroid_id) scan + an id-sized tombstone join;
-    integer counts, round-6 ratios.  /tmp store is per-process,
-    removed at exit."""
-    from .operators.ann_index import (
-        build_index,
-        delete_from_index,
-        index_report,
-    )
-
-    emb = _t(spark, sf_dir, "embeddings")
-    idx = _scratch_dir("q166_pqidx", sf_dir)
-    build_index(emb, idx, n_centroids=16, pq_m=4, pq_kc=8)
-    delete_from_index(emb.where(F.col("vec_id") % 7 == 0)
-                      .select("vec_id"), idx, delete_id=0)
-    return index_report(spark, idx)
-
-
-@query("q165_pq_rerank_search", _ivfpq_sql(rerank=32))
-def q165_pq_rerank_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X67 — exact re-ranking over ADC candidates (search_index_pq
-    ``rerank=``): the FAISS `IndexRefineFlat` production pattern —
-    ADC over the persisted codes nominates the top-32 candidates per
-    query (cheap, lossy), then ONLY those 32·|queries| rows read
-    their full-precision vectors and re-rank by exact l2² (the same
-    dot-identity arithmetic every exact recall pass uses).  PQ's 64×
-    memory win keeps its recall price only until the refine stage
-    buys precision back for a bounded float read — never a corpus
-    scan (the candidate frame broadcasts onto the data read).  The
-    oracle composes q155's ADC CTEs with the exact-refine tail;
-    output is (query_id, vec_id, exact_l2), (exact ASC, id ASC)
-    top-10.  /tmp store is per-process, removed at exit."""
-    from .operators.ann_index import build_index, search_index_pq
-
-    emb = _t(spark, sf_dir, "embeddings")
-    idx = _scratch_dir("q165_pqidx", sf_dir)
-    build_index(emb, idx, n_centroids=16, pq_m=4, pq_kc=8)
-    queries = (emb.where(F.col("vec_id").isin(0, 1, 2, 3, 4))
-               .select(F.col("vec_id").alias("query_id"),
-                       F.col("embedding").alias("qvec")))
-    return search_index_pq(spark, idx, queries, k=10, nprobe=4,
-                           rerank=32)
-
-
-@query("q164_index_delete_search",
-       _ivfpq_sql(pred="e.vec_id % 7 != 0"))
-def q164_index_delete_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X66 — the vector store's DELETE story (ann_index
-    delete_from_index / tombstone anti-join / compact_index): a
-    production store must FORGET — takedowns, PII removal, retention —
-    without rewriting a 100 TB structure per request.  Deletes write
-    id tombstones under delete_id-keyed overwrite directories (the
-    ingest_id exactly-once contract), every search anti-joins them
-    before scoring, and a periodic out-of-place compaction drops the
-    rows physically.  Here: a PQ index over the full corpus,
-    vec_id % 7 == 0 tombstoned in two delete batches, searched from
-    codes — the oracle is q155's SQL with the candidate filter
-    vec_id % 7 != 0, so a green hash proves search-after-delete ==
-    search over a store that never held those vectors (centroids and
-    codebooks stay the FULL corpus's — parameters are pinned,
-    tombstones remove candidates, not structure).  Scale: the
-    tombstone frame is id-sized; the anti-join rides the pruned code
-    scan.  /tmp store is per-process, removed at exit."""
-    from .operators.ann_index import (
-        build_index,
-        delete_from_index,
-        search_index_pq,
-    )
-
-    emb = _t(spark, sf_dir, "embeddings")
-    idx = _scratch_dir("q164_pqidx", sf_dir)
-    build_index(emb, idx, n_centroids=16, pq_m=4, pq_kc=8)
-    doomed = emb.where(F.col("vec_id") % 7 == 0).select("vec_id")
-    # two delete batches (and one replayed) — the exactly-once rule
-    delete_from_index(doomed.where(F.col("vec_id") % 2 == 0), idx,
-                      delete_id=0)
-    delete_from_index(doomed.where(F.col("vec_id") % 2 != 0), idx,
-                      delete_id=1)
-    delete_from_index(doomed.where(F.col("vec_id") % 2 == 0), idx,
-                      delete_id=0)
-    queries = (emb.where(F.col("vec_id").isin(0, 1, 2, 3, 4))
-               .select(F.col("vec_id").alias("query_id"),
-                       F.col("embedding").alias("qvec")))
-    return search_index_pq(spark, idx, queries, k=10, nprobe=4)
-
-
-@query("q163_stream_index_append",
-       _ivfpq_sql(sample_pred="vec_id % 5 != 0"))
-def q163_stream_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X65 — STREAMING index ingestion, hash-gated end-to-end
-    (streaming/ann_stream.process_index_batch): a PQ index built from
-    the BASE slice (vec_id % 5 != 0) grows by two deterministic
-    micro-batches of the remaining vectors (pmod split — the
-    foreachBatch body driven directly with its batch_id contract, the
-    q156 pattern; ingest_id = batch_id + 1 keys each write as a
-    dynamic partition overwrite, so checkpoint replays rewrite
-    instead of duplicating).  The search then answers over the FULL
-    corpus.  The oracle is q155's SQL with centroids AND codebooks
-    sampled from the base slice only — a green hash proves the
-    grown store's pinned-parameter contract cross-engine: appends
-    encode against the BASE's centroids and codebooks (X32/X62), so
-    fold == batch-build-with-pinned-parameters.  /tmp store is
-    per-process, removed at exit."""
-    from .operators.ann_index import build_index, search_index_pq
-    from .streaming import ann_stream
-
-    emb = _t(spark, sf_dir, "embeddings")
-    idx = _scratch_dir("q163_pqidx", sf_dir)
-    base = emb.where(F.col("vec_id") % 5 != 0)
-    build_index(base, idx, n_centroids=16, pq_m=4, pq_kc=8)
-    incr = emb.where(F.col("vec_id") % 5 == 0)
-    for b in range(2):
-        ann_stream.process_index_batch(
-            incr.filter(F.pmod(F.col("vec_id"), F.lit(2)) == b), b, idx)
-    queries = (emb.where(F.col("vec_id").isin(0, 1, 2, 3, 4))
-               .select(F.col("vec_id").alias("query_id"),
-                       F.col("embedding").alias("qvec")))
-    return search_index_pq(spark, idx, queries, k=10, nprobe=4)
-
-
-@query("q162_pq_filtered_search", _ivfpq_sql(pred="e.label < 3"))
-def q162_pq_filtered_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X52 ∘ X62 — FILTERED search on the persisted PQ tier
-    (search_index_pq ``where=``): the metadata-constrained query
-    every production vector store serves ("nearest WITH label < 3"),
-    answered from CODES ONLY — the predicate sits on scan columns of
-    the code rows (metadata rides the code table, written at build),
-    so it pushes down (PushedFilters) and composes with the dynamic
-    partition pruning; PRE-filter semantics, exactly q148's rule at
-    the compressed tier.  The oracle is q155's SQL with the
-    candidate-filter CTE — the index is built from the FULL corpus
-    (centroids, codebooks, assignment unfiltered), the filter rides
-    the search.  Scale: the probed scan reads m ints per allowed
-    vector; no float vectors, no assignment join, no re-encode."""
-    from .operators.ann_index import build_index, search_index_pq
-
-    emb = _t(spark, sf_dir, "embeddings")
-    idx = _scratch_dir("q162_pqidx", sf_dir)
-    build_index(emb, idx, n_centroids=16, meta_cols=("label",),
-                pq_m=4, pq_kc=8)
-    queries = (emb.where(F.col("vec_id").isin(0, 1, 2, 3, 4))
-               .select(F.col("vec_id").alias("query_id"),
-                       F.col("embedding").alias("qvec")))
-    return search_index_pq(spark, idx, queries, k=10, nprobe=4,
-                           where=F.col("label") < 3)
-
-
 @query("q160_pq_refined_recall", _pq_refined_recall_sql())
 def q160_pq_refined_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X63 — refined-vs-raw PQ recall (quantize.pq_refine +
@@ -8437,195 +7846,6 @@ def q160_pq_refined_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
                        F.col("embedding").alias("qvec")))
     return quantize.pq_refined_recall_report(emb, queries, k=10, m=4,
                                              kc=8, iters=1)
-
-
-def _semantic_decontam_ann_sql(mod: int = 211, threshold: float = 0.8,
-                               n_centroids: int = 16, nprobe: int = 4,
-                               m: int = 4, kc: int = 8, k: int = 16,
-                               dim: int = 64) -> str:
-    """q170 oracle: the ANN-nominated semantic screen replayed in
-    DuckDB — the shared q169 hashing-dense CTEs feed q155's IVF-PQ
-    machinery (centroid sample / argmax assignment / codebooks /
-    encode / per-probe LUT / ADC restricted to probed buckets) with
-    the probe slice as the query set, the top-k ADC candidates per
-    probe nominated, and ONLY those pairs verified by the exact q169
-    cosine threshold."""
-    d = dim // m
-    v_c = _list_cos_sql("e.embedding", "c.cvec", cast=False)
-    c_q = _list_cos_sql("c.cvec", "q.qv", cast=False)
-    cos = _list_cos_sql("dd.embedding", "p.qv", cast=False)
-
-    def l2(a: str, b: str) -> str:
-        return (f"(list_dot_product({a}, {a})"
-                f" - 2.0 * list_dot_product({a}, {b})"
-                f" + list_dot_product({b}, {b}))")
-
-    def sl(v: str) -> str:
-        return (f"list_slice({v}, CAST(sub_id * {d} + 1 AS INTEGER), "
-                f"CAST(sub_id * {d} + {d} AS INTEGER))")
-
-    return f"""
-    WITH {_hashing_dense_ctes()},
-    subs AS (SELECT unnest(range(0, {m})) AS sub_id),
-    c AS (
-      SELECT doc_id AS centroid_id, embedding AS cvec
-      FROM dense
-      ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id LIMIT {n_centroids}
-    ),
-    assigned AS (
-      SELECT doc_id, centroid_id FROM (
-        SELECT e.doc_id, c.centroid_id,
-               row_number() OVER (PARTITION BY e.doc_id
-                                  ORDER BY {v_c} DESC,
-                                           c.centroid_id ASC) AS rn
-        FROM dense e, c
-      ) WHERE rn = 1
-    ),
-    q AS (SELECT doc_id AS probe_id, embedding AS qv
-          FROM dense WHERE doc_id % {mod} = 0),
-    probes AS (
-      SELECT probe_id, centroid_id FROM (
-        SELECT q.probe_id, c.centroid_id,
-               row_number() OVER (PARTITION BY q.probe_id
-                                  ORDER BY {c_q} DESC,
-                                           c.centroid_id ASC) AS rn
-        FROM q, c
-      ) WHERE rn <= {nprobe}
-    ),
-    cb0 AS (
-      SELECT embedding AS v,
-             row_number() OVER (
-               ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS code_id
-      FROM dense
-      ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id LIMIT {kc}
-    ),
-    cb AS (SELECT code_id, sub_id, {sl('v')} AS cvec FROM cb0, subs),
-    sub AS (SELECT doc_id, sub_id, {sl('embedding')} AS svec
-            FROM dense, subs),
-    codes AS (
-      SELECT doc_id, sub_id, code_id AS code FROM (
-        SELECT s.doc_id, s.sub_id, cc.code_id,
-               row_number() OVER (PARTITION BY s.doc_id, s.sub_id
-                                  ORDER BY {l2('s.svec', 'cc.cvec')} ASC,
-                                           cc.code_id ASC) AS rn
-        FROM sub s JOIN cb cc ON cc.sub_id = s.sub_id
-      ) WHERE rn = 1
-    ),
-    qsub AS (SELECT probe_id, sub_id, {sl('qv')} AS qsvec FROM q, subs),
-    lut AS (
-      SELECT probe_id, qs.sub_id, code_id AS code,
-             CAST({l2('qs.qsvec', 'cc.cvec')} AS DECIMAL(28,12)) AS term
-      FROM qsub qs JOIN cb cc ON cc.sub_id = qs.sub_id
-    ),
-    adc AS (
-      SELECT p.probe_id, dd.doc_id,
-             round(CAST(SUM(l.term) AS DOUBLE), 6) AS adc_dist
-      FROM codes dd
-      JOIN assigned a ON a.doc_id = dd.doc_id
-      JOIN probes p ON p.centroid_id = a.centroid_id
-      JOIN lut l ON l.probe_id = p.probe_id
-               AND l.sub_id = dd.sub_id AND l.code = dd.code
-      GROUP BY p.probe_id, dd.doc_id
-    ),
-    cand AS (
-      SELECT probe_id, doc_id FROM (
-        SELECT probe_id, doc_id,
-               row_number() OVER (PARTITION BY probe_id
-                                  ORDER BY adc_dist ASC,
-                                           doc_id ASC) AS rn
-        FROM adc
-      ) WHERE rn <= {k}
-    )
-    SELECT dd.doc_id, cand.probe_id, round({cos}, 6) AS cosine_sim
-    FROM cand
-    JOIN dense dd ON dd.doc_id = cand.doc_id
-    JOIN q p ON p.probe_id = cand.probe_id
-    WHERE {cos} >= {threshold}
-    """
-
-
-@query("q170_semantic_decontam_ann", _semantic_decontam_ann_sql())
-def q170_semantic_decontam_ann(spark: SparkSession,
-                               sf_dir: str) -> DataFrame:
-    """X72 — ANN-NOMINATED semantic decontamination
-    (contamination.build_semantic_index + semantic_decontam_ann,
-    VERDICT r14 item 2): the candidate/verify composition the X71
-    docstring prescribes for probe sets too wide for the linear
-    n·|probes| pass — the corpus' X31 hashing embeddings built ONCE
-    into the X62 store, each probe nominating its top-16 ADC
-    candidates from codes only (m ints per vector under DPP pruning,
-    zero re-encode), and the exact X71 cosine rule verifying exactly
-    those nominated pairs against the stored float vectors (the
-    q32→q128 candidate/verify precedent on the semantic tier).  The
-    hit set is provably ⊆ q169's exact screen (identical threshold on
-    identical embeddings — pinned by test); what nomination misses is
-    the ADC recall price, measured by semantic_decontam_ann_recall
-    before picking (nprobe, k).  Scale: the only corpus-sized stages
-    are the one-time embed+build (amortized across probe lists) and
-    one bounded-candidate float read — the per-screen cost tracks
-    |probes|, not docs × probes.  /tmp store is per-process, removed
-    at exit."""
-    from .operators import contamination
-
-    docs = _t(spark, sf_dir, "documents")
-    probes = (docs.where(F.col("doc_id") % 211 == 0)
-              .select(F.col("doc_id").alias("probe_id"),
-                      F.col("text")))
-    idx = _scratch_dir("q170_semidx", sf_dir)
-    contamination.build_semantic_index(docs, idx, dim=64,
-                                       n_centroids=16, pq_m=4, pq_kc=8)
-    return contamination.semantic_decontam_ann(spark, probes, idx,
-                                               threshold=0.8, k=16,
-                                               nprobe=4)
-
-
-@query("q171_index_lifecycle",
-       _ivfpq_sql(sample_pred="vec_id % 5 != 0",
-                  pred="e.vec_id % 7 != 0"))
-def q171_index_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X73 — the store's FULL LIFECYCLE as one gated row (VERDICT r14
-    item 7): build(pq) over the base slice → TWO streaming ingest
-    folds of the remainder (ann_stream's batch_id contract, X65) →
-    tombstone a delete set (X66) → out-of-place COMPACTION → serve
-    from the compacted store (X62).  This is the sequence a real
-    operator runs over a store's life; gating it end-to-end catches
-    contract drift BETWEEN the tiers that the per-tier gates
-    (q159/q163/q164) can't see — e.g. a compaction that re-derives
-    parameters instead of copying them, or an append generation the
-    compactor drops.  The oracle composes the two proven axes: q163's
-    pinned-parameter rule (centroids + codebooks sampled from the
-    BASE slice only) and q164's never-held rule (candidates exclude
-    the deleted ids) — a green hash proves the compacted store
-    answers exactly like a never-torn, never-held one under the
-    grown store's pinned parameters.  The compacted == tombstoned
-    search equality is additionally pinned by test.  Scale: each
-    stage carries its own gated shape; compaction is one
-    partition-parallel rewrite of live rows.  /tmp stores are
-    per-process, removed at exit."""
-    from .operators.ann_index import (
-        build_index,
-        compact_index,
-        delete_from_index,
-        search_index_pq,
-    )
-    from .streaming import ann_stream
-
-    emb = _t(spark, sf_dir, "embeddings")
-    idx = _scratch_dir("q171_life", sf_dir)
-    base = emb.where(F.col("vec_id") % 5 != 0)
-    build_index(base, idx, n_centroids=16, pq_m=4, pq_kc=8)
-    incr = emb.where(F.col("vec_id") % 5 == 0)
-    for b in range(2):
-        ann_stream.process_index_batch(
-            incr.filter(F.pmod(F.col("vec_id"), F.lit(2)) == b), b, idx)
-    delete_from_index(emb.where(F.col("vec_id") % 7 == 0)
-                      .select("vec_id"), idx, delete_id=0)
-    compacted = _scratch_dir("q171_compacted", sf_dir)
-    compact_index(spark, idx, compacted)
-    queries = (emb.where(F.col("vec_id").isin(0, 1, 2, 3, 4))
-               .select(F.col("vec_id").alias("query_id"),
-                       F.col("embedding").alias("qvec")))
-    return search_index_pq(spark, compacted, queries, k=10, nprobe=4)
 
 
 @query("q172_cluster_sample_report", _cluster_report_sql())
@@ -8937,7 +8157,7 @@ def q175_compression_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _ivfsq_sql(n_centroids: int = 16, nprobe: int = 4,
                k: int = 10) -> str:
     """q176 oracle: IVF-SQ replayed in DuckDB by composing the two
-    proven halves — q121's centroid sample / argmax assignment /
+    proven halves — q38's centroid sample / argmax assignment /
     per-query probe ranking, and q174's SQ8 grid / codes /
     reconstruction — with the asymmetric distance restricted to
     vectors whose bucket the query probes."""
@@ -9060,41 +8280,12 @@ def q177_topgram_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     return textops.topgram_report(docs)
 
 
-@query("q178_sq_index_search", _ivfsq_sql())
-def q178_sq_index_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X80 — batch serving over the PERSISTED SQ8 tier
-    (ann_index.build_index(sq=True) + search_index_sq): the store
-    gains its third code tier — the affine grid trained at build and
-    PINNED (appends encode against it, compaction copies it
-    verbatim), d int8 codes partitioned by (ingest_id, centroid_id)
-    next to the float data and the PQ codes.  Search reads d small
-    ints per vector under the same DPP pruning + metadata pushdown +
-    tombstone anti-join as the other tiers, reconstructs via X76's
-    exact arithmetic, and equals the inline ivfsq_topk on the same
-    parameters (pinned by test) — without re-training the grid or
-    re-encoding the corpus per call.  The oracle is q176's inline SQL
-    verbatim (the q159 precedent: persisted serving must answer
-    exactly like the inline composition it materializes).  Scale:
-    4x fewer bytes than the float path with in-bucket ranking
-    essentially exact — the q175 table's middle tier, now a store.
-    /tmp store is per-process, removed at exit."""
-    from .operators.ann_index import build_index, search_index_sq
-
-    emb = _t(spark, sf_dir, "embeddings")
-    idx = _scratch_dir("q178_sqidx", sf_dir)
-    build_index(emb, idx, n_centroids=16, sq=True)
-    queries = (emb.where(F.col("vec_id").isin(0, 1, 2, 3, 4))
-               .select(F.col("vec_id").alias("query_id"),
-                       F.col("embedding").alias("qvec")))
-    return search_index_sq(spark, idx, queries, k=10, nprobe=4)
-
-
 @query("q179_stream_lm_fold", _ngram_lm_sql())
 def q179_stream_lm_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X81 — streaming LM reference fold (streaming/lm_stream.py):
     the src0 reference arrives as TWO deterministic micro-batches
     (pmod split — the foreachBatch body driven directly with its
-    batch_id contract, the q156/q163 pattern), each appending its own
+    batch_id contract, the q156 pattern), each appending its own
     (prev, cur) counts under a batch_id-keyed overwrite; the corpus
     then scores against the FOLDED model.  The oracle is q173's SQL
     VERBATIM: integer counts merge exactly, so an LM folded from any
@@ -9157,7 +8348,7 @@ POST_WINDOW: list[str] = [
     # official window, so the two newest operators get hard rows one
     # round early; VERDICT r8 item 1.)
     # (round 10, rotation #6: q119 embed→ANN handoff, q120 streaming
-    # heavy-hitters fold, q121 persistent-index batch ANN, q122 drift
+    # heavy-hitters fold, the persistent-index batch ANN, q122 drift
     # monitor promoted INTO the official window.)
     # (round 11, rotation #7: q123-q135 — the round-9 late tier
     # (leakage-safe splits X36, temperature mixture X37, SemDeDup X38),
@@ -9197,16 +8388,6 @@ POST_WINDOW: list[str] = [
     # round-15 DEFERRED block.  New queries must be registered HERE
     # and scheduled in tools/coverage_ledger.py PLANNED_ROTATIONS, or
     # they silently displace the pinned window.)
-    # round 15: X72 ANN-nominated semantic decontamination (VERDICT
-    # r14 item 2 — search_index_pq nomination over the X62 store +
-    # exact X71 cosine verification of only the nominated pairs) —
-    # scheduled for rotation #12 (round 16)
-    "q170_semantic_decontam_ann",
-    # round 15: X73 store lifecycle gate (VERDICT r14 item 7 — build →
-    # stream-append → delete → compact → serve, one hash-gated row
-    # composing q163's pinned-parameter and q164's never-held rules) —
-    # scheduled for rotation #12 (round 16)
-    "q171_index_lifecycle",
     # round 15: X74 cluster-balanced sampling audit report (VERDICT
     # r14 item 8 — X37's before/after funnel convention on X69's
     # cluster mix) — scheduled for rotation #12 (round 16)
@@ -9229,11 +8410,6 @@ POST_WINDOW: list[str] = [
     # round 15: X79 Gopher top-n-gram repetition report — scheduled
     # for rotation #12 (round 16)
     "q177_topgram_report",
-    # round 15: X80 persisted SQ8 store tier (build sq=True +
-    # search_index_sq; oracle = q176's inline SQL, the q159
-    # persisted==inline precedent) — scheduled for rotation #12
-    # (round 16)
-    "q178_sq_index_search",
     # round 15: X81 streaming LM reference fold (batch_id-keyed count
     # appends; oracle = q173's SQL verbatim, the q156 fold==batch
     # precedent) — scheduled for rotation #12 (round 16)

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions import textfns
+from .upsert import _dir_exists
 
 DOC_SCHEMA = T.StructType([
     T.StructField("doc_id", T.LongType()),
@@ -89,19 +90,6 @@ def curate_stream(docs: DataFrame, watermark: str = "10 minutes",
         .dropDuplicatesWithinWatermark(["fingerprint"])
     )
     return annotate_and_filter(deduped, min_quality, langs)
-
-
-def _dir_exists(spark, path: str) -> bool:
-    """Explicit Hadoop-FS existence check — distinguishes "store not
-    created yet" from real read failures (corrupt footer, permission,
-    schema error), which must fail the batch so the checkpoint retries
-    it instead of silently near-deduping against an empty store. An
-    existing but EMPTY directory (what a crash between the corpus write
-    and the store writes can leave behind) counts as not-created."""
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    return fs.exists(hpath) and len(fs.listStatus(hpath)) > 0
 
 
 def process_corpus_batch(batch_df: DataFrame, batch_id: int, path: str,

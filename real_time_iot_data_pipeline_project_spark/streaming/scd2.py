@@ -38,10 +38,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..warehouse.history import scd2_apply_increment, scd2_from_history
-from .curation import _dir_exists
 from .upsert import (
     BUCKET_COL,
     _check_bucket_count,
+    _dir_exists,
     _read_meta,
     _with_bucket,
     _write_meta,

@@ -17,8 +17,7 @@ where a new vector bridges two groups formed in earlier batches. No
 per-batch group state is ever rewritten; merges are closed at read
 time.
 
-Centroids are pinned at ``init_semantic_store`` and never move (the
-persistent IVF index's append contract, operators/ann_index.py): the
+Centroids are pinned at ``init_semantic_store`` and never move: the
 fold assigns every batch against the SAME centroid frame, which is what
 makes per-batch work O(batch·C) assignment + batch-vs-store in-bucket
 pairs instead of a full recompute. Like the batch rule, the bucket
@@ -46,7 +45,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import graph, similarity
-from .curation import _dir_exists, _require_out_of_place
+from .curation import _require_out_of_place
+from .upsert import _dir_exists
 
 __all__ = [
     "init_semantic_store",
@@ -75,8 +75,7 @@ def init_semantic_store(centroids: DataFrame, store: str,
     batch saw the SAME centroids and rule, so re-initialising an
     in-flight store with different ones corrupts it (overwrite mode
     only so a driver-side retry of the init itself is idempotent; it
-    is not a re-centering mechanism — recentering means rebuild,
-    exactly like the persistent IVF index)."""
+    is not a re-centering mechanism — recentering means rebuild)."""
     spark = centroids.sparkSession
     centroids.select("centroid_id", "cvec") \
         .write.mode("overwrite").parquet(f"{store}/centroids")

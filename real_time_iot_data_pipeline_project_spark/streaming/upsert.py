@@ -34,8 +34,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .curation import _dir_exists
-
 BUCKET_COL = "__bucket"
 META_FILE = "_n_buckets"  # sidecar: the bucket count the snapshot was built with
 
@@ -54,6 +52,17 @@ def _fs_and_path(spark: SparkSession, path: str):
     hpath = jvm.org.apache.hadoop.fs.Path(path)
     fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
     return fs, hpath
+
+
+def _dir_exists(spark, path: str) -> bool:
+    """Explicit Hadoop-FS existence check — distinguishes "store not
+    created yet" from real read failures (corrupt footer, permission,
+    schema error), which must fail the batch so the checkpoint retries
+    it instead of silently merging against an empty store. An existing
+    but EMPTY directory (what a crash between two writes of one batch
+    can leave behind) counts as not-created."""
+    fs, hpath = _fs_and_path(spark, path)
+    return fs.exists(hpath) and len(fs.listStatus(hpath)) > 0
 
 
 def _read_meta(spark: SparkSession, snapshot_dir: str) -> int | None:

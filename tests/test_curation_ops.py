@@ -1910,86 +1910,6 @@ def test_semantic_decontam_catches_paraphrase_exact_screen_misses(spark):
         contamination.semantic_decontam_hits(docs, probes, threshold=0.0)
 
 
-def test_semantic_decontam_ann_planted_subset_and_values(spark, tmp_path):
-    """X72 (round 15): the ANN-nominated screen catches the reordered
-    paraphrase THROUGH the store (nomination from codes + exact cosine
-    verify) exactly like the exact screen does, skips the unrelated
-    doc, and on the real corpus its hit set is a subset of the exact
-    screen's with IDENTICAL cosine values on shared pairs (the
-    verification arithmetic is the same rule on the same embeddings);
-    the threshold validates."""
-    import pytest
-
-    from real_time_iot_data_pipeline_project_spark.operators import (
-        contamination,
-    )
-
-    probe_text = ("the quick brown fox jumps over the lazy dog "
-                  "while seven wizards watch quietly tonight")
-    reordered = ("tonight quietly watch wizards seven while dog "
-                 "lazy the over jumps fox brown quick the")
-    rows = [(1, probe_text), (2, reordered),
-            (3, "completely different subject matter entirely "
-                "unrelated financial markets collapse again")]
-    rows += [(10 + i, f"filler document number {i} about weather "
-                      f"station telemetry and region {i % 5} output")
-             for i in range(20)]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    probes = spark.createDataFrame([(100, probe_text)],
-                                   "probe_id long, text string")
-    idx = str(tmp_path / "semidx")
-    contamination.build_semantic_index(docs, idx, n_centroids=4,
-                                       pq_m=4, pq_kc=4)
-    got = {(r.doc_id, r.probe_id): r.cosine_sim for r in
-           contamination.semantic_decontam_ann(
-               spark, probes, idx, threshold=0.95, k=8,
-               nprobe=4).collect()}
-    assert got[(1, 100)] == 1.0   # verbatim copy nominated + verified
-    assert got[(2, 100)] == 1.0   # paraphrase: bag-identical embedding
-    assert (3, 100) not in got    # unrelated
-    exact = {(r.doc_id, r.probe_id): r.cosine_sim for r in
-             contamination.semantic_decontam_hits(
-                 docs, probes, threshold=0.95).collect()}
-    assert set(got) <= set(exact)
-    assert all(exact[p] == v for p, v in got.items())
-    with pytest.raises(ValueError, match="threshold"):
-        contamination.semantic_decontam_ann(spark, probes, idx,
-                                            threshold=1.5)
-
-
-def test_semantic_decontam_ann_recall_report(spark, tmp_path):
-    """X72's sizing curve on the real corpus: n_exact is the exact
-    screen's hit count at every rung, nominated hits never exceed it,
-    recall is monotone in the candidate width k at fixed nprobe (a
-    wider nomination list is a superset), and every value is the
-    integer-count round-6 division."""
-    from real_time_iot_data_pipeline_project_spark.operators import (
-        contamination,
-    )
-    from tests.conftest import SF_SMOKE
-
-    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
-    probes = (docs.where(F.col("doc_id") % 211 == 0)
-              .select(F.col("doc_id").alias("probe_id"), "text"))
-    idx = str(tmp_path / "semidx")
-    contamination.build_semantic_index(docs, idx, n_centroids=16,
-                                       pq_m=4, pq_kc=8)
-    exact_n = contamination.semantic_decontam_hits(
-        docs, probes, threshold=0.8).count()
-    rep = {(r.nprobe, r.nominate): r for r in
-           contamination.semantic_decontam_ann_recall(
-               spark, docs, probes, idx, threshold=0.8,
-               nprobe_values=(1, 16), k_values=(4, 64)).collect()}
-    assert len(rep) == 4
-    for r in rep.values():
-        assert r.n_exact == exact_n
-        assert 0 <= r.n_hits <= r.n_exact
-        assert r.recall_pct == round(r.n_hits * 100.0
-                                     / max(r.n_exact, 1), 6)
-    for np_ in (1, 16):
-        assert rep[(np_, 64)].n_hits >= rep[(np_, 4)].n_hits
-
-
 def test_cluster_balanced_report_matches_operator_membership(spark):
     """X74 (round 15): the report's per-centroid counts equal the
     OPERATOR's sample grouped by centroid exactly (shared

@@ -6,11 +6,19 @@ sink, and the sink feeds ``pipelines.dashboard_panels``.
 Station ids and capacities are written out here from the reference
 registries (``Solar_Generation.py:39-67``, ``Wind_Genration.py:50-54``),
 not read from the package, so the test is an oracle for the registry too.
+
+The pipeline's modules must also import without the LLM-curation tier:
+``test_pipeline_modules_load_no_curation_tier`` pins that in a fresh
+interpreter.
 """
 
 from __future__ import annotations
 
+import json
+import subprocess
+import sys
 from collections import Counter
+from pathlib import Path
 
 import pytest
 
@@ -80,3 +88,27 @@ def test_dashboard_panels_over_the_sink(spark, processed):
         assert 0.3 < corr <= 1.0
         classes = {r.wind_class for r in panels["wind_class_counts"].collect()}
         assert classes <= {"Calm", "Light", "Moderate", "Strong", "Storm"} and classes
+
+
+PKG = "real_time_iot_data_pipeline_project_spark"
+PIPELINE_MODULES = ["pipelines", "streaming.job", "streaming.upsert",
+                    "streaming.scd2", "warehouse.star", "warehouse.incremental"]
+CURATION_TIER = ["streaming.curation", "functions.textfns", "operators.dedup",
+                 "operators.tokenize"]
+
+
+def test_pipeline_modules_load_no_curation_tier():
+    """Importing the pipeline (entry points A-C, upsert, SCD2, the star
+    schema) in a fresh interpreter loads no module of the curation tier,
+    so deleting that tier cannot break the pipeline."""
+    code = (
+        "import importlib, json, sys\n"
+        f"for m in {PIPELINE_MODULES!r}:\n"
+        f"    importlib.import_module({PKG!r} + '.' + m)\n"
+        "print(json.dumps(sorted(sys.modules)))\n")
+    out = subprocess.run([sys.executable, "-c", code], check=True,
+                         capture_output=True, text=True,
+                         cwd=Path(__file__).resolve().parents[1])
+    loaded = set(json.loads(out.stdout.splitlines()[-1]))
+    assert {f"{PKG}.{m}" for m in PIPELINE_MODULES} <= loaded
+    assert sorted(loaded & {f"{PKG}.{m}" for m in CURATION_TIER}) == []

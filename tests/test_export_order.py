@@ -184,7 +184,6 @@ FLAGSHIP = [
     "q143_epoch_plan",
     "q145_source_novelty",
     "q146_embedding_drift",
-    "q148_filtered_ann",
     "q149_naive_bayes_langid",
     # (round 15, rotation #11: q151 rotated out — the window-grid
     # excision machinery is q129's gated rule verbatim against the
@@ -200,15 +199,10 @@ FLAGSHIP = [
     # resampling (X64), streaming index ingestion (X65), tombstone
     # deletes (X66), exact re-ranking (X67), the store health report
     # (X68), cluster-balanced sampling (X69), tokenizer fertility
-    # (X70), and the semantic decontamination screen (X71)
-    "q159_pq_index_search",
+    # (X70), and the semantic decontamination screen (X71); the
+    # persisted-store rows (X62, X65-X68) left with the index store
     "q160_pq_refined_recall",
     "q161_dsir_resample",
-    "q162_pq_filtered_search",
-    "q163_stream_index_append",
-    "q164_index_delete_search",
-    "q165_pq_rerank_search",
-    "q166_index_stats",
     "q167_cluster_balanced_sample",
     "q168_tokenizer_fertility",
     "q169_semantic_decontam",
@@ -287,19 +281,32 @@ FLAGSHIP = [
 # hash-checkable backlog is again zero — every registry query outside
 # the approx sketch tier has now carried an official green row in
 # some round.
+# Vector-index cut (ROADMAP item 5): the persisted ANN index store
+# and everything that reached it were deleted, taking seven window
+# rows with them (q148/q159/q162-q166).  The seven deferred twins
+# whose only survivors were among them (q37/q38/q39/q68/q154/q155/
+# q158) were promoted back into the window to refill it to 50.
 EXPECTED_WINDOW = [
-    "q23_ewma", "q27_iot_pipeline",
+    "q23_ewma",
+    "q27_iot_pipeline",
     "q32_minhash_lsh_pairs",
+    "q37_cosine_topk",
+    "q38_ivf_topk",
+    "q39_embedding_near_dup",
     "q57_cube_rollup",
-    "q79_winnow_overlap_bounded", "q47_session_windows",
-    "q50_salted_join", "q53_dedup_clusters",
+    "q79_winnow_overlap_bounded",
+    "q47_session_windows",
+    "q50_salted_join",
+    "q53_dedup_clusters",
     "q54_tfidf_top_terms",
     "q48_training_data_pipeline",
     "q62_shard_stats",
     "q64_chunk_dedup",
+    "q68_embedding_quantization",
     "q75_incremental_dedup",
     "q80_image_decode_stats",
-    "q86_time_weighted_avg", "q88_ohlc_bars",
+    "q86_time_weighted_avg",
+    "q88_ohlc_bars",
     "q92_feature_matrix",
     "q93_conversion_funnel",
     "q94_shipping_priority",
@@ -314,20 +321,21 @@ EXPECTED_WINDOW = [
     "q129_dup_span_incremental",
     "q133_bpe_sequence_packing",
     "q136_zorder_pruned_read",
-    "q139_waterfill_sample", "q140_corpus_diff",
+    "q139_waterfill_sample",
+    "q140_corpus_diff",
     "q141_incremental_annotate",
-    "q142_bpe_hash_ranks", "q143_epoch_plan",
+    "q142_bpe_hash_ranks",
+    "q143_epoch_plan",
     "q145_source_novelty",
     "q146_embedding_drift",
-    "q148_filtered_ann", "q149_naive_bayes_langid",
-    "q159_pq_index_search",
+    "q149_naive_bayes_langid",
+    "q158_ivfpq_residual",
+    "q155_ivfpq_topk",
+    "q154_pq_adc_topk",
     "q161_dsir_resample",
-    "q169_semantic_decontam", "q168_tokenizer_fertility",
+    "q169_semantic_decontam",
+    "q168_tokenizer_fertility",
     "q167_cluster_balanced_sample",
-    "q166_index_stats",
-    "q165_pq_rerank_search", "q164_index_delete_search",
-    "q163_stream_index_append",
-    "q162_pq_filtered_search",
     "q160_pq_refined_recall",
 ]
 
@@ -394,12 +402,6 @@ SUBSUMPTION = {
     "q45_quality_score": ["q48_training_data_pipeline"],
     # lang-ID runs verbatim inside q48 (detected_lang gate)
     "q29_lang_id": ["q48_training_data_pipeline"],
-    # brute-force cosine top-k is the verification tier of the ANN
-    # family (r15 re-point: former co-survivor q152 deferred) — q148
-    # gates the probed production search of the same cosine ranking
-    # rule; the brute-force verification arithmetic stays pinned by
-    # the local oracle gate and the recall reports' exact pass
-    "q37_cosine_topk": ["q148_filtered_ann"],
     # --- round 7 (VERDICT r6 item 1: open slots for q86-q93 + q109) ---
     # W1 latest-per-key: max_by(struct) winner-per-key is q88's OHLC
     # open/close core
@@ -462,9 +464,6 @@ SUBSUMPTION = {
     # multimodal feature surface: the real-decode tier goes further
     # (r12 re-point: q91 deferred — q80 carries the codec family row)
     "q36_multimodal_features": ["q80_image_decode_stats"],
-    # embedding near-dup: ANN family row stays with the persistent
-    # filtered search (r14 re-point: former survivor q38 deferred)
-    "q39_embedding_near_dup": ["q148_filtered_ann"],
     # forward as-of = direction mirror of the asof_join callable that
     # q92's feature matrix runs (r9 re-point: former survivor q81
     # deferred; r12 re-point: q85 deferred — q92 carries the family)
@@ -542,12 +541,6 @@ SUBSUMPTION = {
     # corpus-level stat rollup: q62's per-shard stats is the same
     # multi-metric agg over the same columns, one groupBy deeper
     "q65_corpus_stats": ["q62_shard_stats"],
-    # int8 scalar quantization: the embedding-compression family row
-    # is the persisted PQ store (richer: per-subspace codebooks + ADC
-    # served from codes written once; r15 re-point: former survivor
-    # q154 deferred into q159's serving path); round-trip + grid math
-    # pinned by tests/test_quantize.py
-    "q68_embedding_quantization": ["q159_pq_index_search"],
     # source-leakage matrix: the verbatim 8-token chunk-hash overlap
     # core is q64's chunk-dedup grid (same md5 key); contamination
     # guarantee pinned by tests/test_contamination.py
@@ -653,10 +646,9 @@ SUBSUMPTION = {
     "q91_audio_decode_stats": ["q80_image_decode_stats"],
     # embed→ANN handoff = composition of two in-window parts (r15
     # re-point: former co-survivor q118 deferred — promoted q169
-    # builds the same hashing embedding on both of its sides; promoted
-    # q148 runs the same search_index_batch callable)
-    "q119_embed_ann": ["q169_semantic_decontam",
-                       "q148_filtered_ann"],
+    # builds the same hashing embedding on both of its sides; the
+    # persistent-index search co-survivor left with the index store)
+    "q119_embed_ann": ["q169_semantic_decontam"],
     # --- round 13 (rotation #9, VERDICT r12 item 1: open slots for
     # the round-12 operators q142-q151) ---
     # batch Misra-Gries summary: q120's streaming fold hash-gates
@@ -667,13 +659,6 @@ SUBSUMPTION = {
     # the same broadcast-model scoring join at classifier tier
     # (richer: decimal-exact log-sum argmax over L labels)
     "q117_model_scores": ["q149_naive_bayes_langid"],
-    # persistent-index batch search: promoted q148 runs the SAME
-    # search_index_batch callable (richer: metadata predicate
-    # composing PushedFilters with DPP); promoted q162 gates the same
-    # filtered probed search at the persisted code tier (r15 re-point:
-    # former co-survivor q152 deferred)
-    "q121_index_batch_search": ["q148_filtered_ann",
-                                "q162_pq_filtered_search"],
     # text-profile PSI drift: promoted q146 folds the SAME
     # psi_from_cells tail at the richer embedding-space tier; the
     # text rows stay exercised by the release drift-gate e2e tests
@@ -707,17 +692,6 @@ SUBSUMPTION = {
                                "q139_waterfill_sample"],
     # --- round 14 (rotation #10, VERDICT r13 item 1: open slots for
     # the round-13 operators q152-q158) ---
-    # inline IVF two-stage search: promoted q159 composes the SAME
-    # md5-sampled centroid ranking + argmax assignment + nprobe
-    # pruning at the richer persisted PQ tier (r15 re-point: former
-    # survivor q155 deferred — q159's oracle IS its SQL); q148 gates
-    # the persistent filtered search of the same family
-    "q38_ivf_topk": ["q159_pq_index_search", "q148_filtered_ann"],
-    # unfiltered recall@k curve: promoted q160 gates the same
-    # spine/hits/recall assembly (raw anchor + refined variant on the
-    # codebook axis; r15 re-point: former survivors q152/q157
-    # deferred, themselves subsumed by q160/q162)
-    "q138_ann_recall": ["q160_pq_refined_recall"],
     # Moore-Lewis selection: promoted q161's DSIR resample composes
     # the importance-weighting generalization of the same seed-vs-pool
     # contrast (Xie et al. 2023 §2: Moore-Lewis is the per-token
@@ -741,11 +715,8 @@ SUBSUMPTION = {
     # the membership is q139's integer-ticket hash lottery
     "q144_epoch_expand": ["q143_epoch_plan", "q139_waterfill_sample"],
     # streaming NB corpus fold: fold == batch of integer bucket counts
-    # (official r13); q149 pins the batch model + argmax rule, q163
-    # gates the exactly-once batch_id-keyed streaming fold contract
-    # (r15 re-point: former co-survivor q156 deferred)
-    "q150_stream_nb_train": ["q149_naive_bayes_langid",
-                             "q163_stream_index_append"],
+    # (official r13); q149 pins the batch model + argmax rule
+    "q150_stream_nb_train": ["q149_naive_bayes_langid"],
     # --- round 15 (rotation #11, VERDICT r14 item 1: open slots for
     # the round-14 operators q159-q169) ---
     # hashing embedder: promoted q169 builds the SAME X31 embedding on
@@ -767,35 +738,16 @@ SUBSUMPTION = {
     # tests/test_contamination.py and the release e2e)
     "q151_decontam_scrub": ["q129_dup_span_incremental",
                             "q169_semantic_decontam"],
-    # filtered recall@k curve: promoted q160 gates the same
-    # spine/hits/recall assembly and promoted q162 gates the filtered
-    # production search at the persisted tier
-    "q152_filtered_ann_recall": ["q160_pq_refined_recall",
-                                 "q162_pq_filtered_search"],
     # DSIR importance weights: promoted q161's resample IS q153's
     # score rule composed with the ticket lottery (its oracle wraps
     # q153's SQL as a CTE)
     "q153_dsir_scores": ["q161_dsir_resample"],
-    # PQ/ADC search: promoted q159 serves the SAME codebook/encode/
-    # LUT/ADC arithmetic from the persisted code tier (persisted ==
-    # inline pinned by test)
-    "q154_pq_adc_topk": ["q159_pq_index_search"],
-    # inline IVF-PQ raw: promoted q159's oracle IS q155's SQL — the
-    # persisted store is the production serving shape
-    "q155_ivfpq_topk": ["q159_pq_index_search"],
     # streaming DSIR pool fold: fold == batch landed officially (r14);
-    # promoted q161 keeps the batch DSIR rule in-window, promoted
-    # q163 gates the identical exactly-once streaming fold contract
-    "q156_stream_dsir_pool": ["q161_dsir_resample",
-                              "q163_stream_index_append"],
+    # promoted q161 keeps the batch DSIR rule in-window
+    "q156_stream_dsir_pool": ["q161_dsir_resample"],
     # PQ recall@k curve: promoted q160 runs the SAME pq recall spine
     # with the raw rung riding inside the gated report
     "q157_pq_recall": ["q160_pq_refined_recall"],
-    # inline IVF-PQ residual: the persisted store serves raw AND
-    # residual from the same entry point (manifest-dispatched;
-    # persisted == inline residual pinned by test) — q159 carries the
-    # IVF-PQ family's official serving row
-    "q158_ivfpq_residual": ["q159_pq_index_search"],
 }
 
 

@@ -946,64 +946,6 @@ def test_release_cli_dsir_resample_wiring(spark, tmp_path):
     assert m["dsir_selection"]["n_docs_kept"] == 7 == m["n_docs"]
 
 
-def test_release_publish_index_searchable(spark, tmp_path):
-    """--publish-index (round 14, X35 ∘ X62): the release builds a
-    searchable PQ index of the released docs — every released doc_id
-    is in the store (and nothing else), a doc's own embedding finds it
-    as the top hit through the code tier, the lang metadata filters,
-    and the manifest records the stage."""
-    from real_time_iot_data_pipeline_project_spark.operators.ann_index import (
-        search_index_pq,
-    )
-    from real_time_iot_data_pipeline_project_spark.operators.embedding import (
-        hashing_embed_sparse,
-        to_dense,
-    )
-
-    rel = str(tmp_path / "rel")
-    idx = str(tmp_path / "relidx")
-    m = pipelines.release_corpus(spark, _docs_path(), rel, n_shards=2,
-                                 publish_index_dir=idx)
-    assert m["published_index"]["dir"] == idx
-    assert m["published_index"]["n_vectors"] == m["n_docs"]
-    released = spark.read.json(f"{rel}/data").select("doc_id").distinct()
-    stored = (spark.read.parquet(f"{idx}/data")
-              .select(F.col("vec_id").alias("doc_id")).distinct())
-    assert sorted(r.doc_id for r in released.collect()) \
-        == sorted(r.doc_id for r in stored.collect())
-
-    # a released doc's own embedding finds itself through the codes
-    probe_id = released.orderBy("doc_id").head().doc_id
-    probe_doc = (spark.read.json(f"{rel}/data")
-                 .where(F.col("doc_id") == probe_id)
-                 .select("doc_id", "text").dropDuplicates(["doc_id"]))
-    qvec = (to_dense(hashing_embed_sparse(probe_doc), dim=64)
-            .select(F.col("doc_id").alias("query_id"),
-                    F.col("embedding").alias("qvec")))
-    hits = search_index_pq(spark, idx, qvec, k=3, nprobe=16,
-                           rerank=10).collect()
-    assert hits[0].vec_id == probe_id or any(
-        h.vec_id == probe_id for h in hits)
-    # metadata filter works on the published store
-    en_only = search_index_pq(spark, idx, qvec, k=100, nprobe=16,
-                              where=F.col("lang") == "en")
-    langs = (spark.read.parquet(f"{idx}/data")
-             .join(en_only.select(F.col("vec_id")), "vec_id")
-             .select("lang").distinct().collect())
-    assert {r.lang for r in langs} <= {"en"}
-
-
-def test_release_cli_publish_index_wiring(spark, tmp_path):
-    rel = str(tmp_path / "clirel")
-    idx = str(tmp_path / "cliidx")
-    pipelines.main(["release", _docs_path(), "--output", rel,
-                    "--shards", "1", "--publish-index", idx,
-                    "--publish-index-pq", "4,4"])
-    m = json.load(open(f"{rel}/MANIFEST.json"))
-    assert m["published_index"]["pq"] == "4,4"
-    assert m["published_index"]["n_vectors"] == m["n_docs"] > 0
-
-
 def test_release_semantic_screen_drops_paraphrase(spark, tmp_path):
     """--screen-probes-semantic (round 15, X71's tier as a release
     stage): a REORDERED copy of an eval probe survives the verbatim
@@ -1077,57 +1019,6 @@ def test_release_cli_semantic_screen_wiring(spark, tmp_path):
     m = json.load(open(f"{rel}/MANIFEST.json"))
     assert m["decontamination"]["semantic"]["threshold"] == 0.9
     assert m["decontamination"]["semantic"]["n_docs_dropped"] >= 0
-
-
-def test_release_publish_index_centroid_sizing(spark, tmp_path):
-    """Round 15 (VERDICT r14 item 3): the published index's centroid
-    count scales with the release — the default derives ~sqrt(n) from
-    the embedded-doc count (floored at 16) instead of pinning 16
-    regardless of size, --publish-index-centroids overrides it, the
-    manifest records whichever applied, and the store's own health
-    report shows the centroid spine at that width with no bucket
-    holding a pathological share."""
-    import math
-
-    from real_time_iot_data_pipeline_project_spark.operators.ann_index import (
-        index_report,
-    )
-
-    rel = str(tmp_path / "rel")
-    idx = str(tmp_path / "relidx")
-    m = pipelines.release_corpus(spark, _docs_path(), rel, n_shards=1,
-                                 publish_index_dir=idx)
-    n_vec = m["published_index"]["n_vectors"]
-    want_c = max(16, int(round(math.sqrt(n_vec))))
-    assert m["published_index"]["n_centroids"] == want_c
-    rep = index_report(spark, idx).collect()
-    assert len(rep) == want_c            # the stored-centroid spine
-    assert sum(r.n_vectors for r in rep) == n_vec
-    assert max(r.share for r in rep) < 0.5   # no pathological bucket
-    assert all(r.pq_m == 4 and r.pq_kc == 8 for r in rep)
-
-    # explicit override pins the count and the manifest records it
-    rel2 = str(tmp_path / "rel2")
-    idx2 = str(tmp_path / "relidx2")
-    m2 = pipelines.release_corpus(spark, _docs_path(), rel2, n_shards=1,
-                                  publish_index_dir=idx2,
-                                  publish_index_centroids=8)
-    assert m2["published_index"]["n_centroids"] == 8
-    assert len(index_report(spark, idx2).collect()) == 8
-    with pytest.raises(ValueError, match="publish_index_centroids"):
-        pipelines.release_corpus(spark, _docs_path(),
-                                 str(tmp_path / "bad"), n_shards=1,
-                                 publish_index_dir=str(tmp_path / "bi"),
-                                 publish_index_centroids=0)
-
-    # CLI wiring
-    rel3 = str(tmp_path / "rel3")
-    idx3 = str(tmp_path / "relidx3")
-    pipelines.main(["release", _docs_path(), "--output", rel3,
-                    "--shards", "1", "--publish-index", idx3,
-                    "--publish-index-centroids", "12"])
-    m3 = json.load(open(f"{rel3}/MANIFEST.json"))
-    assert m3["published_index"]["n_centroids"] == 12
 
 
 def test_release_lm_filter_keeps_operator_membership(spark, tmp_path):

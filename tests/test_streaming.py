@@ -2278,112 +2278,6 @@ def test_streaming_dsir_sink_engine_equals_direct(spark, tmp_path):
         == key(dsir_stream.dsir_pool_counts(spark, direct_store))
 
 
-def test_streaming_index_append_fold_and_replay(spark, tmp_path):
-    """X65: an index grown by micro-batches equals the batch build
-    with the base's PINNED centroids and codebooks (q163's gate
-    claim, pinned here directly); a replayed batch is idempotent
-    (the ingest_id dynamic-overwrite contract — no duplicate rows);
-    empty batches are no-ops."""
-    from real_time_iot_data_pipeline_project_spark.operators import (
-        ann_index,
-    )
-    from real_time_iot_data_pipeline_project_spark.streaming import (
-        ann_stream,
-    )
-    from tests.conftest import SF_SMOKE
-
-    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
-    base = emb.where(F.col("vec_id") % 5 != 0)
-    incr = emb.where(F.col("vec_id") % 5 == 0)
-    grown = str(tmp_path / "grown")
-    ann_index.build_index(base, grown, n_centroids=8, pq_m=4, pq_kc=4)
-    for b in range(2):
-        ann_stream.process_index_batch(
-            incr.filter(F.pmod(F.col("vec_id"), F.lit(2)) == b), b,
-            grown)
-    # checkpoint replay of batch 0 + an empty batch: both no-ops
-    ann_stream.process_index_batch(
-        incr.filter(F.pmod(F.col("vec_id"), F.lit(2)) == 0), 0, grown)
-    ann_stream.process_index_batch(incr.limit(0), 7, grown)
-    n_total = emb.count()
-    assert spark.read.parquet(f"{grown}/data").count() == n_total
-    assert spark.read.parquet(f"{grown}/pq/codes").count() == n_total
-
-    rebuilt = str(tmp_path / "rebuilt")
-    ann_index.build_index(
-        emb, rebuilt,
-        centroids=spark.read.parquet(f"{grown}/centroids"),
-        pq_m=4, pq_kc=4,
-        pq_codebooks=spark.read.parquet(f"{grown}/pq/codebooks"))
-    q = (emb.where(F.col("vec_id").isin(0, 3))
-         .select(F.col("vec_id").alias("query_id"),
-                 F.col("embedding").alias("qvec")))
-    got = sorted(ann_index.search_index_pq(spark, grown, q, k=8,
-                                           nprobe=3).collect())
-    want = sorted(ann_index.search_index_pq(spark, rebuilt, q, k=8,
-                                            nprobe=3).collect())
-    assert got == want
-    # the float path serves the grown store identically too
-    got_f = sorted(ann_index.search_index_batch(spark, grown, q, k=8,
-                                                nprobe=3).collect())
-    want_f = sorted(ann_index.search_index_batch(spark, rebuilt, q,
-                                                 k=8,
-                                                 nprobe=3).collect())
-    assert got_f == want_f
-
-
-def test_streaming_index_sink_engine_equals_direct(spark, tmp_path):
-    """availableNow stream-engine run == direct foreachBatch-body
-    invocation (the equivalence q163's direct-drive gate builds on):
-    both grown stores answer searches identically regardless of how
-    the engine batched the increments."""
-    from real_time_iot_data_pipeline_project_spark.operators import (
-        ann_index,
-    )
-    from real_time_iot_data_pipeline_project_spark.streaming import (
-        ann_stream,
-    )
-    from tests.conftest import SF_SMOKE
-
-    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
-    base = emb.where(F.col("vec_id") % 5 != 0)
-    incr = emb.where(F.col("vec_id") % 5 == 0)
-    src = tmp_path / "vec_in"
-    src.mkdir()
-    for b in range(2):
-        (incr.filter(F.pmod(F.col("vec_id"), F.lit(2)) == b)
-         .coalesce(1).write.mode("overwrite")
-         .parquet(str(src / f"b{b}.parquet")))
-
-    streamed = str(tmp_path / "streamed")
-    ann_index.build_index(base, streamed, n_centroids=8, pq_m=4,
-                          pq_kc=4)
-    vec_stream = (spark.readStream
-                  .schema("vec_id long, embedding array<float>, "
-                          "label int")
-                  .option("maxFilesPerTrigger", 1)
-                  .parquet(str(src) + "/*/"))
-    qh = ann_stream.start_index_append_sink(
-        vec_stream, str(tmp_path / "idx_ckpt"), streamed)
-    qh.awaitTermination(120)
-
-    direct = str(tmp_path / "direct")
-    ann_index.build_index(base, direct, n_centroids=8, pq_m=4, pq_kc=4)
-    for b in range(2):
-        ann_stream.process_index_batch(
-            incr.filter(F.pmod(F.col("vec_id"), F.lit(2)) == b), b,
-            direct)
-
-    q = (emb.where(F.col("vec_id").isin(0, 3))
-         .select(F.col("vec_id").alias("query_id"),
-                 F.col("embedding").alias("qvec")))
-    got = sorted(ann_index.search_index_pq(spark, streamed, q, k=8,
-                                           nprobe=3).collect())
-    want = sorted(ann_index.search_index_pq(spark, direct, q, k=8,
-                                            nprobe=3).collect())
-    assert got == want
-
-
 # ----------------------------------------------- streaming LM fold (X81)
 
 def test_streaming_lm_fold_equals_batch(spark, tmp_path):

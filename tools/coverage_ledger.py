@@ -95,15 +95,12 @@ PLANNED_ROTATIONS: dict[int, tuple[int, list[str]]] = {
     # silently displace the pinned window.)
     # rotation #12 — the round-15 additions
     16: (12, [
-        "q170_semantic_decontam_ann",
-        "q171_index_lifecycle",
         "q172_cluster_sample_report",
         "q173_ngram_lm_perplexity",
         "q174_sq_topk",
         "q175_compression_recall",
         "q176_ivfsq_topk",
         "q177_topgram_report",
-        "q178_sq_index_search",
         "q179_stream_lm_fold",
     ]),
 }

@@ -92,53 +92,6 @@ def probe_query(name: str):
     return p
 
 
-_PQ_INDEX_CACHE: dict[str, str] = {}
-
-
-def _cleanup_pq_cache() -> None:
-    """Decade sweeps would otherwise leave corpus-sized PQ index
-    copies in /tmp (ADVICE r14) — every cached dir is removed at
-    interpreter exit, like the other probes' scratch dirs."""
-    import shutil
-
-    for cache in (_PQ_INDEX_CACHE, _SEM_INDEX_CACHE):
-        for d in cache.values():
-            shutil.rmtree(d, ignore_errors=True)
-
-
-import atexit  # noqa: E402
-
-atexit.register(_cleanup_pq_cache)
-
-
-def probe_pq_search_only(spark, sf_dir: str) -> dict:
-    """The persisted-PQ payoff, isolated (round 14, X62): build the
-    index ONCE per corpus (cached across the decade sweep), then time
-    ONLY search_index_pq — the serving path reads m ints per vector
-    under DPP pruning with no assignment join, so its wall should stay
-    ~flat while the inline q155 probe (rebuild per call) tracks the
-    corpus."""
-    import tempfile
-
-    from real_time_iot_data_pipeline_project_spark.operators import (
-        ann_index,
-    )
-
-    emb = registry._t(spark, sf_dir, "embeddings")
-    idx = _PQ_INDEX_CACHE.get(sf_dir)
-    if idx is None:
-        idx = tempfile.mkdtemp(prefix="x100_pqidx_")
-        ann_index.build_index(emb, idx, n_centroids=16, pq_m=4, pq_kc=8)
-        _PQ_INDEX_CACHE[sf_dir] = idx
-    queries = (emb.where(F.col("vec_id").isin(0, 1, 2, 3, 4))
-               .select(F.col("vec_id").alias("query_id"),
-                       F.col("embedding").alias("qvec")))
-    t0 = time.monotonic()
-    n = ann_index.search_index_pq(spark, idx, queries, k=10,
-                                  nprobe=4).count()
-    return {"sec": round(time.monotonic() - t0, 2), "rows": n}
-
-
 def probe_semantic_fixed_probes(spark, sf_dir: str) -> dict:
     """X71 at the production shape: |probes| pinned to the sf0.1
     slice (~0.5% of 6k docs) at every decade while the CORPUS scales —
@@ -158,40 +111,6 @@ def probe_semantic_fixed_probes(spark, sf_dir: str) -> dict:
     t0 = time.monotonic()
     n = contamination.semantic_decontam_hits(docs, probes,
                                              threshold=0.8).count()
-    return {"sec": round(time.monotonic() - t0, 2), "rows": n}
-
-
-_SEM_INDEX_CACHE: dict[str, str] = {}
-
-
-def probe_semantic_ann_screen_only(spark, sf_dir: str) -> dict:
-    """X72 at the production shape (round 15): the semantic index is
-    built ONCE per corpus (cached across the decade sweep — the
-    amortized build is the store's whole point) and the probe set is
-    PINNED to the sf0.1 slice at every decade; only the screen itself
-    (nomination from codes + exact verify of nominated pairs) is
-    timed.  Expectation: the nominated-pair count is k·|probes| at
-    every decade, so the screen's wall should be dominated by the
-    pruned code read — far flatter than the corpus."""
-    import tempfile
-
-    from real_time_iot_data_pipeline_project_spark.operators import (
-        contamination,
-    )
-
-    docs = registry._t(spark, sf_dir, "documents")
-    probes = (registry._t(spark, SF01, "documents")
-              .where(F.col("doc_id") % 211 == 0)
-              .select(F.col("doc_id").alias("probe_id"), "text"))
-    idx = _SEM_INDEX_CACHE.get(sf_dir)
-    if idx is None:
-        idx = tempfile.mkdtemp(prefix="x100_semidx_")
-        contamination.build_semantic_index(docs, idx, n_centroids=16,
-                                           pq_m=4, pq_kc=8)
-        _SEM_INDEX_CACHE[sf_dir] = idx
-    t0 = time.monotonic()
-    n = contamination.semantic_decontam_ann(
-        spark, probes, idx, threshold=0.8, k=16, nprobe=4).count()
     return {"sec": round(time.monotonic() - t0, 2), "rows": n}
 
 
@@ -574,7 +493,6 @@ def main() -> None:
         ("q118_embed", probe_query("q118_hashing_embed")),
         ("q119_ann", probe_query("q119_embed_ann")),
         ("q120_hh_fold", probe_query("q120_stream_heavy_fold")),
-        ("q121_batch_ann", probe_query("q121_index_batch_search")),
         ("q122_drift", probe_query("q122_drift_report")),
         # round-9 late tier: leakage-safe splits (q53's CC + label
         # join-back), temperature mixture (scan-bound), SemDeDup at
@@ -609,11 +527,6 @@ def main() -> None:
         # round-11: waterfill is one corpus groupBy + a 20-row window
         # frame — expectation ~linear scan slope, dimension stage flat
         ("q137_waterfill", probe_query("q137_mixture_waterfill")),
-        # round-11: recall evaluation — the exact brute-force pass over
-        # a bounded 5-query sample is the corpus-sized stage
-        # (expectation ~linear); the four probed searches ride the
-        # partition-pruned index
-        ("q138_ann_recall", probe_query("q138_ann_recall")),
         # round-11: z-order layout at production file sizing (n_files
         # scales with the corpus; band files-read FRACTION should stay
         # ~flat for z while x-sorted reads 1.0 of a 100x larger table)
@@ -656,9 +569,6 @@ def main() -> None:
         # frequency tables onto the token stream + one doc-keyed
         # combinable reduction; expectation ~linear in corpus tokens
         ("q147_moore_lewis", probe_query("q147_moore_lewis")),
-        # round-12: filtered vector search — the q121 DPP-pruned scan
-        # plus a pushed metadata predicate; expectation ~q121's shape
-        ("q148_filtered_ann", probe_query("q148_filtered_ann")),
         # round-12: Naive Bayes — train groupBy + broadcast-model
         # classify; expectation ~linear in corpus tokens
         ("q149_naive_bayes", probe_query("q149_naive_bayes_langid")),
@@ -671,9 +581,6 @@ def main() -> None:
         # round-11: incremental annotate — two shuffle-hash joins on
         # (id, md5) plus the annotator over the ~8% fresh slice only
         ("q141_inc_annotate", probe_query("q141_incremental_annotate")),
-        # round-13: filtered recall curve (the q138 shape with the
-        # predicate pushed into both the probed and exact sides)
-        ("q152_filtered_recall", probe_query("q152_filtered_ann_recall")),
         # round-13: DSIR — two bucket-sized broadcast model tables onto
         # the map-side hashed {uni,bi}gram stream; expectation ~linear
         # in corpus tokens (the q147 shape, one more gram order)
@@ -693,11 +600,6 @@ def main() -> None:
         # round-13: residual IVF-PQ — X58's shape plus one broadcast
         # centroid join at encode time; expectation ~q155's slope
         ("q158_ivfpq_residual", probe_query("q158_ivfpq_residual")),
-        # round-14: the PERSISTED PQ tier — build (one encode write) +
-        # search (DPP-pruned code read, no assignment join); search
-        # alone should be ~flat vs q155's rebuild-per-call slope
-        ("q159_pq_index", probe_query("q159_pq_index_search")),
-        ("pq_index_search_only", probe_pq_search_only),
         # round-14: refined PQ recall — one Lloyd iteration (broadcast
         # argmin + d-wide posexplode shuffle of the corpus) + two
         # code-only ADC runs; expectation ~linear in vectors
@@ -706,22 +608,6 @@ def main() -> None:
         # ticket explode over the SCORES (doc-sized, narrow) and one
         # combinable per-key max; expectation ~q153's slope
         ("q161_dsir_resample", probe_query("q161_dsir_resample")),
-        # round-14: filtered search on the persisted code tier —
-        # q159's shape with the predicate pushed into the pruned scan
-        ("q162_pq_filtered", probe_query("q162_pq_filtered_search")),
-        # round-14: streaming index ingestion — base build + two
-        # increment folds + one codes-only search; per-batch cost
-        # tracks the increment (broadcast argmax/argmin + one write)
-        ("q163_stream_index", probe_query("q163_stream_index_append")),
-        # round-14: tombstoned search — q159's shape + one id-sized
-        # anti-join riding the pruned code scan
-        ("q164_index_delete", probe_query("q164_index_delete_search")),
-        # round-14: exact refine over ADC candidates — q159's shape +
-        # one bounded (R*|q| rows) broadcast join onto the float data
-        ("q165_pq_rerank", probe_query("q165_pq_rerank_search")),
-        # round-14: store health report — one narrow-column scan +
-        # centroid-sized aggregates; expectation ~linear scan slope
-        ("q166_index_stats", probe_query("q166_index_stats")),
         # round-14: cluster-balanced sample — one broadcast argmax
         # scan + centroid-sized rates; expectation ~linear scan slope
         ("q167_cluster_sample", probe_query("q167_cluster_balanced_sample")),
@@ -738,20 +624,6 @@ def main() -> None:
         # eval set does not grow with the corpus) while docs scale —
         # expectation ~linear in docs at constant |probes|
         ("semantic_decontam_fixed", probe_semantic_fixed_probes),
-        # round-15: the ANN-nominated screen (X72) — registry shape
-        # (build + nominate + verify; probes grow as 1/211 of docs by
-        # harness construction, like q169's registry probe)
-        ("q170_semantic_ann", probe_query("q170_semantic_decontam_ann")),
-        # ... and the PRODUCTION shape: store built once per corpus
-        # (cached), probe set FIXED at the sf0.1 slice — the screen
-        # alone should track |probes| (the pruned code read + one
-        # bounded-candidate float read), ~flat in the corpus
-        ("semantic_ann_screen_only", probe_semantic_ann_screen_only),
-        # round-15: the store lifecycle gate — build + 2 stream folds
-        # + delete + compact + serve; compaction is the corpus-sized
-        # stage (one partition-parallel rewrite of live rows), so the
-        # expectation is ~linear overall with a flat search tail
-        ("q171_lifecycle", probe_query("q171_index_lifecycle")),
         # round-15: the cluster-mix audit — q167's broadcast argmax
         # scan + one centroid-keyed combinable count; ~linear scan
         # slope, centroid-sized output
@@ -777,10 +649,6 @@ def main() -> None:
         # gram-keyed combinable count + a (doc, n)-keyed combinable
         # argmin; expectation ~linear scan slope
         ("q177_topgram", probe_query("q177_topgram_report")),
-        # round-15: persisted SQ8 tier — build (grid agg + scan-side
-        # encode write) + one codes-only DPP-pruned search;
-        # expectation q159's build-dominated shape with a flat tail
-        ("q178_sq_index", probe_query("q178_sq_index_search")),
         # round-15: streaming LM fold — two batch-sized count appends
         # + q173's score pass over the folded model; expectation
         # q173's scan-bound slope plus batch-sized write costs
