@@ -1,7 +1,7 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``queries()``/``oracle_sql()`` expose the full operator inventory from
-SURVEY.md §2 plus the training-data north-star ops (dedup / similarity /
+SURVEY.md §2 plus the training-data north-star ops (dedup /
 multimodal / text), implemented in
 ``real_time_iot_data_pipeline_project_spark`` — see that package and
 ``real_time_iot_data_pipeline_project_spark/registry.py`` for the

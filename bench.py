@@ -46,8 +46,6 @@ HEADLINE = [
     "q31_minhash_signatures",
     "q32_minhash_lsh_pairs",
     "q33_simhash",
-    "q37_cosine_topk",
-    "q38_ivf_topk",
     "q44_daytime_flag",
     "q48_training_data_pipeline",
     "q52_contamination_screen",
@@ -60,7 +58,6 @@ HEADLINE = [
     "q57_cube_rollup",
     "q64_chunk_dedup",
     "q67_sequence_packing",
-    "q68_embedding_quantization",
     # round-5/6 join/window tier: as-of (single-window shape; nearest =
     # both traversals over ONE exchange), bin-bucketed interval join,
     # trailing time-RANGE frame
@@ -120,7 +117,6 @@ HEADLINE = [
     "q25_corr_matrix",
     "q30_fingerprint_dedup",
     "q36_multimodal_features",
-    "q39_embedding_near_dup",
     "q47_session_windows",
     "q50_salted_join",
     "q69_curation_funnel",
@@ -150,27 +146,21 @@ HEADLINE = [
     "q73_context_windows",
     "q74_packing_report",
     "q78_langid_confidence",
-    # round-9 additions: the embedder → IVF-ANN handoff composition
-    # and the hash-gated streaming heavy-hitters fold
-    "q119_embed_ann",
+    # round-9 additions: the hash-gated streaming heavy-hitters fold
+    # and the text-profile drift report
     "q120_stream_heavy_fold",
     "q122_drift_report",
-    # round-9 late additions: leakage-safe splits, temperature mixture,
-    # SemDeDup semantic dedup
+    # round-9 late additions: leakage-safe splits, temperature mixture
     "q123_leakage_safe_splits",
     "q124_temperature_mix",
-    "q125_semantic_dedup",
-    "q126_semantic_dedup_2l",
     # round-9 third wave: duplicate-span removal (X39) and
     # edit-distance LSH verification (X40)
     "q127_dup_span_removal",
     "q128_edit_distance_verify",
     "q129_dup_span_incremental",
     "q130_stream_span_scrub",
-    # round 10: real merge-table BPE tokenization (X41) and the
-    # streaming SemDeDup increment (X42)
+    # round 10: real merge-table BPE tokenization (X41)
     "q131_bpe_token_frequency",
-    "q132_stream_semantic_dedup",
     "q133_bpe_sequence_packing",
     # round 10: Z-order layout curves (X43)
     "q134_zorder_curve",
@@ -194,9 +184,7 @@ HEADLINE = [
     "q143_epoch_plan",
     "q144_epoch_expand",
     "q145_source_novelty",
-    # round 12: embedding-space release drift (X50) and Moore-Lewis
-    # cross-entropy selection (X51)
-    "q146_embedding_drift",
+    # round 12: Moore-Lewis cross-entropy selection (X51)
     "q147_moore_lewis",
     # round 12: the Naive Bayes classifier (X53)
     "q149_naive_bayes_langid",
@@ -205,33 +193,25 @@ HEADLINE = [
     "q150_stream_nb_train",
     "q151_decontam_scrub",
     "q153_dsir_scores",
-    "q154_pq_adc_topk",
-    "q155_ivfpq_topk",
     "q156_stream_dsir_pool",
-    "q157_pq_recall",
-    "q158_ivfpq_residual",
-    "q160_pq_refined_recall",
     "q161_dsir_resample",
-    "q167_cluster_balanced_sample",
     "q168_tokenizer_fertility",
     "q169_semantic_decontam",
-    # round 15: the cluster-mix audit report (X74 — q167's stages +
-    # one centroid-keyed count)
-    "q172_cluster_sample_report",
     # round 15: the Stupid-Backoff bigram LM filter (X75 — reference-
     # bounded LM broadcast onto one corpus pair-explode)
     "q173_ngram_lm_perplexity",
-    # round 15: the SQ8 tier — asymmetric search over int8 codes
-    # (X76) and the sq8-vs-pq memory-tier recall table (X77)
-    "q174_sq_topk",
-    "q175_compression_recall",
-    # round 15: IVF-SQ search (X78) and the Gopher top-n-gram
-    # repetition report (X79)
-    "q176_ivfsq_topk",
+    # round 15: the Gopher top-n-gram repetition report (X79)
     "q177_topgram_report",
     # round 15: the streaming LM reference fold (X81 — two batch_id
     # count appends + one folded-model score pass)
     "q179_stream_lm_fold",
+    # vector-tier cut: the twins promoted back into the official window
+    # to refill it, so every window query keeps a headline row
+    "q10_union_append",
+    "q17_value_counts",
+    "q19_binning",
+    "q24_retention_last_n",
+    "q40_global_metrics",
 ]
 
 # Machine-load variance at sub-second scales (±50% observed) can mask

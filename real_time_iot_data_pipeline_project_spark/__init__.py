@@ -16,7 +16,7 @@ Layout
                    timestamp normalization, text metrics.
 - ``operators``  — reusable DataFrame→DataFrame transforms: cleaning,
                    feature engineering, analytics aggregates, window ops,
-                   dedup (exact + MinHash/SimHash LSH), similarity search,
+                   dedup (exact + MinHash/SimHash LSH),
                    text analysis, multimodal plumbing, schema drift mapper.
 - ``sources``    — batch/stream readers & writers, deterministic synthetic
                    telemetry generator (replaces the reference's

@@ -183,7 +183,7 @@ EVIDENCE: dict[str, dict] = {
         "test_inference.py::test_scorer_built_once_per_task_even_across_batches",
         "test_inference.py::test_inference_slices_are_bounded_by_batch_size",
         "test_inference.py::test_null_rows_get_null_score_and_skip_the_model"]},
-    "X31": {"queries": ["q118_hashing_embed", "q119_embed_ann"], "tests": [
+    "X31": {"queries": ["q118_hashing_embed"], "tests": [
         "test_embedding.py::test_unit_norm_and_duplicate_docs_identical",
         "test_embedding.py::test_partitioning_invariance",
         "test_embedding.py::test_embed_plan_is_jvm_only_and_validates_dim"]},
@@ -194,14 +194,6 @@ EVIDENCE: dict[str, dict] = {
         "test_curation_ops.py::test_temperature_mix_rates_hand_computed",
         "test_curation_ops.py::test_temperature_alpha_one_is_uniform",
         "test_curation_ops.py::test_temperature_sample_membership_exact"]},
-    "X38": {"queries": ["q125_semantic_dedup",
-                        "q126_semantic_dedup_2l"], "tests": [
-        "test_dedup_similarity.py::test_semantic_dedup_planted_groups",
-        "test_dedup_similarity.py::test_semantic_dedup_cross_bucket_pairs_missed_by_design",
-        "test_dedup_similarity.py::test_semantic_dedup_one_survivor_per_group",
-        "test_dedup_similarity.py::test_two_level_assign_equals_flat_on_separated_data",
-        "test_dedup_similarity.py::test_two_level_assign_is_bucket_consistent_on_real_data",
-        "test_dedup_similarity.py::test_semantic_dedup_two_level_keeps_invariants"]},
     "X41": {"queries": ["q131_bpe_token_frequency",
                         "q133_bpe_sequence_packing",
                         "q142_bpe_hash_ranks"], "tests": [
@@ -213,16 +205,6 @@ EVIDENCE: dict[str, dict] = {
         "test_bpe.py::test_bpe_token_frequency_matches_reference",
         "test_bpe.py::test_with_bpe_tokens_order_and_counts",
         "test_bpe.py::test_chunking_bounds_sequences"]},
-    "X42": {"queries": ["q132_stream_semantic_dedup"], "tests": [
-        "test_streaming.py::test_streaming_semantic_dedup_retroactive_merge",
-        "test_streaming.py::test_streaming_semantic_sink_engine_equals_direct",
-        "test_streaming.py::test_semantic_sink_crash_replay_idempotent",
-        "test_streaming.py::test_semantic_sink_empty_batch_and_no_pairs",
-        "test_streaming.py::test_semantic_sink_first_batch_store_crash_recovers",
-        "test_streaming.py::test_streaming_semantic_fold_two_level_equals_batch",
-        "test_streaming.py::test_semantic_store_marker_corrupt_fails_loudly",
-        "test_streaming.py::test_compact_semantic_store_preserves_groups_and_replay",
-        "test_streaming.py::test_compact_semantic_store_cli"]},
     "X43": {"queries": ["q134_zorder_curve",
                         "q135_zorder_curve_3d",
                         "q136_zorder_pruned_read"], "tests": [
@@ -256,11 +238,6 @@ EVIDENCE: dict[str, dict] = {
     "X49": {"queries": ["q145_source_novelty"], "tests": [
         "test_curation_ops.py::test_source_novelty_planted",
         "test_curation_ops.py::test_source_novelty_within_source_repeats_count_once"]},
-    "X50": {"queries": ["q146_embedding_drift"], "tests": [
-        "test_drift.py::test_embedding_drift_planted_move",
-        "test_drift.py::test_embedding_drift_psi_equals_psi_from_cells",
-        "test_release.py::test_release_embedding_drift_stable_and_semantic_shift",
-        "test_release.py::test_release_cli_embedding_drift_wiring"]},
     "X51": {"queries": ["q147_moore_lewis"], "tests": [
         "test_curation_ops.py::test_moore_lewis_hand_computed_and_direction",
         "test_curation_ops.py::test_moore_lewis_unseen_token_finite",
@@ -280,36 +257,18 @@ EVIDENCE: dict[str, dict] = {
         "test_curation_ops.py::test_dsir_scores_match_python_replay",
         "test_release.py::test_release_dsir_selection_keeps_operator_membership",
         "test_release.py::test_release_cli_dsir_wiring"]},
-    "X57": {"queries": ["q154_pq_adc_topk"], "tests": [
-        "test_curation_ops.py::test_pq_encode_and_adc_match_python_replay"]},
-    "X58": {"queries": ["q155_ivfpq_topk"], "tests": [
-        "test_curation_ops.py::test_ivfpq_anchor_and_pruning"]},
-    "X61": {"queries": ["q158_ivfpq_residual"], "tests": [
-        "test_curation_ops.py::test_ivfpq_residual_adc_is_distance_to_reconstruction"]},
-    "X60": {"queries": ["q157_pq_recall"], "tests": [
-        "test_curation_ops.py::test_pq_recall_report_counts_and_spine"]},
     "X59": {"queries": ["q156_stream_dsir_pool"], "tests": [
         "test_streaming.py::test_streaming_dsir_fold_equals_batch",
         "test_streaming.py::test_streaming_dsir_sink_engine_equals_direct"]},
-    "X69": {"queries": ["q167_cluster_balanced_sample"], "tests": [
-        "test_curation_ops.py::test_cluster_balanced_sample_rates_and_membership"]},
     "X70": {"queries": ["q168_tokenizer_fertility"], "tests": [
         "test_curation_ops.py::test_tokenizer_fertility_hand_computed"]},
     "X71": {"queries": ["q169_semantic_decontam"], "tests": [
         "test_curation_ops.py::test_semantic_decontam_catches_paraphrase_exact_screen_misses",
         "test_release.py::test_release_semantic_screen_drops_paraphrase",
         "test_release.py::test_release_cli_semantic_screen_wiring"]},
-    "X74": {"queries": ["q172_cluster_sample_report"], "tests": [
-        "test_curation_ops.py::test_cluster_balanced_report_matches_operator_membership"]},
-    "X76": {"queries": ["q174_sq_topk"], "tests": [
-        "test_curation_ops.py::test_sq_topk_hand_computed_and_near_exact"]},
-    "X77": {"queries": ["q175_compression_recall"], "tests": [
-        "test_curation_ops.py::test_compression_recall_sq8_holds_where_pq_pays"]},
     "X81": {"queries": ["q179_stream_lm_fold"], "tests": [
         "test_streaming.py::test_streaming_lm_fold_equals_batch",
         "test_streaming.py::test_streaming_lm_sink_engine_equals_direct"]},
-    "X78": {"queries": ["q176_ivfsq_topk"], "tests": [
-        "test_curation_ops.py::test_ivfsq_in_bucket_ranking_near_exact"]},
     "X79": {"queries": ["q177_topgram_report"], "tests": [
         "test_curation_ops.py::test_topgram_report_hand_computed",
         "test_release.py::test_release_topgram_filter_keeps_operator_membership"]},
@@ -318,9 +277,6 @@ EVIDENCE: dict[str, dict] = {
         "test_curation_ops.py::test_ngram_lm_conditional_beats_unigram_and_roundtrip",
         "test_release.py::test_release_lm_filter_keeps_operator_membership",
         "test_release.py::test_release_lm_filter_refusals_and_cli"]},
-    "X63": {"queries": ["q160_pq_refined_recall"], "tests": [
-        "test_curation_ops.py::test_pq_refine_distortion_non_increasing_and_drift_free",
-        "test_curation_ops.py::test_pq_refined_recall_report_spine_and_raw_anchor"]},
     "X64": {"queries": ["q161_dsir_resample"], "tests": [
         "test_curation_ops.py::test_dsir_resample_matches_python_lottery_replay",
         "test_release.py::test_release_dsir_resample_keeps_lottery_membership",
@@ -487,7 +443,6 @@ EVIDENCE: dict[str, dict] = {
     "X10": {"queries": ["q64_chunk_dedup"], "tests": []},
     "X11": {"queries": ["q63_pii_redaction"], "tests": []},
     "X12": {"queries": ["q65_corpus_stats"], "tests": []},
-    "X13": {"queries": ["q68_embedding_quantization"], "tests": []},
     "X14": {"queries": ["q69_curation_funnel"], "tests": []},
     "X15": {"queries": ["q70_epoch_shuffle"], "tests": []},
     "X16": {"queries": ["q71_source_leakage"], "tests": []},

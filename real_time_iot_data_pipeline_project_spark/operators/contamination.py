@@ -171,9 +171,9 @@ def semantic_decontam_hits(docs, probes, threshold: float = 0.8,
     Composition of gated rules only: X31's vocabulary-free hashing
     embeddings on BOTH sides (no model artifact to ship or pin; the
     q118 determinism argument — integer sums, exact sqrt, one
-    division — makes every vector bit-identical cross-engine) and the
-    cosine arithmetic of similarity.cosine, thresholded on the raw double
-    (identical expression trees both engines), reported at 6 dp.
+    division — makes every vector bit-identical cross-engine) and
+    embedding.cosine, thresholded on the raw double (identical
+    expression trees both engines), reported at 6 dp.
     Returns (doc_id, probe_id, cosine_sim) — one row per flagged
     (doc, probe) pair; feed ``.select(id).distinct()`` to a left_anti
     join to drop, or audit the report directly.
@@ -184,8 +184,7 @@ def semantic_decontam_hits(docs, probes, threshold: float = 0.8,
     no index required."""
     from pyspark.sql import functions as F
 
-    from .embedding import hashing_embed_dense
-    from .similarity import cosine
+    from .embedding import cosine, hashing_embed_dense
 
     if not 0.0 < threshold <= 1.0:
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")

@@ -1,5 +1,5 @@
 """Deduplication operators for the training-data pipeline: exact,
-MinHash+LSH, SimHash, n-gram Jaccard, embedding-cosine near-dup
+MinHash+LSH, SimHash, n-gram Jaccard
 (BASELINE.json north-star; first-class alongside SURVEY.md §2).
 
 Scale design
@@ -14,7 +14,6 @@ Scale design
   near-dup = same band of the signature (bit-block LSH), hamming verify.
 - **n-gram Jaccard**: exact pairwise via shingle inverted-index join —
   quadratic per shingle bucket; use only to verify candidates at scale.
-- **embedding cosine**: see similarity.py; near-dup = sim ≥ threshold.
 
 All hashes are the portable md5-based family (functions.textfns), so
 every operator here has a DuckDB oracle.
@@ -795,7 +794,7 @@ def edit_distance_verify(df: DataFrame, text_col: str = "text",
     division ever happens.
 
     ``pairs`` overrides the candidate source: any (id_a, id_b) frame —
-    SimHash blocks, winnow overlaps, embedding near-dups — can feed the
+    SimHash blocks, winnow overlaps — can feed the
     same verify stage; the default is the MinHash-LSH candidate set.
 
     Output: (id_a, id_b, edit_dist, len_a, len_b), all BIGINT —

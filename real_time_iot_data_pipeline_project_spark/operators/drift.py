@@ -138,84 +138,3 @@ def psi_report(df_a: DataFrame, df_b: DataFrame,
     from that feature's distribution (SQL aggregate semantics)."""
     return psi_from_cells(bin_cells(df_a, df_b, features),
                           round_dp=round_dp)
-
-
-def embedding_drift(old: DataFrame, new: DataFrame,
-                    centroids: DataFrame, vec_col: str = "embedding",
-                    id_col: str = "vec_id") -> DataFrame:
-    """Embedding-space release drift (X50): the semantic counterpart
-    of the text-profile PSI monitor — did the new release's embedding
-    DISTRIBUTION move, measured as the per-centroid occupancy
-    histogram of both releases under one SHARED pinned centroid set
-    (centroids come from the baseline, so a bucket means the same
-    region of embedding space in both snapshots; re-deriving centroids
-    per release would make the histograms incomparable).  Text-feature PSI can read "stable"
-    while the corpus pivots semantically — new topics at the same
-    length/punctuation profile are exactly the shift only an
-    embedding-space monitor sees.
-
-    Per centroid: ``n_old`` / ``n_new`` occupancy counts and exact
-    integer per-mille shares (``count·1000 DIV total``) plus
-    ``delta_pm`` — all-BIGINT so the q146 oracle pins the whole rule;
-    the PSI/verdict tail is one `psi_from_cells` call away (the cells
-    are this frame's counts — pinned by test), kept separate so the
-    gated row stays float-free.
-
-    Spine completeness: every centroid appears even when a release
-    leaves it empty (an emptied bucket IS the drift signal).  Scale:
-    two `assign_centroids` scans (broadcast n·C argmax, map-side
-    combinable) feeding centroid-sized aggregates; the totals ride a
-    broadcast 1-row frame (the waterfill ``fin`` precedent), never a
-    global window."""
-    from .similarity import assign_centroids
-
-    def counts(df: DataFrame, alias: str) -> DataFrame:
-        return (assign_centroids(df, centroids, vec_col=vec_col,
-                                 id_col=id_col)
-                .groupBy("centroid_id")
-                .agg(F.count(F.lit(1)).alias(alias)))
-
-    spine = centroids.select("centroid_id")
-    # centroid-sized right sides: broadcast explicitly so the spine
-    # joins can never plan a sort-merge exchange (fleet audit rule)
-    cells = (spine
-             .join(F.broadcast(counts(old, "__no")),
-                   "centroid_id", "left")
-             .join(F.broadcast(counts(new, "__nn")),
-                   "centroid_id", "left")
-             .select("centroid_id",
-                     F.coalesce("__no", F.lit(0)).cast("long")
-                     .alias("n_old"),
-                     F.coalesce("__nn", F.lit(0)).cast("long")
-                     .alias("n_new")))
-    totals = F.broadcast(cells.agg(
-        F.sum("n_old").alias("__to"), F.sum("n_new").alias("__tn")))
-    share = lambda n, t: (  # noqa: E731 — shared 2-line rule
-        F.when(F.col(t) > 0, F.expr(f"{n} * 1000 DIV {t}"))
-        .otherwise(F.lit(0)).cast("long"))
-    return (cells.crossJoin(totals)
-            .withColumn("share_old_pm", share("n_old", "__to"))
-            .withColumn("share_new_pm", share("n_new", "__tn"))
-            .withColumn("delta_pm",
-                        F.col("share_new_pm") - F.col("share_old_pm"))
-            .select("centroid_id", "n_old", "n_new", "share_old_pm",
-                    "share_new_pm", "delta_pm"))
-
-
-def embedding_drift_psi(old: DataFrame, new: DataFrame,
-                        centroids: DataFrame,
-                        vec_col: str = "embedding",
-                        id_col: str = "vec_id",
-                        round_dp: int = 6) -> DataFrame:
-    """The X50 histogram folded through the standard PSI tail: one
-    (feature='embedding_centroid', psi, verdict) row, directly
-    comparable to — and gate-composable with — the text-feature rows
-    the release CLI already publishes.  Same cells, same smoothing,
-    same rounding policy as psi_from_cells everywhere else."""
-    cells = (embedding_drift(old, new, centroids, vec_col=vec_col,
-                             id_col=id_col)
-             .select(F.lit("embedding_centroid").alias("feature"),
-                     F.col("centroid_id").cast("string").alias("bin"),
-                     F.col("n_old").alias("n_a"),
-                     F.col("n_new").alias("n_b")))
-    return psi_from_cells(cells, round_dp=round_dp)

@@ -6,11 +6,11 @@ hashed into one of ``dim`` buckets with a hash-derived ±1 sign
 Learning", ICML'09), giving a sparse signed-count vector whose cosine
 geometry approximates token-profile similarity.
 
-Why it earns a place next to the ANN tier: it is ENTIRELY JVM-side —
-explode → hash → two doc-keyed aggregates, zero Python, zero UDFs, so
-it runs at scan-shuffle speed over 100 TB while producing vectors the
-existing cosine/IVF/LSH operators (similarity.py) and int8 quantizer
-(quantize.py) consume directly.
+It is ENTIRELY JVM-side — explode → hash → two doc-keyed aggregates,
+zero Python, zero UDFs — so it runs at scan-shuffle speed over 100 TB.
+Its one consumer is the semantic contamination screen
+(contamination.semantic_decontam_hits, registry q169), which compares
+the dense vectors with ``cosine``.
 
 Determinism (cross-engine exact): bucket weights are INTEGER sums of
 ±1 (order-free), the L2 norm is sqrt of an integer-valued double
@@ -22,7 +22,7 @@ Output is the SPARSE form (id, bucket, weight) with zero-sum buckets
 dropped — the natural shuffle-friendly representation at corpus scale;
 ``to_dense`` assembles array<double> vectors when a consumer needs
 them (broadcast-sized batches only — a 100 TB corpus stays sparse);
-``hashing_embed_dense`` fuses embed→dense for the ANN handoff.
+``hashing_embed_dense`` fuses embed→dense in one aggregation.
 
 Round-16 measurement note (kept so the next round doesn't retry it):
 collapsing the two exchanges into ONE doc-keyed aggregation of ``dim``
@@ -37,7 +37,7 @@ rows (≤ dim per doc).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import textfns
@@ -131,7 +131,7 @@ def hashing_embed_dense(df: DataFrame, text_col: str = "text",
 def to_dense(sparse: DataFrame, id_col: str = "doc_id",
              dim: int = 64) -> DataFrame:
     """Assemble (id_col, embedding array<double>) from the sparse form —
-    for handing to the ANN/quantization tier. One doc-keyed aggregate;
+    for consumers that need fixed-width vectors. One doc-keyed aggregate;
     missing buckets are 0.0. Meant for bounded batches (a query set, a
     shard) — corpus-scale similarity should consume the sparse form.
     For the common embed→dense composition prefer
@@ -145,3 +145,19 @@ def to_dense(sparse: DataFrame, id_col: str = "doc_id",
         F.transform(idx, lambda i: F.coalesce(
             F.element_at("__m", i.cast("long")), F.lit(0.0)))
         .alias("embedding"))
+
+
+def cosine(a: Column, b: Column) -> Column:
+    """Cosine of two array<double> Columns: a sequential left fold of
+    the products over ``zip_with`` divided by the two folded L2 norms —
+    the same expression order as the oracles' ``list_dot_product``
+    template, so thresholding on the raw double agrees across engines."""
+    def _dot(x, y):
+        return F.aggregate(F.zip_with(x, y, lambda u, v: u * v),
+                           F.lit(0.0), lambda acc, v: acc + v)
+
+    def _norm(x):
+        return F.sqrt(F.aggregate(x, F.lit(0.0),
+                                  lambda acc, v: acc + v * v))
+
+    return _dot(a, b) / (_norm(a) * _norm(b))

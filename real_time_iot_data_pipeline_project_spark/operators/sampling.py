@@ -190,7 +190,7 @@ def leakage_safe_splits(df: DataFrame, key: str, edges: DataFrame,
     fact.
 
     ``edges`` is any near-dup pair frame (``dedup.minhash_lsh_candidates``
-    filtered to the decision threshold, ``cosine_near_dup_lsh``, ...).
+    filtered to the decision threshold, ``dedup.simhash_near_dups``, ...).
     Returns ``df`` + ``cluster_id`` + ``split``; same-salt nesting and
     re-run stability as every sampler here (a cluster never migrates —
     unless new data BRIDGES two clusters, which correctly merges their
@@ -848,92 +848,3 @@ def epoch_expand(df: DataFrame, stratum: str, key: str, weight: Column,
             .select(stratum, key, "n_tok",
                     F.col("epochs_full").alias("epoch")))
     return full.unionByName(part)
-
-
-def cluster_balanced_sample(df: DataFrame, key: str = "vec_id",
-                            vec_col: str = "embedding",
-                            n_centroids: int = 16, alpha: float = 0.7,
-                            budget_frac: float = 0.5,
-                            salt: str = "cmix",
-                            centroids: DataFrame | None = None) -> DataFrame:
-    """Cluster-balanced corpus sampling (round 14, X69): the
-    temperature mixture applied to EMBEDDING-SPACE clusters instead of
-    source labels — modern curation balances pretraining data by
-    semantic cluster (web corpora are dominated by a few giant content
-    modes; per-cluster n^α flattening upweights the rare modes the
-    same way X37 upweights rare languages), and source labels can't
-    see that structure.
-
-    Composition of three gated rules, nothing new to trust: the
-    md5-sampled centroids (kmeans_refine composes via ``centroids=``),
-    THE argmax assignment (similarity.assign_centroids — q38/q121's
-    rule), and X37's integer-percent temperature rates + hash-bucket
-    membership keyed by the cluster id as the stratum.  Returns
-    (key, centroid_id, rate_pct) filtered to the sample — membership
-    is a pure function of (salt, key, cluster sizes), reproducible on
-    any engine (q167's gate).
-
-    Scale: one broadcast centroid argmax over the corpus (the
-    assignment — no shuffle), centroid-sized rate aggregates, one
-    broadcast rate join + scan-stage hash filter."""
-    from .similarity import assign_centroids, sampled_centroids
-
-    if centroids is None:
-        centroids = sampled_centroids(df, n_centroids, vec_col, key)
-    assigned = (assign_centroids(df, centroids, vec_col, key)
-                .select(key, "centroid_id"))
-    return (temperature_sample(assigned, key=key, stratum="centroid_id",
-                               alpha=alpha, budget_frac=budget_frac,
-                               salt=salt)
-            .select(key, "centroid_id", "rate_pct"))
-
-
-def cluster_balanced_report(df: DataFrame, key: str = "vec_id",
-                            vec_col: str = "embedding",
-                            n_centroids: int = 16, alpha: float = 0.7,
-                            budget_frac: float = 0.5,
-                            salt: str = "cmix",
-                            centroids: DataFrame | None = None
-                            ) -> DataFrame:
-    """Per-cluster audit of the cluster-balanced sample (round 15,
-    X74 — VERDICT r14 item 8: the X37 report convention applied to
-    X69): for each centroid, the BEFORE size, the integer keep rate,
-    the exact AFTER count of members whose hash lottery clears it,
-    and the realized percentage — so the cluster mix is auditable by
-    the same before/after funnel tooling as the source-level mix
-    (which rare modes got upweighted, what the budget actually
-    bought).
-
-    Membership is definitionally the operator's: the report runs the
-    SAME assign_centroids ∘ temperature_sample composition
-    :func:`cluster_balanced_sample` is built from (one shared
-    assignment frame), then adds one centroid-sized count — the two
-    can never drift.  realized_pct differs from rate_pct by lottery
-    granularity (each member is an independent integer-bucket draw);
-    a persistent gap IS the audit signal.  Scale: the sample's own
-    stages + one combinable centroid-keyed count."""
-    from .similarity import assign_centroids, sampled_centroids
-
-    if centroids is None:
-        centroids = sampled_centroids(df, n_centroids, vec_col, key)
-    assigned = (assign_centroids(df, centroids, vec_col, key)
-                .select(key, "centroid_id"))
-    rates = temperature_mix_rates(assigned, "centroid_id", alpha,
-                                  budget_frac)
-    kept = (temperature_sample(assigned, key=key, stratum="centroid_id",
-                               alpha=alpha, budget_frac=budget_frac,
-                               salt=salt)
-            .groupBy("centroid_id")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_sampled")))
-    # both sides are centroid-sized aggregates — broadcast the kept
-    # counts so the report join can never plan a SortMergeJoin (the
-    # fleet-wide plan audit's rule)
-    return (rates.join(F.broadcast(kept), "centroid_id", "left")
-            .select("centroid_id",
-                    F.col("n").cast("long").alias("n_docs"),
-                    "rate_pct",
-                    F.coalesce("n_sampled", F.lit(0)).cast("long")
-                    .alias("n_sampled"))
-            .withColumn("realized_pct",
-                        F.round(F.col("n_sampled") * 100.0
-                                / F.col("n_docs"), 6)))

@@ -132,7 +132,6 @@ def release_corpus(
     span_scrub: bool = False,
     span_window: int = 8,
     bpe_manifest: bool = False,
-    embedding_drift: bool = False,
     ml_seed_path: str | None = None,
     ml_threshold: float = 0.0,
     lm_ref_path: str | None = None,
@@ -194,13 +193,7 @@ def release_corpus(
     token totals (overall + per-lang, tokenize.bpe_token_counts — the
     q133-gated count path) under ``bpe``: training budgets are in
     tokenizer tokens, and whitespace counts under-state a BPE corpus
-    by the merge ratio. ``embedding_drift`` (with a baseline) adds the
-    SEMANTIC gate row next to the text-profile ones (X50, q146's
-    rule): both corpora embedded with the X31 hashing embedder,
-    per-centroid occupancy PSI under baseline-pinned centroids,
-    folded through the same psi_from_cells tail — so a topical pivot
-    at an unchanged length/punct profile still trips the major_shift
-    gate.
+    by the merge ratio.
 
     ``recipe_weights`` (mutually exclusive with ``mix_alpha``) switches
     the mixing stage to the weights-based waterfill (X44) with
@@ -260,16 +253,9 @@ def release_corpus(
         raise ValueError(
             "recipe_weights and mix_alpha are two mixing rules for the "
             "same stage — pass one")
-    if embedding_drift and not baseline_path:
-        # ADVICE r12: silently skipping the REQUESTED semantic gate is
-        # a publish without the protection the caller asked for
-        raise ValueError(
-            "embedding_drift needs a baseline to compare against — "
-            "pass baseline_path/--baseline, or drop the flag for a "
-            "first release")
     if screen_probes_semantic is not None and not screen_probes_path:
-        # same rule: a requested decontamination tier must never be
-        # silently skipped for want of its input
+        # a requested decontamination tier must never be silently
+        # skipped for want of its input
         raise ValueError(
             "screen_probes_semantic needs the eval-canary list — pass "
             "screen_probes_path/--screen-probes alongside it")
@@ -341,16 +327,14 @@ def release_corpus(
                 "n_docs_dropped": n_in - final.count(),
             }
             if screen_probes_semantic is not None:
-                # the SECOND decontamination tier (round 15, X71/X72 —
-                # VERDICT r14 item 2): paraphrased eval items share no
-                # verbatim chunk with their probe and survive the
-                # drop/scrub tier above, but land near it in embedding
-                # space — any doc within the cosine threshold of a
-                # probe's hashing embedding is dropped.  Probe sets
-                # are bounded, so the release runs the EXACT linear
-                # screen (semantic_decontam_hits — one broadcast-probe
-                # scan); the ANN-nominated variant (X72) is the
-                # operator for probe sets too wide for it.
+                # the SECOND decontamination tier (round 15, X71):
+                # paraphrased eval items share no verbatim chunk with
+                # their probe and survive the drop/scrub tier above,
+                # but land near it in embedding space — any doc
+                # within the cosine threshold of a probe's hashing
+                # embedding is dropped.  Probe sets are bounded, so
+                # the release runs the EXACT linear screen
+                # (semantic_decontam_hits — one broadcast-probe scan).
                 from .operators.contamination import (
                     semantic_decontam_hits,
                 )
@@ -499,8 +483,7 @@ def release_corpus(
         dsir_info = None
         if dsir_resample_n is not None and not dsir_seed_path:
             # a requested selection stage with no seed to select
-            # against must refuse, not silently skip (the
-            # embedding-drift-without-baseline precedent)
+            # against must refuse, not silently skip
             raise ValueError(
                 "dsir_resample_n requires dsir_seed_path — importance "
                 "resampling has no weights without a seed corpus")
@@ -679,7 +662,7 @@ def release_corpus(
         return _release_body(spark, final, output_path, baseline_path,
                              min_quality, langs, n_shards, allow_drift,
                              mix_info, scrub_info, bpe_manifest,
-                             embedding_drift, ml_info, recipe_info,
+                             ml_info, recipe_info,
                              decontam_info, nb_info, dsir_info, lm_info,
                              topgram_info)
     finally:
@@ -693,7 +676,7 @@ def release_corpus(
 def _release_body(spark, final, output_path, baseline_path, min_quality,
                   langs, n_shards, allow_drift, mix_info=None,
                   scrub_info=None, bpe_manifest=False,
-                  embedding_drift=False, ml_info=None,
+                  ml_info=None,
                   recipe_info=None, decontam_info=None,
                   nb_info=None, dsir_info=None, lm_info=None,
                   topgram_info=None) -> dict:
@@ -735,32 +718,6 @@ def _release_body(spark, final, output_path, baseline_path, min_quality,
         drift_rows = [{"feature": r["feature"], "psi": r["psi"],
                        "verdict": r["verdict"]}
                       for r in report.collect()]  # ≤ n_features rows
-        if embedding_drift:
-            # the SEMANTIC gate next to the text-profile one (X50,
-            # q146's rule): both corpora embedded with the X31 hashing embedder,
-            # centroids pinned on the BASELINE (buckets mean the same
-            # region of embedding space in both releases), occupancy folded
-            # through the one psi_from_cells tail so the verdict scale
-            # matches the text rows and the same major_shift gate
-            # applies.  New topics at an unchanged length/punct
-            # profile trip THIS row and nothing else.  Cost: two
-            # embed scans + an n·16 broadcast argmax per corpus.
-            from .operators.drift import embedding_drift_psi
-            from .operators.embedding import hashing_embed_dense
-            from .operators.similarity import sampled_centroids
-
-            def _vecs(df):
-                return hashing_embed_dense(df, id_col="doc_id").select(
-                    F.col("doc_id").alias("vec_id"), "embedding")
-
-            base_vecs = _vecs(baseline)
-            erow = embedding_drift_psi(
-                base_vecs, _vecs(final),
-                sampled_centroids(base_vecs, n_centroids=16),
-            ).collect()[0]  # 1 row
-            drift_rows.append({"feature": erow["feature"],
-                               "psi": erow["psi"],
-                               "verdict": erow["verdict"]})
         major = [d for d in drift_rows if d["verdict"] == "major_shift"]
         if major and not allow_drift:
             raise RuntimeError(
@@ -969,7 +926,6 @@ def main(argv: list[str] | None = None) -> None:
     p.add_argument("domain",
                    choices=["solar", "wind", "curate", "release", "compact",
                             "compact-store", "compact-span-store",
-                            "compact-semantic-store",
                             "dq-audit", "cdc-apply",
                             "scd2-apply", "plan-audit",
                             "refresh-annotations"])
@@ -1096,13 +1052,6 @@ def main(argv: list[str] | None = None) -> None:
                    help="Moore-Lewis keep cutoff in bits/token "
                         "(ml_bits <= threshold; 0.0 = seed likes the "
                         "doc at least as much as the pool)")
-    p.add_argument("--embedding-drift", action="store_true",
-                   help="add the SEMANTIC drift row (X50): both "
-                        "corpora hashing-embedded, centroid occupancy "
-                        "PSI vs the baseline under baseline-pinned "
-                        "centroids; participates in the same "
-                        "major_shift publish gate (release domain; "
-                        "needs --baseline)")
     p.add_argument("--span-window", type=int, default=8,
                    help="duplicate-span window size in tokens "
                         "(release domain; used with --span-scrub)")
@@ -1243,16 +1192,6 @@ def main(argv: list[str] | None = None) -> None:
         stats = compact_span_store(spark, args.input_path, args.output)
         print(f"span store compacted: {stats}")
         return
-    if args.domain == "compact-semantic-store":
-        from .streaming.semantic_stream import compact_semantic_store
-
-        if not args.output:
-            p.error("compact-semantic-store requires --output (store "
-                    "compaction is out-of-place); input_path is the "
-                    "semantic store root")
-        stats = compact_semantic_store(spark, args.input_path, args.output)
-        print(f"semantic store compacted: {stats}")
-        return
     if args.domain == "refresh-annotations":
         # entry point F: re-annotate ONLY the docs whose raw text is
         # new or changed vs the previous release (X47, q141's rule)
@@ -1282,7 +1221,6 @@ def main(argv: list[str] | None = None) -> None:
             span_scrub=args.span_scrub,
             span_window=args.span_window,
             bpe_manifest=args.bpe_manifest,
-            embedding_drift=args.embedding_drift,
             ml_seed_path=args.ml_seed,
             ml_threshold=args.ml_threshold,
             lm_ref_path=args.lm_ref,

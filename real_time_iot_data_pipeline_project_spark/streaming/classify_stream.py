@@ -9,10 +9,10 @@ its own counts to a batch_id-keyed store, and the model read sums
 them.  A model folded from any batching of the corpus equals the
 batch ``nb_train``/``nb_doc_counts`` on the concatenated corpus
 bit-for-bit, so classification downstream is IDENTICAL — the q150
-oracle is literally q149's SQL (the q132 fold==batch precedent).
+oracle is literally q149's SQL (the q130 fold==batch precedent).
 
 Exactly-once: every write is a batch_id-keyed overwrite directory
-(the q130/q132 contract) — a checkpoint replay rewrites its own
+(the q130 contract) — a checkpoint replay rewrites its own
 partition idempotently and can never double-count.  Labels are cast
 to string in the store (one pinned schema for the wedge-free
 first-batch-crash read, the q130 contract)."""

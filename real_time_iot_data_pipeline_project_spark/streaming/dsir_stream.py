@@ -6,7 +6,7 @@ the in-domain seed is a fixed slice.
 Why it folds exactly: the DSIR pool model IS one integer table of
 hashed-ngram bucket counts, and integer counts are exactly mergeable —
 each micro-batch appends its OWN bucket counts under a batch_id-keyed
-overwrite directory (the q130/q132/q150 exactly-once contract: a
+overwrite directory (the q130/q150 exactly-once contract: a
 checkpoint replay rewrites its own partition idempotently and can
 never double-count) and the model read sums them.  A pool folded from
 ANY batching equals ``dsir_scores``' internal model on the

@@ -27,7 +27,7 @@ def duck():
     import duckdb
 
     con = duckdb.connect()
-    tables = "region nation customer supplier part orders lineitem events documents embeddings".split()
+    tables = "region nation customer supplier part orders lineitem events documents".split()
     for t in tables:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_SMOKE}/{t}.parquet'")
     yield con

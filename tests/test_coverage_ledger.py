@@ -21,7 +21,8 @@ import coverage_ledger  # noqa: E402
 # same 33). Future rounds may only REMOVE entries (a gated query never
 # un-gates — official history is append-only). If this assertion fires
 # with a NEW name, a query lost its official row lineage: investigate
-# the CORRECTNESS files, don't grow this list.
+# the CORRECTNESS files, don't grow this list. (q68 left it when the
+# query was deleted with the vector tier.)
 NEVER_GATED_AS_OF_R7 = {
     "q100_retention_cohorts",
     "q101_quality_band_approx",
@@ -47,7 +48,6 @@ NEVER_GATED_AS_OF_R7 = {
     "q63_pii_redaction",
     "q65_corpus_stats",
     "q66_domain_mixing",
-    "q68_embedding_quantization",
     "q70_epoch_shuffle",
     "q71_source_leakage",
     "q72_unigram_logprob",

@@ -1,5 +1,5 @@
 """Unit/property tests for the sampling / mixing / packing / chunk-dedup /
-PII / quantization operator tier (the round-3 training-data extensions).
+PII operator tier (the round-3 training-data extensions).
 
 Oracle parity for the registry queries (q61-q69) is covered by
 tests/test_oracle_parity.py; these tests pin the SEMANTICS on planted
@@ -18,7 +18,6 @@ from real_time_iot_data_pipeline_project_spark.functions import textfns
 from real_time_iot_data_pipeline_project_spark.operators import (
     dedup,
     packing,
-    quantize,
     sampling,
     textops,
 )
@@ -208,298 +207,6 @@ def test_pii_redaction_and_counts(spark):
     assert out[2].red == "call <PHONE> or <PHONE> now"
     assert (out[3].ne, out[3].np) == (0, 0) and out[3].red == out[3].red
     assert out[4].red == "<EMAIL> and <PHONE> both"
-
-
-# ----------------------------------------------------------- quantization
-
-def test_quantize_error_exact_at_range_endpoints(spark):
-    df = spark.createDataFrame(
-        [(1, [0.0, 5.0]), (2, [10.0, 5.0])], "vec_id long, embedding array<float>"
-    )
-    out = {r.vec_id: r for r in quantize.quantize_error(df).collect()}
-    # endpoints reconstruct exactly; constant dim contributes 0 error, code 0
-    assert out[1].q_sum == 0 and out[1].mse == 0.0
-    assert out[2].q_sum == 255 and out[2].mse == 0.0
-
-
-def test_quantize_error_bounded_by_step(spark):
-    df = spark.createDataFrame(
-        [(1, [0.0]), (2, [10.0]), (3, [0.37])], "vec_id long, embedding array<float>"
-    )
-    out = {r.vec_id: r for r in quantize.quantize_error(df).collect()}
-    step = 10.0 / 255
-    assert 0 < out[3].mse <= step * step  # floor error < one grid step
-
-
-def test_pq_encode_and_adc_match_python_replay(spark):
-    """X57 hand case: codes and ADC distances equal a full python
-    replication — md5-ordered codebook sample, per-subspace argmin
-    with the (dist ASC, code ASC) tie-break, LUT sum with the decimal
-    pre-sum quantization — and ADC(q, codes(v)) equals the exact l2²
-    between q and v's RECONSTRUCTION from its codewords."""
-    import hashlib
-    import math
-    from decimal import ROUND_HALF_UP, Decimal
-
-    rows = [(i, [math.sin(i * 7 + j) for j in range(8)])
-            for i in range(20)]
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in v]) for i, v in rows],
-        "vec_id long, embedding array<float>")
-    m, d, kc = 4, 2, 3
-    cb = quantize.pq_codebooks(df, m=m, k=kc)
-    codes = {(r.vec_id, r.sub_id): r.code
-             for r in quantize.pq_encode(df, cb).collect()}
-    queries = (df.where(F.col("vec_id").isin(0, 1))
-               .select(F.col("vec_id").alias("query_id"),
-                       F.col("embedding").alias("qvec")))
-    got = {(r.query_id, r.vec_id): r.adc_dist
-           for r in quantize.pq_adc_topk(queries, cb, codes=quantize
-                                         .pq_encode(df, cb), k=20)
-           .collect()}
-
-    # python replay — NOTE float32 storage: replicate by round-trip
-    import struct as _s
-
-    def f32(x):
-        return _s.unpack("f", _s.pack("f", x))[0]
-
-    vecs = {i: [f32(x) for x in v] for i, v in rows}
-    order = sorted(vecs, key=lambda i: (
-        hashlib.md5(str(i).encode()).hexdigest(), i))
-    sample = order[:kc]
-
-    def dot(a, b):
-        acc = 0.0
-        for x, y in zip(a, b):
-            acc = acc + x * y
-        return acc
-
-    def l2(a, b):
-        return dot(a, a) - 2.0 * dot(a, b) + dot(b, b)
-
-    cbooks = {(j, c + 1): vecs[sid][j * d:(j + 1) * d]
-              for c, sid in enumerate(sample) for j in range(m)}
-    for i, v in vecs.items():
-        for j in range(m):
-            sv = v[j * d:(j + 1) * d]
-            best = min((l2(sv, cbooks[(j, c)]), c)
-                       for c in range(1, kc + 1))
-            assert codes[(i, j)] == best[1], (i, j)
-    for qid in (0, 1):
-        qv = vecs[qid]
-        for i in vecs:
-            total = Decimal(0)
-            recon = []
-            for j in range(m):
-                term = l2(qv[j * d:(j + 1) * d],
-                          cbooks[(j, codes[(i, j)])])
-                total += Decimal(repr(term)).quantize(
-                    Decimal("1.000000000000"),
-                    rounding=ROUND_HALF_UP)
-                recon += cbooks[(j, codes[(i, j)])]
-            assert got[(qid, i)] == pytest.approx(
-                round(float(total), 6), abs=2e-6)
-            # ADC == exact distance to the reconstruction (per-subspace
-            # l2² terms are additive over the concatenation)
-            assert got[(qid, i)] == pytest.approx(
-                l2(qv, recon), abs=1e-5)
-
-    with pytest.raises(ValueError, match="divisor"):
-        quantize.pq_codebooks(df, m=3, k=kc)
-
-
-def test_adc_shuffle_lut_fallback_identical(spark):
-    """ADVICE r13: broadcast_lut=False swaps the |queries|·m·k LUT
-    broadcast for a shuffle-hash join (the nb_classify
-    broadcast_model precedent) — the escape hatch for an unbounded
-    query table.  Results are identical across pq_adc_topk, ivfpq_topk
-    and ivfpq_residual_topk."""
-    import math
-
-    df = spark.createDataFrame(
-        [(i, [float(math.sin(i * 7 + j)) for j in range(8)])
-         for i in range(30)],
-        "vec_id long, embedding array<float>")
-    queries = (df.where(F.col("vec_id").isin(0, 1, 2))
-               .select(F.col("vec_id").alias("query_id"),
-                       F.col("embedding").alias("qvec")))
-    cb = quantize.pq_codebooks(df, m=4, k=3)
-    codes = quantize.pq_encode(df, cb)
-    a = sorted(quantize.pq_adc_topk(queries, cb, codes, k=5).collect())
-    b = sorted(quantize.pq_adc_topk(queries, cb, codes, k=5,
-                                    broadcast_lut=False).collect())
-    assert a == b
-    kw = dict(n_centroids=4, nprobe=2, m=4, kc=3, k=5)
-    assert (sorted(quantize.ivfpq_topk(df, queries, **kw).collect())
-            == sorted(quantize.ivfpq_topk(df, queries,
-                                          broadcast_lut=False,
-                                          **kw).collect()))
-    assert (sorted(quantize.ivfpq_residual_topk(
-                df, queries, **kw).collect())
-            == sorted(quantize.ivfpq_residual_topk(
-                df, queries, broadcast_lut=False, **kw).collect()))
-
-
-def test_pq_recall_report_counts_and_spine(spark):
-    """X60: the report's n_hits equal the overlap between the (already
-    replay-pinned) ADC top-k at each codebook size and the python
-    brute-force full-precision l2 top-k; the (k_codes × query) spine
-    keeps every rung visible with integer recall."""
-    import math
-
-    rows = [(i, [math.sin(i * 5 + j) for j in range(8)])
-            for i in range(25)]
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in v]) for i, v in rows],
-        "vec_id long, embedding array<float>")
-    queries = (df.where(F.col("vec_id").isin(0, 1))
-               .select(F.col("vec_id").alias("query_id"),
-                       F.col("embedding").alias("qvec")))
-    got = {(r.k_codes, r.query_id): r for r in
-           quantize.pq_recall_report(df, queries, k=5,
-                                     kc_values=(2, 4), m=4).collect()}
-    assert len(got) == 4  # 2 kcs x 2 queries, spine-complete
-
-    import struct as _s
-
-    def f32(x):
-        return _s.unpack("f", _s.pack("f", x))[0]
-
-    vecs = {i: [f32(x) for x in v] for i, v in rows}
-
-    def dot(a, b):
-        acc = 0.0
-        for x, y in zip(a, b):
-            acc = acc + x * y
-        return acc
-
-    def l2(a, b):
-        return dot(a, a) - 2.0 * dot(a, b) + dot(b, b)
-
-    for qid in (0, 1):
-        exact = {v for _, v in sorted(
-            ((l2(vec, vecs[qid]), v) for v, vec in vecs.items()))[:5]}
-        for kc in (2, 4):
-            cb = quantize.pq_codebooks(df, m=4, k=kc)
-            adc = {r.vec_id for r in
-                   quantize.pq_adc_topk(
-                       queries.where(F.col("query_id") == qid), cb,
-                       quantize.pq_encode(df, cb), k=5).collect()}
-            r = got[(kc, qid)]
-            assert r.n_hits == len(exact & adc), (kc, qid)
-            assert r.recall_pct == r.n_hits * 100 // 5
-            assert 0 <= r.n_hits <= 5
-
-
-def test_ivfpq_anchor_and_pruning(spark):
-    """X58: at nprobe = n_centroids IVF-PQ probes every bucket and
-    equals plain ADC over the full codes (the exact-anchor
-    equivalence, q138's convention); at nprobe < C every returned
-    neighbor's bucket is one the query probed — the pruning is real
-    and honored."""
-    import math
-
-    from real_time_iot_data_pipeline_project_spark.operators.similarity import (
-        assign_centroids, cosine, sampled_centroids,
-    )
-
-    rows = [(i, [float(math.cos(i * 3 + j)) for j in range(8)])
-            for i in range(40)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    queries = (df.where(F.col("vec_id").isin(0, 1))
-               .select(F.col("vec_id").alias("query_id"),
-                       F.col("embedding").alias("qvec")))
-    full = quantize.ivfpq_topk(df, queries, n_centroids=4, nprobe=4,
-                               m=4, kc=3, k=5)
-    cb = quantize.pq_codebooks(df, m=4, k=3)
-    plain = quantize.pq_adc_topk(queries, cb,
-                                 quantize.pq_encode(df, cb), k=5)
-    assert sorted(map(tuple, full.collect())) \
-        == sorted(map(tuple, plain.collect()))
-
-    pruned = quantize.ivfpq_topk(df, queries, n_centroids=4, nprobe=1,
-                                 m=4, kc=3, k=5).collect()
-    cents = sampled_centroids(df, 4)
-    assigned = {r.vec_id: r.centroid_id for r in
-                assign_centroids(df, cents).collect()}
-    qvec_d = F.transform(F.col("qvec"), lambda x: x.cast("double"))
-    cvec_d = F.transform(F.col("cvec"), lambda x: x.cast("double"))
-    best = {r.query_id: r.centroid_id for r in
-            queries.crossJoin(F.broadcast(cents))
-            .select("query_id", "centroid_id",
-                    cosine(qvec_d, cvec_d).alias("s"))
-            .groupBy("query_id")
-            .agg(F.expr("max_by(centroid_id, struct(s, -centroid_id))")
-                 .alias("centroid_id")).collect()}
-    assert pruned
-    for r in pruned:
-        assert assigned[r.vec_id] == best[r.query_id]
-
-
-def test_ivfpq_residual_adc_is_distance_to_reconstruction(spark):
-    """X61: residual ADC(q, v) equals the exact l2² between q and v's
-    RECONSTRUCTION c(v) + codewords(residual) — per-subspace l2² terms
-    are additive over the concatenation, and the LUT row used is the
-    query's residual against v's OWN centroid (probe-restriction
-    machinery is q155's, pinned by its pruning test)."""
-    import math
-
-    from real_time_iot_data_pipeline_project_spark.operators.similarity import (
-        assign_centroids, sampled_centroids,
-    )
-
-    rows = [(i, [float(math.sin(i * 3 + j) + (i % 4))
-                 for j in range(8)]) for i in range(40)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    queries = (df.where(F.col("vec_id").isin(0, 1))
-               .select(F.col("vec_id").alias("query_id"),
-                       F.col("embedding").alias("qvec")))
-    got = quantize.ivfpq_residual_topk(df, queries, n_centroids=4,
-                                       nprobe=4, m=4, kc=3, k=5).collect()
-    assert got
-
-    import struct as _s
-
-    def f32(x):
-        return _s.unpack("f", _s.pack("f", x))[0]
-
-    vecs = {i: [f32(x) for x in v] for i, v in rows}
-
-    def dot(a, b):
-        acc = 0.0
-        for x, y in zip(a, b):
-            acc = acc + x * y
-        return acc
-
-    def l2(a, b):
-        return dot(a, a) - 2.0 * dot(a, b) + dot(b, b)
-
-    cents = sampled_centroids(df, 4)
-    cvecs = {r.centroid_id: [f32(x) for x in r.cvec]
-             for r in cents.collect()}
-    assigned = {r.vec_id: r.centroid_id
-                for r in assign_centroids(df, cents).collect()}
-    res = {i: [x - y for x, y in zip(vecs[i], cvecs[assigned[i]])]
-           for i in vecs}
-    rdf = spark.createDataFrame(
-        [(i, r) for i, r in res.items()],
-        "vec_id long, rvec array<double>")
-    cb = quantize.pq_codebooks(rdf, m=4, k=3, vec_col="rvec")
-    codes = {(r.vec_id, r.sub_id): r.code
-             for r in quantize.pq_encode(rdf, cb, vec_col="rvec")
-             .collect()}
-    cbooks = {(r.sub_id, r.code_id): [float(x) for x in r.cvec]
-              for r in cb.collect()}
-    for r in got:
-        recon = list(cvecs[assigned[r.vec_id]])
-        for j in range(4):
-            cw = cbooks[(j, codes[(r.vec_id, j)])]
-            for t in range(2):
-                recon[j * 2 + t] += cw[t]
-        qv = vecs[r.query_id]
-        assert r.adc_dist == pytest.approx(l2(qv, recon), abs=1e-5), \
-            (r.query_id, r.vec_id)
 
 
 # ------------------------------------------------------------ corpus stats
@@ -1650,98 +1357,6 @@ def test_scrub_probe_spans_excises_every_occurrence(spark):
     assert got[4].n_tokens_kept == 0               # fully excised
 
 
-def test_pq_refine_distortion_non_increasing_and_drift_free(spark):
-    """X63: one Lloyd step over the product space must not increase
-    total quantization distortion Σ l2²(subvector, assigned codeword)
-    — assignment picks the argmin and the per-cluster mean minimizes
-    summed l2², so each step is non-increasing by construction (on
-    the training corpus itself).  Also pins refine ∘ encode coherence:
-    codes encoded against the refined books use the SAME argmin rule
-    the refinement assigned with."""
-    import math
-
-    from real_time_iot_data_pipeline_project_spark.operators import quantize
-
-    df = spark.createDataFrame(
-        [(i, [float(math.sin(i * 13 + j) + (i % 3)) for j in range(8)])
-         for i in range(40)],
-        "vec_id long, embedding array<float>")
-
-    def distortion(cb):
-        codes = quantize.pq_encode(df, cb)
-        # join each (id, sub) back to its codeword and sum exact l2²
-        m = int(cb.agg(F.countDistinct("sub_id")).head()[0])
-        d = int(cb.select(F.size("cvec").alias("d")).head()["d"])
-        flat = df.select(
-            "vec_id",
-            F.posexplode(quantize._subspaces("embedding", m, d))
-            .alias("sub_id", "svec"))
-        joined = (flat.join(codes, ["vec_id", "sub_id"])
-                  .join(cb.withColumnRenamed("code_id", "code"),
-                        ["sub_id", "code"]))
-        return float(joined.agg(F.sum(
-            quantize._l2sq(F.col("svec"), F.col("cvec"))
-            .cast("decimal(28,14)")).cast("double")).head()[0])
-
-    cb_raw = quantize.pq_codebooks(df, m=4, k=4)
-    cb_r1 = quantize.pq_refine(df, cb_raw, iters=1)
-    cb_r2 = quantize.pq_refine(df, cb_raw, iters=2)
-    d0, d1, d2 = distortion(cb_raw), distortion(cb_r1), distortion(cb_r2)
-    assert d1 <= d0 + 1e-9
-    assert d2 <= d1 + 1e-9
-    # a refined codebook keeps the schema contract (sub_id, code_id,
-    # cvec of width d) and never grows
-    assert cb_r1.columns == ["sub_id", "code_id", "cvec"]
-    assert cb_r1.count() <= cb_raw.count()
-
-
-def test_pq_refined_recall_report_spine_and_raw_anchor(spark):
-    """The refined-vs-raw recall report is spine-complete (2 variants
-    × every query), all-integer, and its 'raw' rows equal the hit
-    counts computed directly from pq_adc_topk against the exact
-    top-k — the report can't drift from the operators it composes."""
-    import math
-
-    from real_time_iot_data_pipeline_project_spark.operators import quantize
-
-    df = spark.createDataFrame(
-        [(i, [float(math.sin(i * 13 + j) + (i % 3)) for j in range(8)])
-         for i in range(40)],
-        "vec_id long, embedding array<float>")
-    queries = (df.where(F.col("vec_id").isin(0, 1, 2))
-               .select(F.col("vec_id").alias("query_id"),
-                       F.col("embedding").alias("qvec")))
-    rep = quantize.pq_refined_recall_report(df, queries, k=5, m=4,
-                                            kc=4, iters=1)
-    rows = rep.collect()
-    assert {(r.variant, r.query_id) for r in rows} == {
-        (v, q) for v in ("raw", "refined") for q in (0, 1, 2)}
-    for r in rows:
-        assert 0 <= r.n_hits <= 5 and r.k == 5
-        assert r.recall_pct == (r.n_hits * 100) // 5
-
-    # raw anchor: replicate hits via the gated operators directly
-    cb = quantize.pq_codebooks(df, m=4, k=4)
-    got = quantize.pq_adc_topk(queries, cb, quantize.pq_encode(df, cb),
-                               k=5)
-    vec_d = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    qvec_d = F.transform(F.col("qvec"), lambda x: x.cast("double"))
-    from pyspark.sql import Window
-    exact = (df.crossJoin(F.broadcast(queries))
-             .select("query_id", "vec_id",
-                     quantize._l2sq(vec_d, qvec_d).alias("d"))
-             .withColumn("rn", F.row_number().over(
-                 Window.partitionBy("query_id")
-                 .orderBy(F.asc("d"), F.asc("vec_id"))))
-             .where(F.col("rn") <= 5).select("query_id", "vec_id"))
-    want = {r.query_id: r.n
-            for r in got.join(exact, ["query_id", "vec_id"])
-            .groupBy("query_id").agg(F.count(F.lit(1)).alias("n"))
-            .collect()}
-    raw_rows = {r.query_id: r.n_hits for r in rows if r.variant == "raw"}
-    assert raw_rows == {q: want.get(q, 0) for q in (0, 1, 2)}
-
-
 def test_dsir_resample_matches_python_lottery_replay(spark):
     """X64 hand case: the resample's winners equal a full python
     replication of logw → clamp(1, 64, 33 + floor(logw)) tickets →
@@ -1776,65 +1391,6 @@ def test_dsir_resample_matches_python_lottery_replay(spark):
     want = [(i, scores[i], wt(scores[i]), t) for t, i in lottery]
     assert sorted((r.doc_id, r.dsir_logw, r.weight, r.ticket)
                   for r in got) == sorted(want)
-
-
-def test_cluster_balanced_sample_rates_and_membership(spark):
-    """X69: on planted clusters (two tight modes of very different
-    sizes around distinct anchors) the sample's rates equal the python
-    replay of q124's n^alpha formula on the CLUSTER sizes, membership
-    is exactly the hash-bucket rule keyed by vec_id, and the rare
-    cluster's keep-rate exceeds the dominant cluster's (the flattening
-    X69 exists for).  alpha=1 at budget 1.0 keeps everything."""
-    from real_time_iot_data_pipeline_project_spark.operators import (
-        sampling,
-        similarity,
-    )
-
-    def vec(anchor, i, dim=8):
-        # tight noise around two orthogonal-ish anchors
-        base = [0.0] * dim
-        base[anchor] = 10.0
-        base[(anchor + 3) % dim] = 5.0
-        return [float(x + math.sin(i * 7 + j) * 0.05)
-                for j, x in enumerate(base)]
-
-    rows = ([(i, vec(0, i)) for i in range(80)]          # dominant mode
-            + [(100 + i, vec(4, i)) for i in range(10)])  # rare mode
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    out = sampling.cluster_balanced_sample(df, n_centroids=2, alpha=0.7,
-                                           budget_frac=0.5)
-    got = out.collect()
-    assert set(out.columns) == {"vec_id", "centroid_id", "rate_pct"}
-
-    # replay: cluster sizes from the gated assignment rule
-    cents = similarity.sampled_centroids(df, 2)
-    assigned = {r.vec_id: r.centroid_id for r in
-                similarity.assign_centroids(df, cents).select(
-                    "vec_id", "centroid_id").collect()}
-    sizes: dict[int, int] = {}
-    for c in assigned.values():
-        sizes[c] = sizes.get(c, 0) + 1
-    n_total = sum(sizes.values())
-    wsum = sum(round(n ** 0.7, 6) for n in sizes.values())
-    rates = {c: min(100, round(100.0 * 0.5 * n_total
-                               * (round(n ** 0.7, 6) / wsum) / n))
-             for c, n in sizes.items()}
-    # the rare cluster keeps a HIGHER per-row rate
-    small = min(sizes, key=sizes.get)
-    big = max(sizes, key=sizes.get)
-    assert rates[small] > rates[big]
-
-    def bucket(i):
-        return int(hashlib.md5(f"cmix|{i}".encode())
-                   .hexdigest()[:15], 16) % 100
-
-    want = {(i, assigned[i], rates[assigned[i]])
-            for i in assigned if bucket(i) < rates[assigned[i]]}
-    assert {(r.vec_id, r.centroid_id, r.rate_pct) for r in got} == want
-
-    full = sampling.cluster_balanced_sample(df, n_centroids=2,
-                                            alpha=1.0, budget_frac=1.0)
-    assert full.count() == len(rows)
 
 
 def test_tokenizer_fertility_hand_computed(spark):
@@ -1910,40 +1466,6 @@ def test_semantic_decontam_catches_paraphrase_exact_screen_misses(spark):
         contamination.semantic_decontam_hits(docs, probes, threshold=0.0)
 
 
-def test_cluster_balanced_report_matches_operator_membership(spark):
-    """X74 (round 15): the report's per-centroid counts equal the
-    OPERATOR's sample grouped by centroid exactly (shared
-    composition — no drift possible), before counts cover the corpus,
-    rates match the operator's, and realized_pct is the one round-6
-    division of exact integers."""
-    from real_time_iot_data_pipeline_project_spark.operators import (
-        sampling,
-    )
-    from tests.conftest import SF_SMOKE
-
-    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
-    rep = {r.centroid_id: r for r in
-           sampling.cluster_balanced_report(
-               emb, key="vec_id", n_centroids=8, alpha=0.7,
-               budget_frac=0.5).collect()}
-    sample = sampling.cluster_balanced_sample(
-        emb, key="vec_id", n_centroids=8, alpha=0.7, budget_frac=0.5)
-    got_counts = {r.centroid_id: r.n for r in
-                  sample.groupBy("centroid_id")
-                  .agg(F.count(F.lit(1)).alias("n")).collect()}
-    got_rates = {r.centroid_id: r.rate_pct for r in
-                 sample.select("centroid_id", "rate_pct")
-                 .distinct().collect()}
-    assert sum(r.n_docs for r in rep.values()) == emb.count()
-    for c, r in rep.items():
-        assert r.n_sampled == got_counts.get(c, 0)
-        assert 0 <= r.n_sampled <= r.n_docs
-        if c in got_rates:
-            assert r.rate_pct == got_rates[c]
-        assert r.realized_pct == round(r.n_sampled * 100.0
-                                       / r.n_docs, 6)
-
-
 # ------------------------------------------------- X75 bigram LM filter
 
 def test_ngram_lm_hand_computed(spark):
@@ -1995,81 +1517,6 @@ def test_ngram_lm_conditional_beats_unigram_and_roundtrip(spark, tmp_path):
                       textops.ngram_lm_scores(docs, lm2,
                                               broadcast_lm=False)
                       .collect())) == direct
-
-
-# ---------------------------------------------------- X76/X77 SQ8 tier
-
-def test_sq_topk_hand_computed_and_near_exact(spark):
-    """X76: on a planted grid the SQ8 reconstruction is exact at the
-    grid corners (codes 0 and 255 reconstruct min and max... the
-    affine floor maps max to code 255 exactly), so top-k equals the
-    exact top-k; a mid-grid vector reconstructs within one grid step
-    and the returned distance matches the closed-form python replay."""
-    import math as _m
-
-    rows = [(i, [float(i), float(10 - i)]) for i in range(11)]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    queries = spark.createDataFrame([(0, [0.0, 10.0])],
-                                    "query_id long, qvec array<float>")
-    got = quantize.sq_topk(emb, queries, k=3).collect()
-    assert [r.vec_id for r in got] == [0, 1, 2]
-    # python replay: mn=0, scale=10 per dim; code=floor(v*25.5),
-    # deq=code*10/255
-    def deq(v):
-        return [_m.floor((x - 0.0) * 255.0 / 10.0) * 10.0 / 255.0
-                for x in v]
-    exp = [round(sum((a - b) ** 2 for a, b in zip([0.0, 10.0], deq(v))), 6)
-           for v in ([0.0, 10.0], [1.0, 9.0], [2.0, 8.0])]
-    assert [r.sq_dist for r in got] == pytest.approx(exp, abs=2e-6)
-
-
-def test_compression_recall_sq8_holds_where_pq_pays(spark):
-    """X77's whole story on a planted corpus: SQ8 (fine grid) keeps
-    recall at 100 while PQ at a tiny codebook cannot exceed its
-    quantization ceiling; the spine keeps both tiers' rows visible
-    for every query."""
-    import random
-
-    rng = random.Random(7)
-    rows = [(i, [rng.uniform(0, 1) for _ in range(8)]) for i in range(40)]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    queries = spark.createDataFrame(
-        [(i, rows[i][1]) for i in range(3)],
-        "query_id long, qvec array<float>")
-    rep = quantize.compression_recall_report(emb, queries, k=5,
-                                             m=4, kc=2).collect()
-    assert {(r.tier, r.query_id) for r in rep} == {
-        (t, q) for t in ("pq", "sq8") for q in range(3)}
-    sq = {r.query_id: r.recall_pct for r in rep if r.tier == "sq8"}
-    pq = {r.query_id: r.recall_pct for r in rep if r.tier == "pq"}
-    assert all(v == 100 for v in sq.values())
-    assert sum(pq.values()) <= sum(sq.values())
-
-
-def test_ivfsq_in_bucket_ranking_near_exact(spark):
-    """X78: with every centroid probed (nprobe = n_centroids) the
-    IVF-SQ result must equal the plain SQ8 top-k (pruning is the ONLY
-    recall mechanism — the SQ tier itself ranks in-bucket like the
-    flat scan); with nprobe=1 results are a subset of the probed
-    bucket's members."""
-    import random
-
-    rng = random.Random(3)
-    rows = [(i, [rng.uniform(0, 1) for _ in range(8)]) for i in range(60)]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    queries = spark.createDataFrame(
-        [(i, rows[i][1]) for i in range(2)],
-        "query_id long, qvec array<float>")
-    full = quantize.ivfsq_topk(emb, queries, n_centroids=4, nprobe=4,
-                               k=5)
-    flat = quantize.sq_topk(emb, queries, k=5)
-    assert sorted(map(tuple, full.collect())) == \
-        sorted(map(tuple, flat.collect()))
-    pruned = quantize.ivfsq_topk(emb, queries, n_centroids=4, nprobe=1,
-                                 k=5).collect()
-    assert len(pruned) > 0
-    flat_ids = {(r.query_id, r.vec_id) for r in flat.collect()}
-    assert all(isinstance(r.sq_dist, float) for r in pruned)
 
 
 def test_topgram_report_hand_computed(spark):

@@ -1,6 +1,6 @@
-"""Dedup & similarity operators on planted near-duplicates: MinHash-LSH
-and SimHash must surface a planted near-dup pair; exact dedup must
-collapse exact copies; ANN top-1 must return the query itself."""
+"""Dedup operators on planted near-duplicates: MinHash-LSH and SimHash
+must surface a planted near-dup pair; exact dedup must collapse exact
+copies."""
 
 from __future__ import annotations
 
@@ -8,7 +8,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from real_time_iot_data_pipeline_project_spark.operators import dedup, similarity
+from real_time_iot_data_pipeline_project_spark.operators import dedup
 
 BASE = (
     "the quick brown fox jumps over the lazy dog while the sun sets over "
@@ -64,104 +64,6 @@ def test_simhash_near_dups(docs):
     pairs = dedup.simhash_near_dups(docs, max_hamming=3)
     got = {(r.id_a, r.id_b) for r in pairs.collect()}
     assert (0, 1) in got
-
-
-@pytest.fixture(scope="module")
-def vectors(spark):
-    import random
-
-    rng = random.Random(0)
-    base = [rng.gauss(0, 1) for _ in range(16)]
-    near = [x + rng.gauss(0, 0.01) for x in base]
-    rows = [(0, [float(x) for x in base]), (1, [float(x) for x in near])]
-    for i in range(2, 30):
-        rows.append((i, [float(rng.gauss(0, 1)) for _ in range(16)]))
-    return spark.createDataFrame(rows, ["vec_id", "embedding"])
-
-
-def test_cosine_topk_self_first(vectors):
-    q = vectors.filter("vec_id = 0").head().embedding
-    top = similarity.cosine_topk(vectors, q, k=3).collect()
-    assert top[0].vec_id == 0
-    assert abs(top[0].cosine_sim - 1.0) < 1e-9
-    assert top[1].vec_id == 1  # planted near vector
-
-
-def test_lsh_near_dup_pairs(vectors):
-    planes = similarity.hyperplanes(dim=16, n_planes=4, seed=1)
-    pairs = similarity.cosine_near_dup_lsh(vectors, planes, threshold=0.99)
-    got = {(r.id_a, r.id_b) for r in pairs.collect()}
-    assert (0, 1) in got
-
-
-def test_banded_lsh_finds_planted_pair(vectors):
-    # 8 planes / 2 bands: near-identical vectors share all 4 bits of at
-    # least one band with overwhelming probability
-    planes = similarity.hyperplanes(dim=16, n_planes=8, seed=1)
-    pairs = similarity.cosine_near_dup_lsh(vectors, planes, threshold=0.99, bands=2)
-    got = {(r.id_a, r.id_b) for r in pairs.collect()}
-    assert (0, 1) in got
-    # no duplicate pair rows even when both bands match
-    all_pairs = pairs.collect()
-    assert len(all_pairs) == len({(r.id_a, r.id_b) for r in all_pairs})
-
-
-def test_ivf_full_probe_equals_exact(spark):
-    """Structural invariant: probing every bucket IS the exact scan."""
-    from tests.conftest import SF_CORRECT
-    from pyspark.sql import functions as F
-
-    emb = spark.read.parquet(f"{SF_CORRECT}/embeddings.parquet")
-    q = [float(x) for x in emb.filter(F.col("vec_id") == 0).head().embedding]
-    exact = {r.vec_id for r in similarity.cosine_topk(emb, q, k=20).collect()}
-    got16 = {
-        r.vec_id
-        for r in similarity.ivf_topk(emb, q, k=20, n_centroids=16, nprobe=16).collect()
-    }
-    assert got16 == exact
-
-
-def test_ivf_kmeans_recall_on_clustered_data(spark):
-    """IVF quality gate (VERDICT r1 #10): on data WITH cluster structure,
-    hash-sampled centroids + one Lloyd iteration recover it — recall = 1.0
-    probing 1/4 of the buckets. (On the clusterless sf0.01 embeddings,
-    measured recall ≈ probed fraction for ANY centroid scheme — that's
-    inherent to IVF, so the quality test belongs on clustered data.)"""
-    import random
-
-    rng = random.Random(7)
-    rows = []
-    for c in range(4):  # 4 well-separated clusters of 25
-        center = [rng.gauss(0, 1) * 5 for _ in range(16)]
-        for i in range(25):
-            rows.append(
-                (c * 25 + i, [float(x + rng.gauss(0, 0.05)) for x in center])
-            )
-    df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    q = rows[0][1]
-    exact = {r.vec_id for r in similarity.cosine_topk(df, q, k=20).collect()}
-    got = {
-        r.vec_id
-        for r in similarity.ivf_topk(
-            df, q, k=20, n_centroids=4, nprobe=1, kmeans_iters=1
-        ).collect()
-    }
-    assert len(exact & got) / 20 >= 0.9
-
-
-def test_kmeans_refine_is_deterministic(spark):
-    """The DECIMAL-sum update makes centroids partition-order-free."""
-    from tests.conftest import SF_CORRECT
-    from pyspark.sql import functions as F
-
-    emb = spark.read.parquet(f"{SF_CORRECT}/embeddings.parquet")
-    init = (
-        emb.orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id").limit(8)
-        .select(F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("cvec"))
-    )
-    c1 = similarity.kmeans_refine(emb, init, iters=1).collect()
-    c2 = similarity.kmeans_refine(emb.repartition(13), init, iters=1).collect()
-    assert sorted(map(str, c1)) == sorted(map(str, c2))
 
 
 def test_winnowing_shared_substring_guarantee(spark):
@@ -366,20 +268,6 @@ def test_connected_components_raises_on_non_convergence(spark):
     assert {r.component for r in comp.collect()} == {0}
 
 
-def test_recommended_planes_scales_with_n():
-    assert similarity.recommended_planes(1_000, bands=2) == 2 * 4
-    assert similarity.recommended_planes(1_000_000, bands=4, target_bucket_rows=64) == 4 * 14
-    # monotone in n
-    assert similarity.recommended_planes(10**9) >= similarity.recommended_planes(10**6)
-
-
-def test_ivf_topk_recovers_near_neighbor(vectors):
-    q = vectors.filter("vec_id = 0").head().embedding
-    top = similarity.ivf_topk(vectors, q, k=3, n_centroids=4, nprobe=2).collect()
-    assert top[0].vec_id == 0
-    assert top[1].vec_id == 1
-
-
 def test_multimodal_feature_stub(spark):
     from real_time_iot_data_pipeline_project_spark.operators import multimodal
 
@@ -491,164 +379,6 @@ def test_star_cc_converges_on_high_diameter_chain(spark):
     rows = comp.collect()
     assert len(rows) == n
     assert {r.component for r in rows} == {0}
-
-
-# ------------------------------------------------- SemDeDup (X38)
-
-def _sd_centroids(spark):
-    return spark.createDataFrame(
-        [(100, [1.0, 0.0, 0.0, 0.0]), (200, [0.0, 1.0, 0.0, 0.0])],
-        ["centroid_id", "cvec"])
-
-
-def test_semantic_dedup_planted_groups(spark):
-    """Two centroid buckets; {1,2,3} mutually ≥ τ near c1 (one group,
-    keep=1), 4 in the same bucket but dissimilar (singleton), {5,6}
-    a pair near c2 (keep=5). Exact group labels and keep flags."""
-    vecs = spark.createDataFrame([
-        (1, [1.0, 0.0, 0.0, 0.0]),
-        (2, [0.99, 0.05, 0.0, 0.0]),
-        (3, [0.98, 0.0, 0.05, 0.0]),
-        (4, [0.6, 0.0, -0.8, 0.0]),      # → c1 (cos .6 vs 0) but ⊥-ish to 1/2/3
-        (5, [0.0, 1.0, 0.0, 0.0]),
-        (6, [0.05, 0.99, 0.0, 0.0]),
-    ], ["vec_id", "embedding"])
-    out = {r.vec_id: (r.centroid_id, r.group_id, r.keep)
-           for r in similarity.semantic_dedup(
-               vecs, _sd_centroids(spark), threshold=0.9).collect()}
-    assert out == {
-        1: (100, 1, True), 2: (100, 1, False), 3: (100, 1, False),
-        4: (100, 4, True), 5: (200, 5, True), 6: (200, 5, False)}
-
-
-def test_semantic_dedup_cross_bucket_pairs_missed_by_design(spark):
-    """The documented recall trade: a ≥ τ pair split across centroid
-    buckets does NOT group (pairwise work is bucket-scoped)."""
-    vecs = spark.createDataFrame([
-        (1, [1.0, 0.1, 0.0, 0.0]),  # → c1
-        (2, [0.6, 0.8, 0.0, 0.0]),  # → c2, cos(1,2) ≈ 0.68 ≥ τ
-    ], ["vec_id", "embedding"])
-    out = {r.vec_id: (r.centroid_id, r.group_id, r.keep)
-           for r in similarity.semantic_dedup(
-               vecs, _sd_centroids(spark), threshold=0.6).collect()}
-    assert out[1][0] != out[2][0]            # different buckets
-    assert out == {1: (100, 1, True), 2: (200, 2, True)}
-
-
-def test_semantic_dedup_one_survivor_per_group(spark):
-    """On the real embeddings (sf0.001): every group keeps exactly one
-    row (its min id), every vector appears exactly once, and pruning
-    keep=true removes exactly (n - n_groups) rows."""
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    cents = similarity.sampled_centroids(emb, n_centroids=16)
-    out = similarity.semantic_dedup(emb, cents, threshold=0.3).cache()
-    n = emb.count()
-    assert out.count() == n
-    groups = out.groupBy("group_id").agg(
-        F.sum(F.col("keep").cast("int")).alias("keeps"),
-        F.min("vec_id").alias("mn"))
-    bad = groups.filter((F.col("keeps") != 1) | (F.col("mn") != F.col("group_id")))
-    assert bad.count() == 0
-    n_groups = groups.count()
-    assert out.filter("keep").count() == n_groups < n  # non-trivial pruning
-    out.unpersist()
-
-
-def test_two_level_assign_equals_flat_on_separated_data(spark):
-    """On data whose centroids form coherent super-groups — the shape
-    the coarse quantization is FOR — two-level == flat exactly: 4
-    centroids in 2 correlated pairs (within-pair cos ≈ 0.98, cross-pair
-    0), coarse reps land one per pair (md5 order picks ids 1 and 2), so
-    every vector's true argmax centroid is inside its coarse bucket.
-    (Mutually ORTHOGONAL centroids are the adversarial case — every
-    cross-cosine ties at 0 and bucketing is arbitrary; that loss is the
-    documented approximation, not a bug.)"""
-    base = [[1.0, 0.8, 0, 0], [0.8, 1.0, 0, 0],
-            [0, 0, 1.0, 0.8], [0, 0, 0.8, 1.0]]
-    rows = []
-    for ci, b in enumerate(base):
-        for j, eps in enumerate((0.0, 0.05, -0.04, 0.08)):
-            v = [x + (eps if k == (ci + 2) % 4 else 0.0)
-                 for k, x in enumerate(b)]
-            rows.append((ci * 10 + j, [float(x) for x in v]))
-    vecs = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    cents = spark.createDataFrame(
-        [(ci, [float(x) for x in b]) for ci, b in enumerate(base)],
-        ["centroid_id", "cvec"])
-    flat = {r.vec_id: r.centroid_id for r in
-            similarity.assign_centroids(vecs, cents).collect()}
-    two = {r.vec_id: r.centroid_id for r in
-           similarity.assign_centroids_two_level(vecs, cents, n_coarse=2).collect()}
-    assert flat == two
-    assert set(flat.values()) == {0, 1, 2, 3}
-
-
-def test_two_level_assign_is_bucket_consistent_on_real_data(spark):
-    """Internal contract on the real embeddings: every vector assigned
-    exactly once, and its fine centroid belongs to the vector's OWN
-    coarse bucket (the definition of the two-level rule); agreement
-    with the flat rule is high but not required to be total."""
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    cents = similarity.sampled_centroids(emb, n_centroids=16)
-    two = similarity.assign_centroids_two_level(emb, cents).cache()
-    assert two.count() == emb.count()
-    assert two.select("vec_id").distinct().count() == emb.count()
-    flat = similarity.assign_centroids(emb, cents)
-    both = (two.select("vec_id", F.col("centroid_id").alias("c2"))
-            .join(flat.select("vec_id", F.col("centroid_id").alias("c1")),
-                  "vec_id"))
-    agree = both.filter("c1 = c2").count() / both.count()
-    # the sf0.001 embeddings are CLUSTERLESS (random vectors) — the
-    # worst case for coarse quantization; measured agreement ≈ 0.47,
-    # still ~7× the 1/16 random-assignment rate. On clustered data the
-    # companion test pins exact equality.
-    assert agree > 0.25, agree
-    # THE named invariant, asserted independently via the flat rule as
-    # the spec: each vector's assigned fine centroid must live in the
-    # vector's OWN coarse bucket — i.e. the vector's coarse argmax ==
-    # its fine centroid's coarse argmax (coarse reps map to themselves)
-    n_coarse = 4  # ceil(sqrt(16)), the default the operator derives
-    coarse = (similarity.sampled_centroids(cents, n_coarse,
-                                           vec_col="cvec",
-                                           id_col="centroid_id")
-              .select(F.col("centroid_id").alias("coarse_of"),
-                      F.col("cvec").alias("cv")))
-    coarse_cents = coarse.select(F.col("coarse_of").alias("centroid_id"),
-                                 F.col("cv").alias("cvec"))
-    v_coarse = similarity.assign_centroids(emb, coarse_cents).select(
-        "vec_id", F.col("centroid_id").alias("v_bucket"))
-    coarse_ids = {r.coarse_of for r in coarse.collect()}
-    f_coarse = {r.fine_id: (r.fine_id if r.fine_id in coarse_ids
-                            else r.centroid_id)
-                for r in similarity.assign_centroids(
-                    cents.select(F.col("centroid_id").alias("fine_id"),
-                                 F.col("cvec").alias("fine_vec")),
-                    coarse_cents, vec_col="fine_vec",
-                    id_col="fine_id").collect()}
-    joined = two.select("vec_id", "centroid_id").join(v_coarse, "vec_id")
-    bad = [r for r in joined.collect()
-           if f_coarse[r.centroid_id] != r.v_bucket]
-    assert not bad, bad[:5]
-    two.unpersist()
-
-
-def test_semantic_dedup_two_level_keeps_invariants(spark):
-    """two_level=True preserves the operator's structural contract on
-    the real embeddings: one survivor per group, min-id label, full
-    coverage, non-trivial pruning."""
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    cents = similarity.sampled_centroids(emb, n_centroids=16)
-    out = similarity.semantic_dedup(emb, cents, threshold=0.3,
-                                    two_level=True).cache()
-    n = emb.count()
-    assert out.count() == n
-    groups = out.groupBy("group_id").agg(
-        F.sum(F.col("keep").cast("int")).alias("keeps"),
-        F.min("vec_id").alias("mn"))
-    assert groups.filter(
-        (F.col("keeps") != 1) | (F.col("mn") != F.col("group_id"))).count() == 0
-    assert out.filter("keep").count() < n
-    out.unpersist()
 
 
 # --- X39: stride-1 duplicate-span removal ---------------------------------

@@ -145,7 +145,6 @@ FLAGSHIP = [
     # the layout with the same zorder_key expression; official rows
     # r11..r14)
     "q123_leakage_safe_splits",
-    "q126_semantic_dedup_2l",
     "q129_dup_span_incremental",
     "q133_bpe_sequence_packing",
     # round-12 promotions (rotation #8, VERDICT r11 item 1): the
@@ -183,7 +182,6 @@ FLAGSHIP = [
     "q142_bpe_hash_ranks",
     "q143_epoch_plan",
     "q145_source_novelty",
-    "q146_embedding_drift",
     "q149_naive_bayes_langid",
     # (round 15, rotation #11: q151 rotated out — the window-grid
     # excision machinery is q129's gated rule verbatim against the
@@ -201,11 +199,12 @@ FLAGSHIP = [
     # (X68), cluster-balanced sampling (X69), tokenizer fertility
     # (X70), and the semantic decontamination screen (X71); the
     # persisted-store rows (X62, X65-X68) left with the index store
-    "q160_pq_refined_recall",
     "q161_dsir_resample",
-    "q167_cluster_balanced_sample",
     "q168_tokenizer_fertility",
     "q169_semantic_decontam",
+    # (vector-tier cut: q126/q146/q160/q167 were deleted with the
+    # vector tier, together with q37-q39/q68/q154/q155/q158 and the
+    # rest of the queries over the embeddings table)
 ]
 
 # The exact round-6 official window (VERDICT r3 item 8: pin it so a
@@ -286,13 +285,23 @@ FLAGSHIP = [
 # rows with them (q148/q159/q162-q166).  The seven deferred twins
 # whose only survivors were among them (q37/q38/q39/q68/q154/q155/
 # q158) were promoted back into the window to refill it to 50.
+# Vector-tier cut (ROADMAP item 5): the rest of the queries over the
+# embeddings table were deleted, taking eleven window rows with them
+# (q37/q38/q39/q68/q126/q146/q154/q155/q158/q160/q167).  The window
+# was refilled with the deferred twins whose only survivor was deleted
+# (q104/q124 — q167; q122 — q146), the POST_WINDOW survivors
+# q173/q177/q179, four of the original twins with no SUBSUMPTION entry
+# (q10/q17/q19/q24; q42 stays deferred) and the dashboard's
+# global-metrics panel q40.
 EXPECTED_WINDOW = [
+    "q10_union_append",
+    "q17_value_counts",
+    "q19_binning",
     "q23_ewma",
+    "q24_retention_last_n",
     "q27_iot_pipeline",
     "q32_minhash_lsh_pairs",
-    "q37_cosine_topk",
-    "q38_ivf_topk",
-    "q39_embedding_near_dup",
+    "q40_global_metrics",
     "q57_cube_rollup",
     "q79_winnow_overlap_bounded",
     "q47_session_windows",
@@ -302,7 +311,6 @@ EXPECTED_WINDOW = [
     "q48_training_data_pipeline",
     "q62_shard_stats",
     "q64_chunk_dedup",
-    "q68_embedding_quantization",
     "q75_incremental_dedup",
     "q80_image_decode_stats",
     "q86_time_weighted_avg",
@@ -311,13 +319,15 @@ EXPECTED_WINDOW = [
     "q93_conversion_funnel",
     "q94_shipping_priority",
     "q102_dq_audit",
+    "q104_weighted_sample",
     "q106_aligned_corr",
     "q109_interval_join",
     "q110_history_star",
     "q112_scd2_incremental",
     "q120_stream_heavy_fold",
+    "q122_drift_report",
     "q123_leakage_safe_splits",
-    "q126_semantic_dedup_2l",
+    "q124_temperature_mix",
     "q129_dup_span_incremental",
     "q133_bpe_sequence_packing",
     "q136_zorder_pruned_read",
@@ -327,16 +337,13 @@ EXPECTED_WINDOW = [
     "q142_bpe_hash_ranks",
     "q143_epoch_plan",
     "q145_source_novelty",
-    "q146_embedding_drift",
     "q149_naive_bayes_langid",
-    "q158_ivfpq_residual",
-    "q155_ivfpq_topk",
-    "q154_pq_adc_topk",
     "q161_dsir_resample",
     "q169_semantic_decontam",
     "q168_tokenizer_fertility",
-    "q167_cluster_balanced_sample",
-    "q160_pq_refined_recall",
+    "q173_ngram_lm_perplexity",
+    "q177_topgram_report",
+    "q179_stream_lm_fold",
 ]
 
 # Round-4/6 deferrals: each subsumed query's operator stays asserted by
@@ -371,9 +378,9 @@ SUBSUMPTION = {
     # same pair set and is the production shape for the operator
     "q34_ngram_jaccard_pairs": ["q32_minhash_lsh_pairs"],
     # P6/W4 interval retention: trailing event-time window arithmetic
-    # is q86's event-time RANGE-frame core (count-based twin q24
-    # deferred since round 1; r12 re-point: former survivor q83
-    # deferred, itself subsumed by q86)
+    # is q86's event-time RANGE-frame core (count-based twin q24 is
+    # in the window; r12 re-point: former survivor q83 deferred,
+    # itself subsumed by q86)
     "q41_retention_interval": ["q86_time_weighted_avg"],
     # F8 day/night labels inside q27's clean chain; F26 NOAA astro chain
     # stays pinned by tests/test_astro.py and the local oracle gate
@@ -431,10 +438,6 @@ SUBSUMPTION = {
     # T4 tumbling window: q88's time-bucket agg is the richer twin; q47
     # holds the streaming windowed-agg family row
     "q22_tumbling_window": ["q88_ohlc_bars", "q47_session_windows"],
-    # A3/A13 global scalar aggregates (r8 re-point: former survivor
-    # q11 deferred): q106's closed-form corr pass + q102's
-    # conditional-agg audit
-    "q40_global_metrics": ["q106_aligned_corr", "q102_dq_audit"],
     # --- round 8 (rotation #4, VERDICT r7 item 1: open slots for
     # q103/q105/q106/q108 + q110-q116) ---
     # A1 grouped multi-agg over lineitem: q94's grouped decimal-exact
@@ -484,11 +487,9 @@ SUBSUMPTION = {
     # funnel stage counts = conditional aggregates over q48's verbatim
     # gate chain; the conditional-agg audit shape is q102's
     "q69_curation_funnel": ["q48_training_data_pipeline", "q102_dq_audit"],
-    # pure-hash split membership (r15 re-point: former co-survivor
-    # q124 deferred): promoted q123's cluster-keyed hash lottery +
-    # promoted q167's cluster-keyed temperature-rate membership
-    "q77_train_val_test": ["q123_leakage_safe_splits",
-                           "q167_cluster_balanced_sample"],
+    # pure-hash split membership: promoted q123's cluster-keyed hash
+    # lottery (former co-survivor q167 deleted with the vector tier)
+    "q77_train_val_test": ["q123_leakage_safe_splits"],
     # backward as-of: q92's feature matrix runs the same asof_join
     # callable keyed by (user, signal) (r12 re-point: former survivor
     # q85 deferred — q92 carries the as-of family row)
@@ -530,11 +531,10 @@ SUBSUMPTION = {
     # tests/test_textfns.py
     "q60_repetition_signals": ["q54_tfidf_top_terms",
                                "q48_training_data_pipeline"],
-    # pure-hash stratified membership (r15 re-point: former co-
-    # survivor q124 deferred): promoted q123/q167 carry the
-    # hash-lottery family; assign_split pinned by tests/test_sampling
-    "q61_stratified_sample": ["q123_leakage_safe_splits",
-                              "q167_cluster_balanced_sample"],
+    # pure-hash stratified membership: promoted q123 carries the
+    # hash-lottery family (former co-survivor q167 deleted with the
+    # vector tier); assign_split pinned by tests/test_sampling
+    "q61_stratified_sample": ["q123_leakage_safe_splits"],
     # scan-stage regexp redaction chain runs with q48's gate shape; the
     # PII patterns stay value-pinned by tests/test_textfns.py
     "q63_pii_redaction": ["q48_training_data_pipeline"],
@@ -570,10 +570,8 @@ SUBSUMPTION = {
     # token counts — the richer production twin
     "q67_sequence_packing": ["q133_bpe_sequence_packing"],
     # pure-hash pmod membership: promoted q123's cluster-keyed hash
-    # lottery + promoted q167's cluster-keyed temperature membership
-    # (r15 re-point: former co-survivor q124 deferred)
-    "q70_epoch_shuffle": ["q123_leakage_safe_splits",
-                          "q167_cluster_balanced_sample"],
+    # lottery (former co-survivor q167 deleted with the vector tier)
+    "q70_epoch_shuffle": ["q123_leakage_safe_splits"],
     # stride-window transform+explode: scan-stage sequence slicing is
     # q54's token-explode prefix; the sample-construction (packing
     # module) family row is promoted q133
@@ -609,11 +607,6 @@ SUBSUMPTION = {
     # bounded mergeable state
     "q103_incremental_rollup": ["q112_scd2_incremental",
                                 "q120_stream_heavy_fold"],
-    # integer-lottery weighted sample: promoted q167's cluster-
-    # balanced mix IS weighted sampling by per-stratum rate (richer:
-    # it also computes the rates AND the strata; r15 re-point: former
-    # survivor q124 deferred — q167's oracle contains its rate SQL)
-    "q104_weighted_sample": ["q167_cluster_balanced_sample"],
     # skew diagnosis feeds q50's salted join (the in-window skew
     # family row); groupBy-count + TakeOrderedAndProject is q94's
     "q105_skew_report": ["q50_salted_join", "q94_shipping_priority"],
@@ -634,21 +627,15 @@ SUBSUMPTION = {
     # itself subsumed by the epoch generalization; r15 re-point:
     # former co-survivor q124 deferred): promoted q143's epoch plan IS
     # the capacity-capped mixture solver (reduces exactly to the
-    # waterfill at capacity E·C); q167 holds the rate-membership
-    # family row at the cluster stratum
-    "q66_domain_mixing": ["q143_epoch_plan",
-                          "q167_cluster_balanced_sample"],
+    # waterfill at capacity E·C; former co-survivor q167 deleted with
+    # the vector tier)
+    "q66_domain_mixing": ["q143_epoch_plan"],
     # unpivot/melt map-side Expand: the inverse shape of q92's pivot
     # stage; the no-shuffle Expand plan stays in tests/test_plans.py
     "q108_unpivot_melt": ["q92_feature_matrix"],
     # WAV real decode: same mapInPandas real-codec tier as q80's PNG
     # decode; WAV values stay pinned by tests/test_multimodal.py
     "q91_audio_decode_stats": ["q80_image_decode_stats"],
-    # embed→ANN handoff = composition of two in-window parts (r15
-    # re-point: former co-survivor q118 deferred — promoted q169
-    # builds the same hashing embedding on both of its sides; the
-    # persistent-index search co-survivor left with the index store)
-    "q119_embed_ann": ["q169_semantic_decontam"],
     # --- round 13 (rotation #9, VERDICT r12 item 1: open slots for
     # the round-12 operators q142-q151) ---
     # batch Misra-Gries summary: q120's streaming fold hash-gates
@@ -659,15 +646,6 @@ SUBSUMPTION = {
     # the same broadcast-model scoring join at classifier tier
     # (richer: decimal-exact log-sum argmax over L labels)
     "q117_model_scores": ["q149_naive_bayes_langid"],
-    # text-profile PSI drift: promoted q146 folds the SAME
-    # psi_from_cells tail at the richer embedding-space tier; the
-    # text rows stay exercised by the release drift-gate e2e tests
-    "q122_drift_report": ["q146_embedding_drift"],
-    # single-level SemDeDup: q126's two-level path is the O(n·√C)
-    # production shape of the same bucketed-cosine rule (r14 re-point:
-    # former co-survivor q132, the streaming fold, deferred after its
-    # fold==batch rows landed r11..r13)
-    "q125_semantic_dedup": ["q126_semantic_dedup_2l"],
     # batch duplicate-span removal: q129 (incremental vs a span
     # store) replays the batch excision rule exactly (r14 re-point:
     # former co-survivor q130, the streaming fold, deferred after its
@@ -675,7 +653,7 @@ SUBSUMPTION = {
     "q127_dup_span_removal": ["q129_dup_span_incremental"],
     # edit-distance LSH verify: the verification tier of the near-dup
     # family — the DP runs only on q32's LSH-bounded candidate pairs
-    # (the q34/q37/q56 verification-tier precedent)
+    # (the q34/q56 verification-tier precedent)
     "q128_edit_distance_verify": ["q32_minhash_lsh_pairs"],
     # BPE token frequency, merge-loop rank path: promoted q142 gates
     # the SAME frequency table under the production rank_impl='hash'
@@ -699,12 +677,6 @@ SUBSUMPTION = {
     # q161's oracle wraps its SQL); the release --ml-seed stage stays
     # e2e-pinned to the operator's rule
     "q147_moore_lewis": ["q161_dsir_resample"],
-    # streaming SemDeDup fold: its gated claim is fold == batch
-    # (official r11..r13); q126 keeps the batch bucketed-cosine rule
-    # in-window, q120 + promoted q156 carry the exactly-once fold
-    # family rows
-    "q132_stream_semantic_dedup": ["q126_semantic_dedup_2l",
-                                   "q120_stream_heavy_fold"],
     # streaming span-scrub fold: same fold == batch claim (official
     # r11..r13); q129's incremental tier replays the batch excision
     # rule exactly
@@ -723,10 +695,6 @@ SUBSUMPTION = {
     # BOTH of its sides — its oracle contains q118's CTEs verbatim,
     # so the bit-identical determinism claim stays hash-gated
     "q118_hashing_embed": ["q169_semantic_decontam"],
-    # temperature mixture: promoted q167 runs the SAME X37 integer-
-    # percent rates + hash-bucket membership with centroid_id as the
-    # stratum (its oracle contains q124's rate SQL verbatim)
-    "q124_temperature_mix": ["q167_cluster_balanced_sample"],
     # 2-dim Z-order interleave: q136's gated pruned read WRITES the
     # layout with the same zorder_key expression — the curve
     # arithmetic rides inside the gated consumer
@@ -745,9 +713,6 @@ SUBSUMPTION = {
     # streaming DSIR pool fold: fold == batch landed officially (r14);
     # promoted q161 keeps the batch DSIR rule in-window
     "q156_stream_dsir_pool": ["q161_dsir_resample"],
-    # PQ recall@k curve: promoted q160 runs the SAME pq recall spine
-    # with the raw rung riding inside the gated report
-    "q157_pq_recall": ["q160_pq_refined_recall"],
 }
 
 

@@ -25,27 +25,6 @@ def test_no_oracle_queries_run(spark):
         assert df.count() >= 0
 
 
-def test_kmeans_refined_ivf_matches_oracle(spark, duck):
-    """The offline index-build path (one Lloyd iteration) stays
-    cross-engine exact even though the headline q38 serves with
-    kmeans_iters=0 — the DECIMAL-sum centroid update must hash-match
-    the unrolled-CTE SQL."""
-    from pyspark.sql import DataFrame, functions as F
-    from real_time_iot_data_pipeline_project_spark.operators import similarity
-
-    def refined(s, sf_dir) -> DataFrame:
-        emb = registry._t(s, sf_dir, "embeddings")
-        qvec = emb.filter(F.col("vec_id") == 0).select("embedding").head()[0]
-        out = similarity.ivf_topk(
-            emb, [float(x) for x in qvec], k=20, n_centroids=16, nprobe=4, kmeans_iters=1
-        )
-        return out.select("vec_id", F.round("cosine_sim", 6).alias("cosine_sim"))
-
-    problems = compare(spark, duck, "ivf_kmeans1", refined,
-                       registry._ivf_sql(kmeans_iters=1), SF_SMOKE)
-    assert not problems, problems
-
-
 def test_entry_smoke(spark):
     import __spark_entry__ as e
 

@@ -52,11 +52,6 @@ def test_topk_is_take_ordered_not_global_sort(spark):
     assert "TakeOrderedAndProject" in plan
 
 
-def test_cosine_topk_take_ordered(spark):
-    plan = plan_of(spark, "q37_cosine_topk")
-    assert "TakeOrderedAndProject" in plan
-
-
 def test_grouped_agg_has_partial_aggregation(spark):
     plan = plan_of(spark, "q01_pricing_summary")
     # map-side combine: partial aggregation below the exchange
@@ -277,15 +272,6 @@ def test_sequence_packing_single_shard_shuffle(spark):
     assert plan.count("Exchange") == 1
     assert "FlatMapGroupsInPandas" in plan
     assert "SinglePartition" not in plan
-
-
-def test_quantization_dims_join_is_broadcast(spark):
-    """q68: the per-dim min/max table (embedding-width rows) must join
-    back broadcast — a shuffle join keyed by pos would repartition the
-    whole corpus by a 64-value key (extreme skew at scale)."""
-    plan = plan_of(spark, "q68_embedding_quantization")
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
 
 
 def test_unigram_logprob_freq_join_is_broadcast(spark):

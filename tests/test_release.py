@@ -374,64 +374,6 @@ def test_refresh_annotations_reads_jsonl_release(spark, tmp_path):
     assert spark.read.parquet(out).count() == counts["n_docs"]
 
 
-def test_release_embedding_drift_stable_and_semantic_shift(spark, tmp_path):
-    """X50 in the release gate: a same-corpus re-release reads a
-    STABLE embedding_centroid row; a vocabulary pivot that leaves the
-    text profile untouched (every token replaced by a same-length
-    different token — identical n_tok and punct bins) is INVISIBLE to
-    the text rows but trips the semantic row and blocks the publish
-    unless --allow-drift."""
-    rel1 = str(tmp_path / "er1")
-    pipelines.release_corpus(spark, _docs_path(), rel1, n_shards=2)
-
-    rel2 = str(tmp_path / "er2")
-    m2 = pipelines.release_corpus(spark, _docs_path(), rel2,
-                                  baseline_path=rel1, n_shards=2,
-                                  embedding_drift=True)
-    rows = {d["feature"]: d for d in m2["drift"]}
-    assert rows["embedding_centroid"]["verdict"] == "stable"
-    assert rows["embedding_centroid"]["psi"] == 0.0
-
-    # topical pivot, curation-invisible: rot13 every CONTENT token
-    # (length >= 5 — every langid stopword is <= 4 chars) so token
-    # count, token lengths, punct geometry, stopword hits, langid and
-    # quality score are all bit-identical, but every content word's
-    # hashing-embedder bucket moves
-    pivot_src = str(tmp_path / "pivot_docs")
-    rot = lambda c: F.translate(  # noqa: E731
-        c, "abcdefghijklmnopqrstuvwxyz", "nopqrstuvwxyzabcdefghijklm")
-    (spark.read.parquet(_docs_path())
-     .withColumn("text", F.array_join(
-         F.transform(F.split(F.col("text"), " "),
-                     lambda t: F.when(F.length(t) >= 5, rot(t))
-                     .otherwise(t)), " "))
-     .write.parquet(pivot_src))
-    rel3 = str(tmp_path / "er3")
-    with pytest.raises(RuntimeError, match="embedding_centroid"):
-        pipelines.release_corpus(spark, pivot_src, rel3,
-                                 baseline_path=rel1, n_shards=2,
-                                 embedding_drift=True)
-    # the TEXT rows alone would have let it through
-    m3 = pipelines.release_corpus(spark, pivot_src, rel3,
-                                  baseline_path=rel1, n_shards=2)
-    assert all(d["verdict"] != "major_shift" for d in m3["drift"])
-
-
-def test_release_cli_embedding_drift_wiring(spark, tmp_path):
-    """--embedding-drift reaches release_corpus through the CLI and
-    the manifest records the semantic row."""
-    rel1 = str(tmp_path / "cr1")
-    pipelines.main(["release", _docs_path(), "--output", rel1,
-                    "--shards", "1"])
-    rel2 = str(tmp_path / "cr2")
-    pipelines.main(["release", _docs_path(), "--output", rel2,
-                    "--shards", "1", "--baseline", rel1,
-                    "--embedding-drift"])
-    m = json.load(open(f"{rel2}/MANIFEST.json"))
-    feats = [d["feature"] for d in m["drift"]]
-    assert "embedding_centroid" in feats
-
-
 def test_release_ml_selection_keeps_operator_membership(spark, tmp_path):
     """--ml-seed wiring (X51): the released doc set equals the
     moore_lewis_scores <= threshold membership computed directly on
@@ -716,16 +658,6 @@ def test_release_scrub_mode_refuses_short_probes(spark, tmp_path):
     assert m["decontamination"]["mode"] == "drop"
 
 
-def test_release_embedding_drift_requires_baseline(spark, tmp_path):
-    """ADVICE r12: embedding_drift without a baseline was a silent
-    no-op — the requested semantic publish gate simply not applied;
-    it must raise instead."""
-    with pytest.raises(ValueError, match="baseline"):
-        pipelines.release_corpus(spark, _docs_path(),
-                                 str(tmp_path / "edrel"), n_shards=1,
-                                 embedding_drift=True)
-
-
 def test_release_recipe_baseline_diff_counts_per_doc(spark, tmp_path):
     """ADVICE r12: a --recipe-weights release ships one row per
     (doc, epoch); used later as --baseline, the DIFF.json counts must
@@ -756,8 +688,8 @@ def test_release_recipe_baseline_diff_counts_per_doc(spark, tmp_path):
 def test_release_all_stages_compose(spark, tmp_path):
     """Round 13: the WHOLE optional stage chain in one release —
     decontamination (scrub mode) → NB classifier filter → Moore-Lewis
-    selection → span scrub → multi-epoch recipe → text+embedding drift
-    gates vs a baseline — proving the stages compose without
+    selection → span scrub → multi-epoch recipe → text drift gate vs a
+    baseline — proving the stages compose without
     interference: every stage's manifest section is recorded, counts
     reconcile monotonically through the funnel, and the (doc, epoch)
     output is draw n from the surviving membership only."""
@@ -787,7 +719,7 @@ def test_release_all_stages_compose(spark, tmp_path):
     rel = str(tmp_path / "all_rel")
     m = pipelines.release_corpus(
         spark, _docs_path(), rel, n_shards=2,
-        baseline_path=base, allow_drift=True, embedding_drift=True,
+        baseline_path=base, allow_drift=True,
         screen_probes_path=probes_path, screen_probes_mode="scrub",
         nb_model_path=store, nb_keep_labels=("keepme", "dropme"),
         ml_seed_path=seed_path, ml_threshold=0.5,
@@ -804,7 +736,7 @@ def test_release_all_stages_compose(spark, tmp_path):
     assert m["bpe"]["n_tokens"] > 0
     assert m["diff"] is not None
     feats = {d["feature"] for d in m["drift"]}
-    assert "embedding_centroid" in feats and len(feats) > 1
+    assert len(feats) > 1
     # funnel reconciles monotonically: each stage's input is the
     # previous stage's survivors
     assert (m["decontamination"]["n_docs_in"]

@@ -7,7 +7,6 @@ from __future__ import annotations
 
 import datetime
 import json
-import time
 
 import pytest
 
@@ -1740,327 +1739,11 @@ def test_compact_span_store_cli_and_empty_store(spark, tmp_path):
     assert spark.read.parquet(f"{out}/hashes").count() > 0
 
 
-# ---------------------------------------------------------------------------
-# X42 — streaming SemDeDup increment (semantic_stream)
-# ---------------------------------------------------------------------------
-
-def _sem_vectors():
-    """A 4-dim corpus with controlled cosine structure at τ = 0.9
-    (cos 25.84°): bucket c1 holds vectors at angles 0°/20°/60°/40° in
-    the (dim0, dim1) plane — v1~v2 (cos 20° ≈ .94) group in batch 0,
-    v3 (60°) is a singleton after batch 1, and v4 (40°) arriving in
-    batch 2 bridges BOTH (cos 20° to each) — the retroactive
-    cross-batch merge. v5 sits alone in bucket c2."""
-    import math
-
-    def at(deg):
-        r = math.radians(deg)
-        return [math.cos(r), math.sin(r), 0.0, 0.0]
-
-    return {
-        0: [(1, at(0)), (2, at(20))],
-        1: [(3, at(60)), (5, [0.0, 0.0, 1.0, 0.0])],
-        2: [(4, at(40))],
-    }
-
-
-def _sem_store(spark, tmp_path, threshold=0.9):
-    from real_time_iot_data_pipeline_project_spark.streaming import (
-        semantic_stream,
-    )
-
-    cents = spark.createDataFrame(
-        [(100, [1.0, 0.0, 0.0, 0.0]), (200, [0.0, 0.0, 1.0, 0.0])],
-        "centroid_id long, cvec array<float>")
-    store = str(tmp_path / "semstore")
-    semantic_stream.init_semantic_store(cents, store)
-    return cents, store
-
-
-def _sem_df(spark, rows):
-    return spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>")
-
-
-def test_streaming_semantic_dedup_retroactive_merge(spark, tmp_path):
-    """The fold's headline exactness claim: a batch-2 vector bridging
-    two groups formed in batches 0/1 merges them at read time, and the
-    closed result equals BATCH semantic_dedup on the full corpus with
-    the same pinned centroids — bit-for-bit (q132's hash gate is this
-    contract at corpus scale)."""
-    from real_time_iot_data_pipeline_project_spark.operators import (
-        similarity,
-    )
-    from real_time_iot_data_pipeline_project_spark.streaming import (
-        semantic_stream,
-    )
-
-    batches = _sem_vectors()
-    cents, store = _sem_store(spark, tmp_path)
-    for b in range(3):
-        semantic_stream.process_semantic_batch(
-            _sem_df(spark, batches[b]), b, store, threshold=0.9)
-
-    got = {r.vec_id: (r.centroid_id, r.group_id, r.keep)
-           for r in semantic_stream.semantic_groups(spark, store).collect()}
-    # v1..v4 one group rooted at 1 (v4 bridged {1,2} and {3}); v5 alone
-    assert got == {
-        1: (100, 1, True), 2: (100, 1, False), 3: (100, 1, False),
-        4: (100, 1, False), 5: (200, 5, True),
-    }
-
-    full = _sem_df(spark, [v for b in batches.values() for v in b])
-    batch_rule = {r.vec_id: (r.centroid_id, r.group_id, r.keep)
-                  for r in similarity.semantic_dedup(
-                      full, cents, threshold=0.9).collect()}
-    assert got == batch_rule
-
-
-def test_streaming_semantic_sink_engine_equals_direct(spark, tmp_path):
-    """availableNow stream-engine run == direct foreachBatch-body
-    invocation (the equivalence q132's direct-drive gate builds on)."""
-    from real_time_iot_data_pipeline_project_spark.streaming import (
-        semantic_stream,
-    )
-
-    batches = _sem_vectors()
-    src = tmp_path / "vec_in"
-    src.mkdir()
-    for b in range(3):
-        _sem_df(spark, batches[b]).coalesce(1).write.mode(
-            "overwrite").parquet(str(src / f"b{b}.parquet"))
-
-    _, stream_store = _sem_store(spark, tmp_path / "s1")
-    vecs = (spark.readStream
-            .schema("vec_id long, embedding array<float>")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(src) + "/*/"))
-    q = semantic_stream.start_semantic_dedup_sink(
-        vecs, str(tmp_path / "ckpt"), stream_store, threshold=0.9,
-        available_now=True)
-    q.awaitTermination(120)
-
-    _, direct_store = _sem_store(spark, tmp_path / "s2")
-    for b in range(3):
-        semantic_stream.process_semantic_batch(
-            _sem_df(spark, batches[b]), b, direct_store, threshold=0.9)
-
-    key = lambda d: sorted(map(tuple, d.collect()))  # noqa: E731
-    assert key(semantic_stream.semantic_groups(spark, stream_store)) \
-        == key(semantic_stream.semantic_groups(spark, direct_store))
-
-
-def test_semantic_sink_crash_replay_idempotent(spark, tmp_path):
-    """Exactly-once: a crash between the edge write and the vector
-    write, followed by a checkpoint replay of the SAME batch_id,
-    converges; so does a full replay after a completed batch (the
-    store now holds this batch's own vectors — the own-partition
-    exclusion keeps the replayed edges identical)."""
-    import shutil
-
-    from real_time_iot_data_pipeline_project_spark.streaming import (
-        semantic_stream,
-    )
-
-    batches = _sem_vectors()
-    _, store = _sem_store(spark, tmp_path)
-    for b in range(3):
-        semantic_stream.process_semantic_batch(
-            _sem_df(spark, batches[b]), b, store, threshold=0.9)
-    baseline = sorted(map(tuple, semantic_stream.semantic_groups(
-        spark, store).collect()))
-    edges_n = spark.read.parquet(f"{store}/edges").count()
-
-    # crash between the edge write and the vector write of batch 2
-    shutil.rmtree(f"{store}/vectors/batch_id=2")
-    semantic_stream.process_semantic_batch(
-        _sem_df(spark, batches[2]), 2, store, threshold=0.9)
-    assert sorted(map(tuple, semantic_stream.semantic_groups(
-        spark, store).collect())) == baseline
-    assert spark.read.parquet(f"{store}/edges").count() == edges_n
-
-    # full replay after a completed batch: identical close
-    semantic_stream.process_semantic_batch(
-        _sem_df(spark, batches[2]), 2, store, threshold=0.9)
-    assert sorted(map(tuple, semantic_stream.semantic_groups(
-        spark, store).collect())) == baseline
-    assert spark.read.parquet(f"{store}/edges").count() == edges_n
-
-
-def test_semantic_sink_empty_batch_and_no_pairs(spark, tmp_path):
-    """An empty micro-batch is a no-op; a stream whose batches never
-    form a ≥τ pair closes to all-singleton groups — exercising the
-    pinned-schema edge read over data-file-less partitions."""
-    from real_time_iot_data_pipeline_project_spark.streaming import (
-        semantic_stream,
-    )
-
-    _, store = _sem_store(spark, tmp_path)
-    semantic_stream.process_semantic_batch(
-        _sem_df(spark, []), 0, store, threshold=0.9)
-    assert not (tmp_path / "semstore" / "vectors").exists()
-
-    semantic_stream.process_semantic_batch(
-        _sem_df(spark, [(1, [1.0, 0.0, 0.0, 0.0])]), 0, store,
-        threshold=0.9)
-    semantic_stream.process_semantic_batch(
-        _sem_df(spark, [(2, [0.0, 0.0, 1.0, 0.0])]), 1, store,
-        threshold=0.9)
-    got = {r.vec_id: (r.group_id, r.keep) for r in
-           semantic_stream.semantic_groups(spark, store).collect()}
-    assert got == {1: (1, True), 2: (2, True)}
-
-
-def test_semantic_sink_first_batch_store_crash_recovers(spark, tmp_path):
-    """A crash during the FIRST batch's vector write can leave only a
-    _temporary dir under {store}/vectors — no data files, no batch_id
-    partition dirs. The replay must read that as an EMPTY store (pinned
-    schema + conditional exclusion), not wedge on schema inference."""
-    from real_time_iot_data_pipeline_project_spark.streaming import (
-        semantic_stream,
-    )
-
-    _, store = _sem_store(spark, tmp_path)
-    (tmp_path / "semstore" / "vectors" / "_temporary").mkdir(parents=True)
-
-    semantic_stream.process_semantic_batch(     # must not raise
-        _sem_df(spark, _sem_vectors()[0]), 0, store, threshold=0.9)
-    got = {r.vec_id: r.keep for r in
-           semantic_stream.semantic_groups(spark, store).collect()}
-    assert got == {1: True, 2: False}
-
-
-def test_compact_semantic_store_preserves_groups_and_replay(spark, tmp_path):
-    """Folding all but the newest batch into the batch_id=-1 sentinel
-    changes neither the closed groups nor the fold's forward/replay
-    behavior: the close over the compacted store is identical, a
-    replay of the preserved newest batch converges, and a NEW batch
-    folded onto the compacted store closes exactly like the same batch
-    on the uncompacted one."""
-    import shutil
-
-    from real_time_iot_data_pipeline_project_spark.streaming import (
-        semantic_stream,
-    )
-
-    batches = _sem_vectors()
-    _, store = _sem_store(spark, tmp_path)
-    for b in (0, 1):
-        semantic_stream.process_semantic_batch(
-            _sem_df(spark, batches[b]), b, store, threshold=0.9)
-
-    out = str(tmp_path / "compacted")
-    rep = semantic_stream.compact_semantic_store(spark, store, out)
-    assert rep["kept_batch"] == 1 and rep["vectors"] == 4
-
-    key = lambda d: sorted(map(tuple, d.collect()))  # noqa: E731
-    assert key(semantic_stream.semantic_groups(spark, out)) \
-        == key(semantic_stream.semantic_groups(spark, store))
-
-    # replay of the preserved newest batch against the compacted store
-    semantic_stream.process_semantic_batch(
-        _sem_df(spark, batches[1]), 1, out, threshold=0.9)
-    assert key(semantic_stream.semantic_groups(spark, out)) \
-        == key(semantic_stream.semantic_groups(spark, store))
-
-    # a NEW batch on the compacted store == the same batch uncompacted
-    # (the retroactive-merge batch, so the sentinel partitions are
-    # actually exercised by the close)
-    semantic_stream.process_semantic_batch(
-        _sem_df(spark, batches[2]), 2, out, threshold=0.9)
-    semantic_stream.process_semantic_batch(
-        _sem_df(spark, batches[2]), 2, store, threshold=0.9)
-    assert key(semantic_stream.semantic_groups(spark, out)) \
-        == key(semantic_stream.semantic_groups(spark, store))
-    got = {r.vec_id: r.group_id for r in
-           semantic_stream.semantic_groups(spark, out).collect()}
-    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 5}
-
-    # in-place compaction is refused
-    with pytest.raises(ValueError, match="out-of-place"):
-        semantic_stream.compact_semantic_store(spark, store, store)
-
-    # mid-batch crash shape: edges one batch ahead of vectors — the
-    # preserved id must come from the EDGE store so the replay's
-    # overwrite still targets a live partition
-    shutil.rmtree(f"{store}/vectors/batch_id=2")
-    out2 = str(tmp_path / "compacted2")
-    rep2 = semantic_stream.compact_semantic_store(spark, store, out2)
-    assert rep2["kept_batch"] == 2
-    semantic_stream.process_semantic_batch(   # replay of batch 2
-        _sem_df(spark, batches[2]), 2, out2, threshold=0.9)
-    assert {r.vec_id: r.group_id for r in
-            semantic_stream.semantic_groups(spark, out2).collect()} == got
-
-
-def test_compact_semantic_store_cli(spark, tmp_path):
-    from real_time_iot_data_pipeline_project_spark import pipelines
-    from real_time_iot_data_pipeline_project_spark.streaming import (
-        semantic_stream,
-    )
-
-    _, store = _sem_store(spark, tmp_path)
-    for b in (0, 1):
-        semantic_stream.process_semantic_batch(
-            _sem_df(spark, _sem_vectors()[b]), b, store, threshold=0.9)
-    out = str(tmp_path / "out_cli")
-    pipelines.main(["compact-semantic-store", store, "--output", out])
-    assert spark.read.parquet(f"{out}/vectors").count() == 4
-
-
-def test_streaming_semantic_fold_two_level_equals_batch(spark, tmp_path):
-    """two_level=True folds with the coarse-quantized assignment (the
-    C ∝ n scale path) and still closes to EXACTLY the batch rule at
-    the same setting — on the real sf0.001 embeddings, where the
-    two assignments genuinely differ on borderline vectors."""
-    from real_time_iot_data_pipeline_project_spark.operators import (
-        similarity,
-    )
-    from real_time_iot_data_pipeline_project_spark.streaming import (
-        semantic_stream,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    cents = similarity.sampled_centroids(emb, n_centroids=16)
-    store = str(tmp_path / "sem2l")
-    semantic_stream.init_semantic_store(cents, store, two_level=True)
-    for b in range(3):
-        semantic_stream.process_semantic_batch(
-            emb.filter(F.pmod(F.col("vec_id"), F.lit(3)) == b), b, store,
-            threshold=0.3)
-    key = lambda d: sorted(map(tuple, d.collect()))  # noqa: E731
-    got = key(semantic_stream.semantic_groups(spark, store))
-    batch = key(similarity.semantic_dedup(emb, cents, threshold=0.3,
-                                          two_level=True))
-    assert got == batch
-    # and it differs from the FLAT batch rule somewhere (otherwise this
-    # test proves nothing about the two-level path specifically)
-    flat = key(similarity.semantic_dedup(emb, cents, threshold=0.3))
-    assert got != flat
-
-
-def test_semantic_store_marker_corrupt_fails_loudly(spark, tmp_path):
-    """A crash between the marker's create and close leaves an
-    empty/partial meta.json; folding against such a store must fail
-    with the remedy, not json noise or a silent flat-rule default."""
-    from real_time_iot_data_pipeline_project_spark.streaming import (
-        semantic_stream,
-    )
-
-    _, store = _sem_store(spark, tmp_path)
-    assert semantic_stream._store_two_level(spark, store) is False
-    (tmp_path / "semstore" / "meta.json").write_text("")
-    with pytest.raises(ValueError, match="corrupt"):
-        semantic_stream.process_semantic_batch(
-            _sem_df(spark, _sem_vectors()[0]), 0, store, threshold=0.9)
-
-
 def test_corpus_sink_bpe_counts_fold_equals_batch(spark, tmp_path):
     """bpe_counts=True (VERDICT r10 item 6): the streamed corpus carries
     real merge-table BPE token counts per surviving doc, and the fold
     equals the batch path — tokenize.bpe_token_counts over the union of
-    all drops gives the SAME n_bpe_tokens for every survivor, mirroring
-    how q132's stream fold equals q125's batch rule."""
+    all drops gives the SAME n_bpe_tokens for every survivor."""
     import json as _json
 
     from real_time_iot_data_pipeline_project_spark.operators import tokenize

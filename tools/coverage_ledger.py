@@ -93,16 +93,12 @@ PLANNED_ROTATIONS: dict[int, tuple[int, list[str]]] = {
     # hash-checkable backlog EMPTY again.  New queries must still be
     # registered into POST_WINDOW and scheduled here, or they
     # silently displace the pinned window.)
-    # rotation #12 — the round-15 additions
-    16: (12, [
-        "q172_cluster_sample_report",
-        "q173_ngram_lm_perplexity",
-        "q174_sq_topk",
-        "q175_compression_recall",
-        "q176_ivfsq_topk",
-        "q177_topgram_report",
-        "q179_stream_lm_fold",
-    ]),
+    # (rotation #12 — the round-15 additions: q172/q174-q176 were
+    # deleted with the vector tier and q173/q177/q179 promoted INTO the
+    # window to refill it; entry removed per the staleness contract in
+    # tests/test_coverage_ledger.py.  New queries must still be
+    # registered into POST_WINDOW and scheduled here, or they silently
+    # displace the pinned window.)
 }
 
 

@@ -7,7 +7,7 @@ Replication is NOT naive duplication — that would plant 10 exact copies
 of every document and turn every near-dup query quadratic by
 construction, measuring an artifact instead of the algorithm:
 
-- fact keys (event_id, doc_id, vec_id, *_orderkey) are offset per
+- fact keys (event_id, doc_id, *_orderkey) are offset per
   replica so keys stay unique;
 - document text gets a per-replica Caesar rotation of the alphabet
   (``translate`` — a character bijection with period 26, so no two
@@ -16,8 +16,6 @@ construction, measuring an artifact instead of the algorithm:
   shingles disjoint, so near-dup structure scales linearly like a real
   corpus (digit/punctuation/whitespace k-grams still collide across
   replicas — the boilerplate-like tail a real corpus also has);
-- embeddings are cyclically rotated per replica (norm-preserving,
-  different neighbor structure);
 - dims (region/nation/customer/supplier/part) are copied unscaled —
   at 100 TB facts grow and dims don't, which also grows per-key join
   fan-out exactly the way production growth does.
@@ -114,45 +112,6 @@ def scale_table(spark, name: str, factor: int) -> DataFrame:
             F.translate("text", ALPHA + ALPHA.upper(),
                         _sub_alpha(i) + _sub_alpha(i).upper()).alias("text"),
             "lang", "source", "n_chars"))
-    if name == "embeddings":
-        off = df.agg(F.max("vec_id")).head()[0] + 1
-        dim = len(df.select("embedding").head()[0])
-
-        def _vec(i: int) -> F.Column:
-            # dimension rotation wraps at dim (= 64): at factor 100,
-            # replicas i and i+64 were IDENTICAL vectors — 72k of 200k
-            # x100 vectors had an exact cosine-1.0 twin, inflating
-            # every ≥τ pair probe (the text harness's wrap artifact,
-            # embedding edition). Replicas past the first dim compose
-            # the rotation with a per-group ±1 sign mask (md5 parity
-            # of (group, dim), group 0 = all +1 so factors ≤ dim
-            # reproduce the historical harness byte-for-byte). A
-            # diagonal ±1 matrix is orthogonal: within-replica cosine
-            # structure is preserved EXACTLY (sign flips cancel in
-            # same-replica dot products and ±1·x is exact in floating
-            # point), while same-rotation cross-group vectors get
-            # independent sign patterns → expected cosine ~0, no
-            # manufactured near-dup pairs.
-            r = i % dim
-            rotated = F.expr(
-                f"concat(slice(embedding, {r + 1}, {dim - r}),"
-                f" slice(embedding, 1, {r}))")
-            g = i // dim
-            if not g:
-                return rotated
-            import hashlib
-
-            signs = F.array(*[
-                F.lit(1.0 if hashlib.md5(
-                    f"{g}|{d}".encode()).digest()[0] % 2 == 0 else -1.0)
-                for d in range(dim)])
-            return F.zip_with(rotated, signs,
-                              lambda x, s: (x * s).cast("float"))
-
-        return _replicas(df, factor, lambda d, i: d.select(
-            (F.col("vec_id") + F.lit(i * off)).alias("vec_id"),
-            _vec(i).alias("embedding"),
-            "label"))
     if name in ("orders", "lineitem"):
         key = "o_orderkey" if name == "orders" else "l_orderkey"
         off = (spark.read.parquet(f"{SRC}/orders.parquet")
@@ -167,7 +126,7 @@ def main() -> None:
     factor = int(sys.argv[2]) if len(sys.argv) > 2 else 10
     spark = get_spark(app_name="scale-stress")
     spark.sparkContext.setLogLevel("ERROR")
-    tables = DIMS + ["orders", "lineitem", "events", "documents", "embeddings"]
+    tables = DIMS + ["orders", "lineitem", "events", "documents"]
     for t in tables:
         scaled = scale_table(spark, t, factor)
         scaled.write.mode("overwrite").parquet(f"{out_dir}/{t}.parquet")

@@ -46,7 +46,7 @@ X100 = "/tmp/sfx100_probe"
 
 
 def build(spark, out_dir: str, factor: int) -> None:
-    for t in ("documents", "events", "embeddings"):
+    for t in ("documents", "events"):
         path = f"{out_dir}/{t}.parquet"
         if os.path.exists(path):
             continue
@@ -288,83 +288,6 @@ def probe_zorder_layout(spark, sf_dir: str) -> dict:
             "x_band_frac": round(xh / max(xn, 1), 3)}
 
 
-def _probe_semdedup(spark, sf_dir: str, two_level: bool) -> dict:
-    """X38 probe at the operator's own production sizing: n_centroids
-    grows with the corpus (16 → 160 → 1600) so mean bucket size stays
-    constant — the registry query pins 16 for oracle parity, but the
-    100 TB claim is about the SCALED shape. ONE body for both the flat
-    and the two-level A/B legs (only the flag differs), so the sizing/
-    threshold/agg can never desynchronize between them. One aggregate
-    action counts rows and survivors in a single pass."""
-    from real_time_iot_data_pipeline_project_spark.operators import similarity
-
-    n_cents = {SF01: 16, X10: 160, X100: 1600}[sf_dir]
-    t0 = time.monotonic()
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    cents = similarity.sampled_centroids(emb, n_cents)
-    out = similarity.semantic_dedup(emb, cents, threshold=0.3,
-                                    two_level=two_level)
-    row = out.agg(F.count(F.lit(1)).alias("n"),
-                  F.sum(F.col("keep").cast("long")).alias("kept")).head()
-    return {"sec": round(time.monotonic() - t0, 2),
-            "rows": row.n, "kept": row.kept, "cents": n_cents}
-
-
-def probe_semdedup(spark, sf_dir: str) -> dict:
-    return _probe_semdedup(spark, sf_dir, two_level=False)
-
-
-def probe_semantic_stream(spark, sf_dir: str) -> dict:
-    """X42 probe at X38's production sizing (n_centroids ∝ corpus, the
-    probe_semdedup rule): the 3-batch streaming fold + read-time close,
-    end to end. Expectation: per-batch work = batch assignment + the
-    batch-vs-store in-bucket pairs (Σ per-bucket batch·store — bounded
-    by the same constant mean-bucket-size argument as the batch rule),
-    and the close is one edge-sized CC. Flat assignment, like the
-    gate — which makes the fold inherit the flat rule's O(batch·C)
-    superlinearity at C ∝ n (measured 16.3×/decade; the two-level leg
-    below is the scale path)."""
-    return _probe_semantic_stream(spark, sf_dir, two_level=False)
-
-
-def probe_semantic_stream_2l(spark, sf_dir: str) -> dict:
-    """The fold at the SCALE-path setting: two-level assignment (the
-    q126-pinned rule, pinned in the store at init), same A/B as the
-    batch flat-vs-2l probe — the flat fold measured 16.3×/decade at
-    x100 sizing because the assignment is O(batch·C) with C ∝ n."""
-    return _probe_semantic_stream(spark, sf_dir, two_level=True)
-
-
-def _probe_semantic_stream(spark, sf_dir: str, two_level: bool) -> dict:
-    import shutil
-    import tempfile
-
-    from real_time_iot_data_pipeline_project_spark.operators import similarity
-    from real_time_iot_data_pipeline_project_spark.streaming import (
-        semantic_stream,
-    )
-
-    n_cents = {SF01: 16, X10: 160, X100: 1600}[sf_dir]
-    store = tempfile.mkdtemp(prefix="semstream_probe_") + "/store"
-    try:
-        t0 = time.monotonic()
-        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        cents = similarity.sampled_centroids(emb, n_cents)
-        semantic_stream.init_semantic_store(cents, store,
-                                             two_level=two_level)
-        for b in range(3):
-            semantic_stream.process_semantic_batch(
-                emb.filter(F.pmod(F.col("vec_id"), F.lit(3)) == b), b,
-                store, threshold=0.3)
-        row = (semantic_stream.semantic_groups(spark, store)
-               .agg(F.count(F.lit(1)).alias("n"),
-                    F.sum(F.col("keep").cast("long")).alias("kept")).head())
-        return {"sec": round(time.monotonic() - t0, 2),
-                "rows": row["n"], "kept": row["kept"], "cents": n_cents}
-    finally:
-        shutil.rmtree(os.path.dirname(store), ignore_errors=True)
-
-
 def probe_edit_verify_sized(spark, sf_dir: str) -> dict:
     """X40 probe at the operator's own production sizing: with the
     gate's pinned (12 hashes, 4 bands) banding, the per-pair random
@@ -393,10 +316,6 @@ def probe_edit_verify_sized(spark, sf_dir: str) -> dict:
     n = out.count()
     return {"sec": round(time.monotonic() - t0, 2), "rows": n,
             "lsh": f"{num_hashes}x{bands}"}
-
-
-def probe_semdedup_2l(spark, sf_dir: str) -> dict:
-    return _probe_semdedup(spark, sf_dir, two_level=True)
 
 
 def _hist_replicated(spark, factor: int):
@@ -488,19 +407,14 @@ def main() -> None:
         ("q79_winnow", probe_q79),
         ("q76_near_dedup", probe_query("q76_near_dedup_corpus")),
         ("q48_training", probe_query("q48_training_data_pipeline")),
-        # round-9 tier: hashing embedder, embed→IVF-ANN handoff,
-        # streaming heavy-hitter fold
+        # round-9 tier: hashing embedder, streaming heavy-hitter fold
         ("q118_embed", probe_query("q118_hashing_embed")),
-        ("q119_ann", probe_query("q119_embed_ann")),
         ("q120_hh_fold", probe_query("q120_stream_heavy_fold")),
         ("q122_drift", probe_query("q122_drift_report")),
         # round-9 late tier: leakage-safe splits (q53's CC + label
-        # join-back), temperature mixture (scan-bound), SemDeDup at
-        # production centroid sizing
+        # join-back), temperature mixture (scan-bound)
         ("q123_splits", probe_query("q123_leakage_safe_splits")),
         ("q124_tmix", probe_query("q124_temperature_mix")),
-        ("q125_semdedup", probe_semdedup),
-        ("q125_semdedup_2l", probe_semdedup_2l),
         # round-9 third wave: stride-1 duplicate-span removal — cost
         # center is the token-level grid (one row per token and per
         # window start), so the expectation is ~linear in corpus tokens
@@ -520,10 +434,6 @@ def main() -> None:
         # ... and at production sizing: rows-per-band grows with the
         # corpus (constant per-doc fan-out, knee held at ~0.63-0.65)
         ("q128_edit_verify_sized", probe_edit_verify_sized),
-        # round-10: the streaming SemDeDup fold at production centroid
-        # sizing (3 batches + read-time close), flat vs two-level A/B
-        ("q132_sem_stream", probe_semantic_stream),
-        ("q132_sem_stream_2l", probe_semantic_stream_2l),
         # round-11: waterfill is one corpus groupBy + a 20-row window
         # frame — expectation ~linear scan slope, dimension stage flat
         ("q137_waterfill", probe_query("q137_mixture_waterfill")),
@@ -560,11 +470,6 @@ def main() -> None:
         # corpus tokens (the grid), with the distinct/min stages
         # partial-aggregatable
         ("q145_source_novelty", probe_query("q145_source_novelty")),
-        # round-12: embedding drift — two n·C broadcast argmax scans
-        # into centroid-sized aggregates; expectation ~linear in
-        # vectors at fixed C (the q125 flat-assignment shape, but
-        # C pinned at 16 so no quadratic regime)
-        ("q146_embedding_drift", probe_query("q146_embedding_drift")),
         # round-12: Moore-Lewis selection — two vocab-sized broadcast
         # frequency tables onto the token stream + one doc-keyed
         # combinable reduction; expectation ~linear in corpus tokens
@@ -585,32 +490,13 @@ def main() -> None:
         # the map-side hashed {uni,bi}gram stream; expectation ~linear
         # in corpus tokens (the q147 shape, one more gram order)
         ("q153_dsir", probe_query("q153_dsir_scores")),
-        # round-13: PQ encode+ADC — encode is a map-side explode x the
-        # broadcast m*k codebook (~linear in vectors); ADC reads codes
-        ("q154_pq_adc", probe_query("q154_pq_adc_topk")),
-        # round-13: IVF-PQ — adds the int-keyed codes x assignment join
-        # and probe restriction; expectation ~q154's slope
-        ("q155_ivfpq", probe_query("q155_ivfpq_topk")),
         # round-13: streaming DSIR fold (3 direct batches + the
         # score-at-read sum) — per-batch cost tracks the batch
         ("q156_dsir_stream", probe_query("q156_stream_dsir_pool")),
-        # round-13: PQ recall curve — one full-precision exact scan +
-        # 3 code-only ADC runs; expectation ~linear in vectors
-        ("q157_pq_recall", probe_query("q157_pq_recall")),
-        # round-13: residual IVF-PQ — X58's shape plus one broadcast
-        # centroid join at encode time; expectation ~q155's slope
-        ("q158_ivfpq_residual", probe_query("q158_ivfpq_residual")),
-        # round-14: refined PQ recall — one Lloyd iteration (broadcast
-        # argmin + d-wide posexplode shuffle of the corpus) + two
-        # code-only ADC runs; expectation ~linear in vectors
-        ("q160_pq_refined", probe_query("q160_pq_refined_recall")),
         # round-14: DSIR resample — q153's shape + a <=64x map-side
         # ticket explode over the SCORES (doc-sized, narrow) and one
         # combinable per-key max; expectation ~q153's slope
         ("q161_dsir_resample", probe_query("q161_dsir_resample")),
-        # round-14: cluster-balanced sample — one broadcast argmax
-        # scan + centroid-sized rates; expectation ~linear scan slope
-        ("q167_cluster_sample", probe_query("q167_cluster_balanced_sample")),
         # round-14: fertility report — one scan into a lang-keyed
         # combinable aggregate; expectation ~linear scan slope
         ("q168_fertility", probe_query("q168_tokenizer_fertility")),
@@ -624,27 +510,12 @@ def main() -> None:
         # eval set does not grow with the corpus) while docs scale —
         # expectation ~linear in docs at constant |probes|
         ("semantic_decontam_fixed", probe_semantic_fixed_probes),
-        # round-15: the cluster-mix audit — q167's broadcast argmax
-        # scan + one centroid-keyed combinable count; ~linear scan
-        # slope, centroid-sized output
-        ("q172_cluster_report", probe_query("q172_cluster_sample_report")),
         # round-15: the Stupid-Backoff bigram LM filter — LM tables
         # are reference-bounded (src0 slice, ~1/3 of docs on the
         # replica) and broadcast; the score side is one JVM-side pair
         # explode + three broadcast joins + a doc-keyed combinable
         # agg; expectation ~linear scan slope, corpus never shuffled
         ("q173_ngram_lm", probe_query("q173_ngram_lm_perplexity")),
-        # round-15: SQ8 asymmetric search — one d-sized grid agg +
-        # one scan-stage encode/deq/distance pass against the
-        # broadcast query sample; expectation ~linear scan slope
-        ("q174_sq_topk", probe_query("q174_sq_topk")),
-        # round-15: the memory-tier recall table — one exact pass +
-        # one ADC run + one SQ scan; expectation ~linear
-        ("q175_compression_recall", probe_query("q175_compression_recall")),
-        # round-15: IVF-SQ — one int-keyed assignment join onto the
-        # scan-side codes + broadcast probes/grid/queries;
-        # expectation ~linear with a pruned scoring tail
-        ("q176_ivfsq_topk", probe_query("q176_ivfsq_topk")),
         # round-15: top-n-gram report — one JVM-side gram scan + a
         # gram-keyed combinable count + a (doc, n)-keyed combinable
         # argmin; expectation ~linear scan slope
